@@ -61,558 +61,10 @@ def register(name: str, oracle: str | None, survey_ref: str = ""):
     return deco
 
 
-# Registry order = the order the driver's correctness gate executes queries
-# in; the gate is a hard 50-entry prefix cut (observed in rounds 1-4, 6-7),
-# so the first 50 names below are the round's driver-verified set.
-#
-# Round-12 rotation (per VERDICT r11 item 1 — the precomputed plan,
-# executed verbatim; CORRECTNESS_r11 landed 50/50 green so no red row
-# displaced slot 1, and tools/rotation_audit.py confirmed at round-12
-# start that the plan is consistent with the artifact ladder).  Slot
-# assignment:
-#   * slots 1-4: the round-11 adds (dd20, a28, a29, st9) — the
-#     registry's only never-driver-checked rows.
-#   * slots 5-50: 46 of the 50 r8-era rows (alphabetical; tx3 / tx4 /
-#     tx6 / u13b spill to round 13 — they become its staleness head).
-# Max row age after this round: the 4 spilled r8 rows (4 rounds) plus
-# the 50-row r9 era (3 rounds) — round 13 takes the spill + 42 r9 rows
-# (see ROUND-13 plan below the list).
-# Round-11 rotation rationale: see this block at commit 4d9b154.
-# Round-10 rotation rationale: see this block at commit 7beceff.
-# Round-9 rotation rationale: see this block at commit 2382228.
-# Round-8 rotation rationale and the sp6/a25 HUGEINT root-cause record:
-# see this comment block at tag round-8 / commit 0bcab14; the ROOT-CAUSE
-# CORRECTION paragraph below preserves the adjudicated summary.
-# Staleness mitigation while the ladder drains: the FULL registry
-# (every stale row included) is swept through the local oracle mirror
-# at sf0.001/0.01/0.1 each round under the driver-strict, TYPE-AWARE
-# compare; any non-green sweep result must be recorded HERE with the
-# failing query named.  Round-8 sweep ledger: see SWEEP note below.
-PREFIX_ORDER = [
-    # ROUND 19 — fifth freeze-era rotation (registry frozen at 216;
-    # protocol in SCALE.md).  The precomputed ROUND-19 plan (below)
-    # applied with the lapse-rule amendment the r18 VERDICT (item 6)
-    # and this round's optimization edits require: CORRECTNESS_r18
-    # landed 50/50 green so no red row displaces slot 1, but (a) the
-    # r18-rebaked mm kernel oracles and the r18 rewrites the r18
-    # sample missed (per VERDICT item 6) and (b) every query whose
-    # code changed in THIS round's optimizations (dd13 local-finish
-    # endgame; sim10 map-only PQ encode; the ivf_assign duplicate-
-    # argmin guard feeding sim4/sim5/sim8; sp8 model checkpoint) must
-    # re-enter the prefix NOW.  dd13 / dp8 / sim10 were already plan
-    # members by staleness; the other 8 re-entries take slots 43-50,
-    # displacing the plan's 8 newest members (the dp9 / g1 / i10 /
-    # i11 / i12 / j17 / j18 / j9-basin keys), which join the post-r19
-    # staleness head.  tools/rotation_audit.py re-run after the
-    # amendment: plan consistent with artifacts.
-    # slots 1-23: the 23 r14-era rows that spilled past round 18
-    # (alphabetical)
-    "pk2_document_chunking",
-    "pk3_length_bucketed_batching",
-    "s6b_json_props_extract",
-    "sim10_pq_adc",
-    "sim9_quantized_rerank",
-    "sp11_class_balanced_resample",
-    "sp12_grouped_split_balance",
-    "sp2b_stratified_topk",
-    "sp5_temperature_resampling",
-    "sp7_epoch_shuffle",
-    "st1_stream_windowed_counts",
-    "st2_stateful_user_counts",
-    "st3_watermarked_append",
-    "st4_stream_stream_join",
-    "tx5_vocabulary",
-    "tx7_repetition_signals",
-    "tx8_pii_scrub",
-    "tx9_bpe_pair_merge",
-    "u13_psd_fit",
-    "w14_spearman_trend",
-    "w1_adjacency_removal",
-    "w3_gap_fill",
-    "w6_moving_average",
-    # slots 24-42: the first 19 of the 49 r15-era rows (alphabetical)
-    "a20_grouped_percentiles",
-    "a21_conversion_funnel",
-    "a24_salted_skew_rollup",
-    "a26_sequence_funnel",
-    "a30_bottomk_distinct_sample",
-    "a9_class_counts",
-    "c4_taxa_resolver",
-    "c5_trophic_lookup",
-    "dd13_star_components",
-    "dd14_lsh_recall",
-    "dd15_lsh_parameter_sweep",
-    "dd18_url_host_dedup",
-    "dd19_repeated_ngram_spans",
-    "dd9_normalized_dedup",
-    "dp12_quantile_drift_gate",
-    "dp13_leading_digit_audit",
-    "dp1_column_profile",
-    "dp2_winsorize",
-    "dp8_exact_quantiles",
-    # slots 43-50: LAPSE-RULE RE-ENTRY (round 19): the three rebaked
-    # kernel-panel oracles (never driver-checked since the r18 rebake
-    # per VERDICT r18 item 6) plus the r18/r19 rewrite set — IVF
-    # assignment (map-only + duplicate-argmin guard), the sp8 model
-    # checkpoint, and the r18 BM25 single-pass rewrite.
-    "mm2_real_kernel_features",
-    "mm2b_kernel_topologies",
-    "mm6_augmentation_panel",
-    "sim4_ivf_search",
-    "sim5_ivf_nprobe2",
-    "sim8_kmeans_refine",
-    "sp8_importance_resampling",
-    "tx13_bm25_topk",
-]
-# The round-17 rotation plan was EXECUTED as the live PREFIX_ORDER
-# (with the documented mm2/mm2b/mm6 lapse-rule re-entry in slots 48-50)
-# and CORRECTNESS_r17 landed 50/50 green; see commit 23ef7b8 for the
-# full r17 prefix and its rationale block.
-# The round-15 rotation plan was EXECUTED verbatim as the live
-# PREFIX_ORDER above (CORRECTNESS_r14 landed 50/50 green, so no red row
-# displaced slot 1; tools/rotation_audit.py confirmed plan/artifact
-# consistency at round-15 start).  After round 15 the never-checked set
-# is EMPTY for the first time (every one of the 216 frozen registry
-# rows has a driver row); the staleness head is the 16 spilled r11
-# rows + the 50-row r12 era, so round 16 takes the 16-row spill + 34
-# r12 rows and 16 r12 rows spill to round 17 (the steady-state
-# 4.32-round cycle of the freeze-era protocol, SCALE.md).
-#
-# The round-16 rotation plan was EXECUTED verbatim as the then-live
-# PREFIX_ORDER (CORRECTNESS_r15 landed 50/50 green, so no red row
-# displaced slot 1; tools/rotation_audit.py confirmed plan/artifact
-# consistency at round-16 start).  The r11 era is now fully drained.
-#
-# The round-17 rotation plan was EXECUTED as the live PREFIX_ORDER
-# above with ONE lapse-rule amendment (CORRECTNESS_r16 landed 50/50
-# green so no red row displaced slot 1): the round-17 kernel-family
-# reference-certification regenerated the mm2/mm2b/mm6 baked oracles,
-# so those three rows re-entered slots 48-50 and the last 3 planned
-# r13-era rows (p2_hab_alert, p3_dashboard_metadata,
-# pk1_sequence_packing) were displaced to the round-18 staleness head.
-# This drains the r12 era entirely; the staleness head is now the 22
-# remaining r13-era rows + the 48-row r14 era, so round 18 takes the
-# 22-row head + 28 r14 rows and 20 r14 rows spill to round 19
-# (steady-state 4.32-round cycle, SCALE.md).
-#
-# The round-18 rotation plan was EXECUTED as the live PREFIX_ORDER
-# (with the documented mm2/mm2b/mm6 lapse-rule re-entry in slots
-# 48-50) and CORRECTNESS_r18 landed 50/50 green; see commit ef1eb48
-# for the full r18 prefix and its rationale block.
-#
-# ROUND-19 ROTATION PLAN (the pure-staleness plan; the live prefix
-# above implements it with the documented 8-row lapse amendment —
-# re-entries named in the PREFIX_ORDER comment by key only):
-#   slots 1-23: the 23 r14-era rows that spilled past round 18
-#   (alphabetical):
-#     pk2_document_chunking
-#     pk3_length_bucketed_batching
-#     s6b_json_props_extract
-#     sim10_pq_adc
-#     sim9_quantized_rerank
-#     sp11_class_balanced_resample
-#     sp12_grouped_split_balance
-#     sp2b_stratified_topk
-#     sp5_temperature_resampling
-#     sp7_epoch_shuffle
-#     st1_stream_windowed_counts
-#     st2_stateful_user_counts
-#     st3_watermarked_append
-#     st4_stream_stream_join
-#     tx5_vocabulary
-#     tx7_repetition_signals
-#     tx8_pii_scrub
-#     tx9_bpe_pair_merge
-#     u13_psd_fit
-#     w14_spearman_trend
-#     w1_adjacency_removal
-#     w3_gap_fill
-#     w6_moving_average
-#   slots 24-50: the first 27 of the 49 r15-era rows (alphabetical):
-#     a20_grouped_percentiles
-#     a21_conversion_funnel
-#     a24_salted_skew_rollup
-#     a26_sequence_funnel
-#     a30_bottomk_distinct_sample
-#     a9_class_counts
-#     c4_taxa_resolver
-#     c5_trophic_lookup
-#     dd13_star_components
-#     dd14_lsh_recall
-#     dd15_lsh_parameter_sweep
-#     dd18_url_host_dedup
-#     dd19_repeated_ngram_spans
-#     dd9_normalized_dedup
-#     dp12_quantile_drift_gate
-#     dp13_leading_digit_audit
-#     dp1_column_profile
-#     dp2_winsorize
-#     dp8_exact_quantiles
-#     dp9_mutual_information
-#     g1_pagerank
-#     i10_merge_upsert
-#     i11_late_data_audit
-#     i12_incremental_rollup
-#     j17_point_in_time_join
-#     j18_bloom_join_prefilter
-#     j9_basin_tagging
-# = exactly 50 (23 + 27).
-# END PLAN
-#
-# POST-r15 REGISTRY ENDGAME (decided round 12, per VERDICT r11 item 6):
-# the registry FREEZES at 216 entries once the staged queue drains —
-# staged_r13 (registered round 12 -> 208), staged_r14 (registered
-# round 13 -> 212, DONE), staged_r15 (round 14 -> 216), then NO further
-# registrations without explicit driver buy-in on a larger per-round
-# check budget (this is the SCALE.md stop-staging policy made binding).
-# Staleness math at the frozen size: 216 entries / 50-row gate = a
-# 4.32-round cycle; with 4 adds per round through r14 the per-era
-# spill is 4 rows (r8 era, round 13) then 8 rows (r9 era, round 14)
-# then 12 (r10 era, round 15); after the freeze the spill stops
-# growing and every row is re-checked within ceil(216/50) = 5 rounds,
-# stabilizing max row age at ~4.3 rounds.  Mitigation unchanged: the
-# FULL registry (every stale row) sweeps through the local bit-level
-# driver-sim mirror at 3 SFs every round, so a stale driver row is
-# never an unverified row.  If the driver ever raises the gate above
-# 50, re-derive the plans from the ladder (tools/rotation_audit.py
-# prints it) rather than patching these comments incrementally.
-
-# LAPSE-RULE ADJUDICATION (round 11, the offset migration): the
-# corpus-derived-M change (VERDICT r10 item 6) edited the ORACLE TEXT
-# (a 1-row m CTE + id arithmetic) and the Spark construction of every
-# variant-corpus consumer: dd1-dd7, dd9-dd15, dd17, tp1/tp2/tp3/tp5,
-# i8.  Under the strict lapse rule each would re-enter a prefix; the
-# round-11/12 plans were NOT re-balanced because the change is proven
-# OUTPUT-IDENTICAL at every shipped SF: M = greatest(10000, max(id)+1)
-# evaluates to exactly the old constants (10000 and its multiples) for
-# all shipped data — verified by (a) md5 value-snapshots of all 28
-# affected results at sf0.01 before/after the edit (zero mismatches)
-# and (b) the full 204-entry registry through the bit-level driver-sim
-# at sf0.001, sf0.01 AND sf0.1 post-change.  Engine-vs-oracle agreement
-# is therefore re-proven wholesale, which is what a prefix re-entry
-# would establish; the rows' green validity carries.  Of the affected
-# set, dd9/dd13/dd14/dd15 get fresh driver rows THIS round (r11 prefix)
-# and dd1/dd3/dd6/dd7 next round (r12 plan) regardless.
-#
-# SWEEP ledger (round 15, first freeze-era round): ONE command —
-# tools/full_sweep.py --grid, run after the rotation + the four ADVICE
-# fixes landed (no product-source commits after launch, so this IS the
-# round-end battery): ALL GREEN, 15 legs — round_start bundle, full
-# 216-entry registry bit-green through the pandas-path driver-sim at
-# sf0.001 (167 s) / sf0.01 (196 s) / sf0.1 (377 s), the full 9-cell
-# adversarial grid (AQE off, partitions ∈ {3, 7, 13} × all three SFs)
-# 216/216 in every cell, the 32-thread merge-order leg 216/216, and
-# the (now 7) scale-discipline lints.  The round-14 FLAKE-WATCH leg
-# (sf0.1/partitions=7) ran 216/216 — season record for that leg now
-# 10 green / 1 unexplained 215/216; no adversarial leg dropped a row
-# anywhere this round, so the transient adjudication stands.  NEW
-# standing evidence (round 15): a full-registry adversarial leg under
-# STACKED hostile axes — autoBroadcastJoinThreshold=-1 (every unforced
-# join degrades to a shuffle join; explicit broadcast() hints remain),
-# wholeStage codegen OFF (interpreted expression path), and an
-# America/New_York session start (the _util.tables UTC forcing must
-# govern) — 216/216 green at sf0.01; the leg is now wired into
-# full_sweep as a standing battery member, and post-battery the same
-# stacked axes closed at sf0.001 AND sf0.1 (216/216 each — all three
-# SFs), and each axis ALSO ran alone at sf0.01 (216/216 apiece, so no
-# axis is masked by stacking).  End-of-round repeatability (r8 precedent): the live 50-row
-# round-15 prefix ran 3/3 green at driver-like local[32].
-# Registry-wide single-pass profile re-run as a standing tool
-# (tools/registry_profile.py → REGISTRY_PROFILE.jsonl): 326.1 s/216 at
-# sf0.1, adjudicated probe-first as a slow-window reading — see
-# BENCH_NOTES round-15 addendum (a code regression is impossible by
-# construction: the round's only package-source change is dead on the
-# default path).  NEW hazard-class coverage:
-# tests/test_r15_tz_parity.py proves the UTC forcing is load-bearing
-# at the NTZ→TIMESTAMP casts feeding unix_micros (5 queries
-# driver-strict from a non-UTC session; reds with the forcing
-# removed), and tests/test_full_sweep_surfacing.py pins the
-# failure-line surfacing fix against synthetic legs.  NEW robustness
-# axis (round 15): tools/schema_evolution_audit.py reads MUTATED
-# physical layouts (extra trailing column; reversed column order)
-# against oracles on the originals — BOTH modes 216/216 green at
-# sf0.001, proving the registry selects inputs by name and projects
-# explicit outputs (no positional reads, no select-* pass-through);
-# in-suite subset in tests/test_r15_schema_evolution.py (one query
-# per family × both modes).  NEW hypothesis laws
-# (tests/test_r15_property_laws.py): global_rank = exact
-# lexicographic permutation rank and grouped_prefix_sum = pandas
-# groupby-cumsum under randomized shapes AND randomized input
-# partitioning (1–7 parts).  Bench: probe-first, three sequential-clean
-# passes 36.71/38.57/38.50 s (spins 0.151–0.183); the VERDICT r14
-# watch item w1_adjacency_removal re-bracketed IN BAND all three
-# passes (0.391/0.431/0.395 vs its 0.38–0.50 history) — the r14
-# 0.856 s max adjudicated a within-pass scheduler blip (BENCH_NOTES
-# round-15 section).  Zero registrations; registry still 216;
-# anchor gate 216/216.
-#
-# ROUND-15 ADDENDUM (perf batch, after the battery above): two
-# result-preserving performance commits landed late in the round —
-# (1) fan_out on the scan-bound narrow stages of tx6/dd20/pk4/dd5/sim2
-# and (2) fan_out folded into shingle_sets (16-query family) plus
-# vector-side self-norm precompute in embedding_lsh_pairs
-# (dd5/tp2/sim12) — see the SCALE.md round-15 parallelism-starvation
-# section for the measured numbers and the float-identity argument.
-# Lapse-rule adjudication: every touched query proven md5-IDENTICAL at
-# all 3 SFs before landing (19 affected registered queries in batch 2
-# + 5 in batch 1), and the FULL 10-leg full_sweep battery re-ran ALL
-# GREEN on each edited tree (two complete batteries; the second's legs
-# are themselves 20-30% faster — sf0.1 driver-sim 413→314 s — because
-# the evidence pipeline exercises the fixed queries).  Green validity
-# of the affected rows therefore carries per the round-11 template.
-# FLAKE NAMED AND FIXED (late round 15): the round-14 215/216
-# transient RECURRED on its leg (adversarial sf0.1/partitions=7,
-# battery #5) and the r14 name-surfacing fix did its job —
-# i13_incremental_minhash, Py4JJavaError task abort (one task failed
-# once; job aborted).  Root cause analysis: adversarial_check was the
-# ONLY tool building its session without the factory's 8g driver
-# memory (1g JVM default) AND plain local[8] pins
-# spark.task.maxFailures=1 — so the battery's fattest-partition leg
-# ran the full registry on an under-provisioned heap where a single
-# transient python-worker death aborts the job.  Three fixes landed
-# (tools only, zero result surface): str(e) failure surfacing (the
-# Py4J repr hid the Java class), driver-memory parity with every other
-# tool, and local[8,4] task retries (no real cluster runs with
-# maxFailures=1; deterministic failures still fail 4/4).  Post-fix the
-# leg ran 216/216 three consecutive times; mechanism is inferred (the
-# Java class predates the surfacing fix) but the leg-selectivity fits
-# and any recurrence now prints the named exception class.
-# Batch 3 (same protocol): w8/w11's per-user recursive kernels
-# re-grouped under coarse hash buckets (_by_user_bucketed — identical
-# per-user kernel, ~buckets pandas round-trips instead of ~|users|;
-# w8 3.5→2.6 s, w11 4.7→2.8 s warm sf0.1), md5-identical at 3 SFs,
-# validated by the round-end 16-leg full_sweep --grid battery ALL
-# GREEN (round_start + 3-SF driver-sim + 9-cell partitions grid +
-# 32-thread merge order + stacked hostile axes + lints).  Post-batch
-# standing numbers: registry-wide profile 326.1→244.6 s/216 (probes
-# same regime), bench passes 39.28/38.23 s with every untouched
-# headline query inside its historical band and tp2 at 3.53/3.00 s
-# (below its 3.86–5.73 band).  Full pytest on the final tree:
-# 1052/1052 green.
-#
-# SWEEP ledger (round 14): ONE command — tools/full_sweep.py, full
-# mode, run AFTER everything landed (w14 NULLS LAST pin, rotation,
-# staged_r15 registration to 216, the reliable-checkpoint combinator
-# flag): ALL GREEN, 9 legs — round_start bundle (rotation/anchor/
-# preflight), full 216-entry registry bit-green through the pandas-path
-# driver-sim at sf0.001 (193 s), sf0.01 (155 s) AND sf0.1 (290 s),
-# full-registry adversarial sweep (AQE off, partitions=7) 216/216 at
-# ALL THREE SFs, the 32-thread merge-order leg 216/216 at sf0.01, and
-# the 5 scale-discipline lints.  Before the battery, the round's
-# touched surface was also swept piecewise: the 4 new registrations
-# adversarial-green 4/4 at all three SFs, the new 50-row prefix
-# driver-sim 50/50 at sf0.01, w14 bit-green at 3 SFs after its NULLS
-# LAST pin, and all 8 rank-combinator consumers bit-green after the
-# reliable-flag refactor.  Zero failures -> nothing to name.  NEW
-# hazard-class coverage: tests/test_r14_null_rank_parity.py plants
-# NULLs in both rank keys and proves the w13/w14 pins sync the engines
-# (reds when a pin is removed).  The battery was re-run FULL twice
-# more after late-round perf edits (the sim12 pair-frame checkpoint and
-# the tx6 bounded-model checkpoint — each md5-proven bit-identical at
-# 3 SFs pre/post, per the lapse rule): ALL GREEN both times, 9 legs
-# each — three full batteries total this round.  Post-battery extra
-# legs: a FIFTH
-# partial-merge order swept — AQE off + shuffle.partitions=3 over the
-# FULL registry at sf0.01, 216/216 green (orders now covered: 3, 7,
-# 8-default, 13, 32) — and the 32-thread driver-sim repeated at sf0.1
-# (216/216 green; matches the r13 precedent of both SFs at 32
-# threads).  End-of-round repeatability (r8 precedent): the live
-# 50-row prefix 3/3 repeat runs green at driver-like local[32],
-# after every round-14 edit landed.  FULL adversarial GRID closed at
-# round end: partitions ∈ {3, 7, 13} × SF ∈ {0.001, 0.01, 0.1} — all
-# nine cells 216/216 green (plus the default-8 and 32-thread orders
-# at every SF via the batteries); merge-order sensitivity is
-# empirically absent across five orders at three scales on the
-# frozen registry.
-# FLAKE RECORD (round 14, end of round — report faithfully): ONE
-# full_sweep --grid run scored the sf0.1/partitions=7 adversarial leg
-# 215/216; the failing query's name was lost because full_sweep echoed
-# only the progress-bar tail on failure (tooling gap, FIXED the same
-# session: FAIL/ERROR lines now surface first).  The identical leg ran
-# 216/216 green FIVE consecutive times immediately after on identical
-# code (and twice earlier in the round's batteries), so the
-# adjudication is a transient executor/Py4J exception (the checker
-# counts exceptions as failures), not a value mismatch — but this is
-# INFERRED, not proven, because the message is gone.  Standing watch
-# item for round 15: if any adversarial leg drops a row again, the
-# fixed tooling will name it; chase it before anything else.
-# CLOSE-OUT: a final full_sweep --grid with the fixed tooling ran
-# ALL GREEN end-to-end — 15 legs in one command (round_start + 3-SF
-# driver-sim + the full 9-cell adversarial grid + 32-thread leg +
-# lints), including the previously-flaking sf0.1/partitions=7 leg at
-# 216/216.  That leg's season record: 9 green runs, 1 unexplained
-# 215/216.
-#
-# SWEEP ledger (round 13): full 212-entry registry (post staged_r14
-# registration) bit-green through the pandas-path driver-sim at
-# sf0.001, sf0.01 AND sf0.1 (one run each, after the tx16 broadcast
-# fix + rotation + registration landed).  The round's touched surface
-# — the tx16 hash-bucket redesign, w13's NULLS LAST pin (both hold
-# r13 prefix slots, so their oracle edits re-enter the prefix by
-# plan), and the 4 new registrations i13/sp12/w14/o10 — additionally
-# re-verified bit-level under the r8-precedent adversarial config
-# (AQE DISABLED, shuffle.partitions=7): tx16+w13 2/2 at ALL THREE
-# SFs, the new registrations 4/4 at ALL THREE SFs; then the ENTIRE
-# 212-entry registry re-verified under the same adversarial config at
-# ALL THREE SFs — 212/212 green at each (sf0.001 added beyond the
-# r12 precedent), zero skips.  The FULL registry was also separately
-# green at 32 threads (SPARK_GRAFT_CPUS=32 driver-sim --full at
-# sf0.01 AND at sf0.1 — a third partial-merge order beyond the
-# default 8 and the
-# adversarial 7), and the unregistered staged_r15 pool is
-# adversarial-green at ALL THREE SFs (4/4 each) ahead of its
-# round-14 registration.  A fourth distinct merge order was also
-# swept: AQE off + shuffle.partitions=13 over the FULL registry at
-# sf0.01 — 212/212 green (orders now covered: 7, 8-default, 13, 32).
-# Zero failures -> nothing to name.
-#
-# SWEEP ledger (round 12): full 208-entry registry (post staged_r13
-# registration) bit-green through the pandas-path driver-sim at
-# sf0.001, sf0.01 AND sf0.1 (one run each, after the rotation +
-# registration landed).  The round's touched surface (the 4 new
-# registrations tx16/pk4/w13/sim13 — the rotation edit touches no
-# query code) additionally re-verified bit-level under the
-# r8-precedent adversarial config — AQE DISABLED, shuffle.partitions=7
-# (different partial-agg merge orders) — 4/4 green; then the ENTIRE
-# 208-entry registry re-verified bit-level under the same adversarial
-# config at sf0.01 AND sf0.1 — 208/208 green at each, zero skips
-# (strictly stronger than
-# the driver's default-config gate on merge-order sensitivity; first
-# FULL-registry adversarial sweep, now one command:
-# tools/adversarial_check.py --full).  The live 50-row prefix was also
-# separately green at 32 threads (SPARK_GRAFT_CPUS=32 driver-sim), and
-# the unregistered staged_r14/r15 pools are adversarial-green at ALL
-# THREE SFs (8/8 each) ahead of their registration rounds.  Zero
-# failures -> nothing to name.
-#
-# SWEEP ledger (round 11): full 204-entry registry bit-green through
-# the pandas-path driver-sim at sf0.001, sf0.01 AND sf0.1 (one run
-# each, post-migration); the 29-query round-11 touched surface (4 new
-# registrations + the 4 r10 adds + all offset-migration consumers)
-# additionally re-verified bit-level under the r8-precedent adversarial
-# config — AQE DISABLED, shuffle.partitions=7 (different partial-agg
-# merge orders) — 29/29 green.  Zero failures -> nothing to name.
-#
-# ROOT-CAUSE CORRECTION (round 8, per VERDICT r7 item 5): the r6 AND r7
-# sp6 red rows (and the r7 a25 red) were ORACLE TYPING — uncast windowed
-# sum() -> DuckDB HUGEINT -> pandas float64 -> deterministic driver
-# value-hash mismatch with rows/schema green.  The round-7 story
-# ("grouped_prefix_sum dual-evaluation nondeterminism, fixed by
-# localCheckpoint") was a plausible-but-wrong attribution: the hazard
-# was real as a latent code smell (repartitionByRange samples boundaries
-# per exchange, so two un-deduplicated consumers CAN disagree) and the
-# checkpoint + plan pins stay as hardening, but it never caused a red —
-# which is why sp6 went red again on the "fixed" code and no local
-# adjudication could reproduce it.  Defense-in-depth added this round:
-# type-aware mirror (oracle_harness._TYPE_EQUIV; demonstrably reds the
-# pre-fix sp6/a25 oracles and greens the cast ones) + registry-wide
-# DuckDB type lint with an EMPTY whitelist (tests/test_oracle_types.py).
-#
-# SWEEP ledger (round 8): full-registry oracle mirror under the NEW
-# type-aware driver-strict compare — 189/189 green at sf0.001 (123.4 s,
-# incl. the 191 oracle-type lint tests), 189/189 at sf0.01 (inside the
-# 665-green full suite, 317.5 s), 189/189 at sf0.1 (416.6 s) — one
-# sequential uncontended run each, after the sp6/a25 ::BIGINT casts,
-# dp7/u13b DECIMAL->DOUBLE casts, tx13 association parenthesization,
-# a25 log-sum quantization, and dp10 ::HUGEINT oracle headroom.  Zero
-# failures -> nothing to name.  NEW this round: tools/driver_sim.py
-# replicates the gate's pandas data path (toPandas vs DuckDB .df(),
-# dtype+value bit-exact) — 50/50 prefix green and 189/189 full-registry
-# green at sf0.01; the only conversion-layer skew found is Spark date
-# (object-of-datetime.date) vs DuckDB DATE (datetime64), benign under
-# the driver hash (a21/c6/w10 green history) and normalized in the sim.
-# Adjudication proof for the type-aware mirror: reconstructing the
-# PRE-fix sp6/a25 oracles reds them with "type mismatch: ... HUGEINT"
-# and the cast oracles green — the mirror now dominates the driver gate
-# on the type axis (VERDICT r7 item 2 done-criterion).
-# Repeatability + bit-level pass: driver_sim re-run with BIT-pattern
-# float compare (catches -0.0 / NaN-payload skew a == compare forgives)
-# — full registry 189/189 at sf0.001, sf0.01 AND sf0.1; the 50-prefix
-# additionally 3/3 repeat runs green at driver-like local[32].  No
-# negative-zero skew exists anywhere in the registry.
-# Adversarial-config sweep: the FULL 192-entry registry (including the
-# 3 round-8 adds) re-verified bit-level through the pandas path with
-# AQE DISABLED and shuffle.partitions=7 (different partial-agg merge
-# orders) — 192/192 green; the 50-prefix also green under the same
-# config earlier in the round.  Order-sensitivity is empirically absent
-# under config perturbation, corroborating the quantized-sum policy.
-# Bench (sequential-clean, same session): 31-query suite 39.3 s at
-# sf0.1 vs r7's 37.2 s — within the documented ±25% co-tenancy noise;
-# per-query medians comparable (p1 2.20 vs 2.71, sp8 2.16 vs 2.20);
-# tx13 3.50 vs 2.57 and dd13 6.67 vs 5.07 carry spreads of [1.6,8.9] /
-# [4.6,11.8] — contention, not plan changes (plans pinned unchanged).
-# End-of-round certification: full suite 677 green (665 + the
-# rotation-plan drift test + late adds) after landing
-# tools/rotation_audit.py — which mechanically re-derived the
-# staleness ladder from CORRECTNESS_r0{1..7}.json and confirmed the
-# ROUND-9 plan below is exactly the 50 stalest rows (3 never-checked +
-# 7 r3-era spills + 40 r4-era; no staler row left out) — and
-# tools/gen_queries_md.py (QUERIES.md regenerated for the 192-entry
-# round-8 order).
-# Third-layer anchors (tests/test_semantic_laws.py, late round 8):
-# nineteen of the algorithmically-richest queries now ALSO verify
-# against independent pure-Python recomputations + estimator-family
-# laws — a25 (sequential Kaplan-Meier), dd13 (union-find), g1 (dense
-# power iteration), j17 (per-probe scan), i10 (pandas merge replay),
-# dp9 (plain information theory), tx13 (pure-Python BM25), dp10 (plain
-# ANOVA + SS conservation), i11 (sequential lateness replay), a26
-# (per-user funnel replay), o9 (streaming-fill replay), w5 (sequential
-# sessionizer), tx9 (pure-Python pair counts), w8 (sequential EWMA,
-# bit-exact), a21 (per-user conversion replay), w6 (calendar-range
-# replay), a19 (CUBE margin laws), pk1 (greedy packing replay), sp3
-# (sharded-permutation + determinism laws).  These are spill-grade
-# anchors for future rotations (like j4's property suite).
-# Vacuous-branch audit (late round 8): the shipped event stream is
-# fully IN-ORDER at every SF, so i11's lateness counts and the
-# streaming watermark discard path never fire on natural data, and
-# a25's d==n zero-survival step (the ln(0) hazard its n_zero counter
-# guards) never occurs either — all three now exercised by PLANTED
-# data (test_semantic_laws: planted-disorder i11 + both-engine a25
-# zero-branch; test_streaming: 3-batch watermark-drop plant pinning
-# that Spark drops late rows only after state eviction).  f8/w3/j6
-# style branches inject their own variants via modulo rules and were
-# already non-vacuous.  i10's tombstone path fires naturally (3
-# latest=error keys at sf0.001, 30 at sf0.01).
-# Final full-suite certification after the law tests + plants landed:
-# 699 green (suite wall 358 s).
-#
-# SWEEP ledger (round 7): full-registry oracle mirror — 189/189 green
-# at sf0.001 (189.6 s), 189/189 at sf0.01 (inside the 461-green full
-# suite), 189/189 at sf0.1 (463.5 s) — one sequential uncontended run
-# each, after the combinator fix and the sp8/tx13/dp9/dp10
-# determinism hardening.  Zero failures → nothing to name.
-# Mirror upgraded to DRIVER-STRICT mid-round (oracle_harness compare
-# now bit-exact on floats, no tolerance — the driver hashes values, so
-# the old 1e-9 rel_tol could forgive a diff the gate would red): the
-# full registry re-swept green under exact comparison at ALL THREE SFs
-# (sf0.01 137.5 s, sf0.001 115.4 s, sf0.1 416.2 s), plus repeats at
-# local[8] and driver-like local[32].  Every oracle pair is bit-exact.
-# End-of-round validation (after sim12 re-banding + sp8 fan-out): full
-# suite 469 green under exact comparison; bench sequential-clean total
-# 39.5 s / 31 queries at sf0.1 (p1 2.46 s, sp8 2.26 s, tx13 1.58 s).  The
-# rank-combinator machinery additionally passed 5 repeated prefix-
-# family value-hash runs and the new tests/test_rank_combinators.py
-# config sweep (AQE on/off × shuffle-partition counts).
-# Bench note (verdict r6 item 6): with the sequential bench, p1's
-# median is 2.395 s, spread [2.307, 2.414] — the r6 [3.0, 4.14]
-# reading was measurement contention, not a plan regression; sp8's
-# r6 spread [5.8, 23.2] likewise collapsed to [5.85, 5.99].
-# Noise floor calibration (three idle-machine bench runs this round):
-# suite totals 43.4 / 51.5 / 41.4 s on IDENTICAL code except sp8's
-# fan-out — whole-run throughput swings ±25% between runs (VM
-# co-tenancy), uniformly across queries.  Per-query medians within a
-# run are comparable; totals across runs are not — read deltas
-# against same-run neighbors, not across rounds.
-
-
 def load_all() -> dict[str, QueryDef]:
     """Import every query module (side effect: fills REGISTRY).
 
-    Returns the registry reordered so ``PREFIX_ORDER`` comes first (the
-    driver-verified 50-entry prefix for this round), then every remaining
-    entry in module order.  ``tests/test_registry_budget.py`` guards the
-    prefix's sf0.01 wall-clock so a reorder can't silently outgrow the
-    driver's budget.
+    Returns a copy of the registry in registration order.
     """
     from . import (  # noqa: F401
         aggregates,
@@ -631,9 +83,4 @@ def load_all() -> dict[str, QueryDef]:
         windows_sorts,
     )
 
-    out: dict[str, QueryDef] = {}
-    for name in PREFIX_ORDER:
-        out[name] = REGISTRY[name]
-    for name, qdef in REGISTRY.items():
-        out.setdefault(name, qdef)
-    return out
+    return dict(REGISTRY)

@@ -953,9 +953,6 @@ def a27_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-11 registered adds (re-homed from queries/staged_r12.py, the
-# round-12 staged pool, per the VERDICT r10 item-3 registration checklist;
-# registered BELOW the driver prefix — throttle: 4 adds this round) -------
 # --- A28: deterministic HyperLogLog distinct sketch + exact twin ------------
 # At 100 TB an exact per-group COUNT(DISTINCT key) is a full shuffle of
 # every key; the sketch path ships m=64 one-byte registers per group
@@ -1200,8 +1197,6 @@ def a29_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-14 registered add (re-homed from queries/staged_r15.py per the
-# registration checklist; registered BELOW the driver prefix) -----------------
 # --- A30: KMV bottom-k distinct sketch ----------------------------------------
 # Scale shape: the distinct (month, hash) frame is one hash-distinct
 # shuffle, checkpointed so the corpus is scanned+deduped once; bottom-k

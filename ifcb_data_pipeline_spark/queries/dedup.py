@@ -1663,9 +1663,6 @@ def dd19_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-11 registered adds (re-homed from queries/staged_r12.py, the
-# round-12 staged pool, per the VERDICT r10 item-3 registration checklist;
-# registered BELOW the driver prefix — throttle: 4 adds this round) -------
 # --- DD20: cross-document exact substring dedup (suffix-array twin) ---------
 # Lee et al.'s ExactSubstr dedup builds a corpus-wide suffix array and
 # removes any ≥50-char span that re-occurs verbatim anywhere else.  A

@@ -1120,8 +1120,6 @@ def i12_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-13 registered add (re-homed from queries/staged_r14.py per the
-# registration checklist; registered BELOW the driver prefix) -----------------
 # --- I13: incremental MinHash maintenance ------------------------------------
 # Scale shape: shingling is a narrow flatMap; the DISTINCT (lang,
 # shingle, slice) frame is one hash agg; the 32-perm explode runs on the
@@ -1349,8 +1347,6 @@ def i13_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-14 registered add (re-homed from queries/staged_r15.py per the
-# registration checklist; registered BELOW the driver prefix) -----------------
 # --- J18: Bloom-filter join pre-filter + exact twin ----------------------------
 # Scale shape: the filter itself is a <= min(3*|build|, m)-row
 # distinct-bit frame — broadcast to the probe side, exactly what a

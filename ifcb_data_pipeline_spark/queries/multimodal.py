@@ -1847,9 +1847,6 @@ def mm12_spectral_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return meta.mapInPandas(spectra, schema=schema)
 
 
-# --- round-11 registered adds (re-homed from queries/staged_r12.py, the
-# round-12 staged pool, per the VERDICT r10 item-3 registration checklist;
-# registered BELOW the driver prefix — throttle: 4 adds this round) -------
 # --- ST9: stream-stream join state-retention audit --------------------------
 # st4's view->click attribution join, run as a stream-stream join,
 # keeps every view in state until the watermark passes its join window;

@@ -203,8 +203,6 @@ def pk3_length_bucketed_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-12 registered add (re-homed from queries/staged_r13.py per the
-# registration checklist; registered BELOW the driver prefix) -----------------
 # --- PK4: content-defined chunking + shared-chunk accounting -----------------
 # LBFS/rsync-style CDC: a chunk boundary sits before position p whenever
 # the 8-char gram starting at p hashes to 0 (mod 32) — expected ~32-char

@@ -1160,15 +1160,13 @@ def dp12_quantile_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-14 registered add (re-homed from queries/staged_r15.py per the
-# registration checklist; registered BELOW the driver prefix) -----------------
 # --- DP13: Benford-style leading-digit audit -----------------------------------
 # Scale shape: one corpus scan into the checkpointed digit frame, then
 # two hash aggs and a <=|types|-row broadcast join.  Per-digit ROWS (no
 # cross-digit float sum), so every float is a short deterministic chain
 # on exact integers; the log10((d+1)/d) family (d in 1..9) is a FINITE
 # transcendental domain, certified bit-for-bit across Spark/DuckDB/
-# CPython by tests/test_staged_r15.py (the a28 ln-parity lesson).
+# CPython in tests/test_semantic_laws.py (the a28 ln-parity lesson).
 DP13_SQL = r"""
 WITH c AS (
     SELECT event_type, floor(value * 100.0 + 0.5)::BIGINT AS cents

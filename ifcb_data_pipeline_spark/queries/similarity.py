@@ -1046,8 +1046,6 @@ def sim12_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-12 registered add (re-homed from queries/staged_r13.py per the
-# registration checklist; registered BELOW the driver prefix) -----------------
 # --- SIM13: symmetric per-dim int8 quantization fidelity ---------------------
 # The standard ANN index compression: per-dimension symmetric int8 with
 # scale s_d = max|x_d| over the corpus, q = round_half_up(x·127/s) in

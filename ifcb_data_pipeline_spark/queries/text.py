@@ -1578,9 +1578,6 @@ def tx15_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-12 registered add (re-homed from queries/staged_r13.py per the
-# registration checklist; registered BELOW the driver prefix — throttle:
-# 4 adds this round) ----------------------------------------------------------
 # --- TX16: en-trained bigram vocabulary, per-language coverage ---------------
 # The real pipeline failure this measures: a tokenizer/vocab trained on
 # the dominant language slice silently fragments the rest of the corpus.
@@ -1699,8 +1696,6 @@ def tx16_bigram_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-13 registered add (re-homed from queries/staged_r14.py per the
-# registration checklist; registered BELOW the driver prefix) -----------------
 # --- SP12: group-atomic split + balance/leakage report ------------------------
 # Scale shape: the split is a pure hash expression on the fact row (zero
 # state); the audit is two hash aggs (per-user distinct-split collapse,

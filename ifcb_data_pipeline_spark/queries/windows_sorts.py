@@ -964,8 +964,6 @@ def o9_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-12 registered add (re-homed from queries/staged_r13.py per the
-# registration checklist; registered BELOW the driver prefix) -----------------
 # --- W13: robust per-user anomaly gate (median/MAD order statistics) ---------
 # Data-quality outlier gating wants robust statistics; the cross-engine
 # trap is that "median" interpolates on even counts and each engine
@@ -1080,8 +1078,6 @@ def w13_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-13 registered add (re-homed from queries/staged_r14.py per the
-# registration checklist; registered BELOW the driver prefix) -----------------
 # --- W14: per-user Spearman trend ---------------------------------------------
 # Scale shape: two rank windows and one agg, all partitioned by user_id
 # (bounded frames); no joins at all.  All arithmetic is exact-integer
@@ -1157,8 +1153,6 @@ def w14_spearman_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-13 registered add (re-homed from queries/staged_r14.py per the
-# registration checklist; registered BELOW the driver prefix) -----------------
 # --- O10: zone-map file-skipping effectiveness --------------------------------
 # Scale shape: per-file stats are one hash agg over (layout, file_id);
 # the clustered layout's rank comes from the factored global_rank
@@ -1306,8 +1300,6 @@ def o10_file_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-14 registered add (re-homed from queries/staged_r15.py per the
-# registration checklist; registered BELOW the driver prefix) -----------------
 # --- W15: exact two-sample Kolmogorov–Smirnov ----------------------------------
 # Exactness via the finite-decimal rule: the CDF steps live on the
 # integer-cents DOMAIN (bounded by the value domain, not the row count —

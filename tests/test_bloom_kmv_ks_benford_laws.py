@@ -1,8 +1,8 @@
-"""Hypothesis property laws for the round-14 contracts (pure Python).
+"""Hypothesis property laws for j18, a30, w15 and dp13 (pure Python).
 
 Randomized, Spark-free laws that must hold for ANY input — the depth
-layer on top of `tests/test_staged_r15.py`'s fixed-corpus replays,
-mirroring the round-13 pattern (`test_r13_property_laws.py`):
+layer on top of the fixed-corpus replays in `tests/test_semantic_laws.py`,
+mirroring `tests/test_vocab_spearman_minhash_laws.py`:
 
 * j18's Bloom filter can never produce a FALSE NEGATIVE: for any build
   set and any probe set, every true member passes all k salted-hash

@@ -1,6 +1,6 @@
-"""Laws for the round-15 perf batch: fan_out and the LSH norm precompute.
+"""Laws for fan_out and the LSH norm precompute.
 
-Two claims the batch rests on, pinned so they can't silently rot:
+Two claims these optimizations rest on, pinned so they can't silently rot:
 
 1. ``fan_out`` is a structural NO-OP whenever the input already has at
    least the session parallelism — the at-scale case (splits >> cores).

@@ -1,4 +1,4 @@
-"""Property laws for the round-17 reference-exact kernel families.
+"""Property laws for the reference-exact kernel families.
 
 The golden family fixtures pin 13 panel cases bit-for-bit; these
 hypothesis suites pin the INVARIANTS that must hold for arbitrary

@@ -968,13 +968,8 @@ _BNLJ_OK = {
     "sp4_mixture_materialize", "sp5_temperature_resampling",
     "sp8_importance_resampling", "tx10_tfidf_top_terms", "tx13_bm25_topk",
     "tx6_trigram_logprob",
-    # staged-pool candidates (a29 registered in round 11; the rest inert
-    # until their rounds register them; shapes verified in their
-    # tests/test_staged_r1N.py sweeps): 1-row broadcast totals /
-    # collapsed scale vectors plan as BNLJ.  w15 crossJoins a 1-row
-    # broadcast totals frame (ADVICE r10 item 2: it was allowlisted
-    # only for SinglePartition, so registering it would have gone red
-    # here — entry derived from test_staged_r15's own sweep).
+    # 1-row broadcast totals / collapsed scale vectors plan as BNLJ;
+    # w15 crossJoins a 1-row broadcast totals frame.
     "a29_cms_heavy_hitters", "sim13_int8_quant_error",
     "sp12_grouped_split_balance", "w15_ks_two_sample",
     # r18 histogram-first dp8: the 6-row broadcast probe frame joins the
@@ -996,8 +991,8 @@ _SINGLEPART_OK = {
     "sp8_importance_resampling", "tp4_curriculum_order", "tp5_funnel_report",
     "tx10_tfidf_top_terms", "tx13_bm25_topk", "tx6_trigram_logprob",
     "w10_cumulative_distinct",
-    # staged-pool candidates (inert until registered): 1-row total aggs,
-    # global_rank's bounded offsets cumsum, w15's domain-bounded CDF window
+    # 1-row total aggs, global_rank's bounded offsets cumsum, w15's
+    # domain-bounded CDF window
     "a29_cms_heavy_hitters", "sim13_int8_quant_error",
     "sp12_grouped_split_balance", "o10_file_skipping_stats",
     "w15_ks_two_sample",
@@ -1104,8 +1099,8 @@ def test_a30_bottomk_uses_local_heads_ladder(spark, sf_dir):
 def test_dp13_totals_join_is_broadcast(spark, sf_dir):
     """dp13's per-type totals frame is ≤|event types| rows — it must ride
     a BroadcastHashJoin on event_type, and the digit frame must come from
-    the checkpointed single scan (scan budget pinned in the staged pool
-    tests)."""
+    the checkpointed single scan (scan budget pinned in
+    test_r15_checkpoint_scan_budget)."""
     plan = plan_of(spark, "dp13_leading_digit_audit", sf_dir)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -1123,3 +1118,82 @@ def test_w15_argmax_probe_is_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in plan
     lkeys = re.findall(r"Left keys \[\d+\]: \[(\w+)#", plan)
     assert "num" in lkeys
+
+
+# --- tx16/pk4/i13/w14 and the a30/j18/w15/dp13 scan budget --------------------
+
+
+def test_tx16_vocab_join_is_broadcast(spark, sf_dir):
+    """The membership join's build side is the vocab projected into the
+    fixed 2^22 hash-bucket space — ≤ 2^22 BIGINT rows at ANY corpus scale
+    (r12-verdict fix), so forcing a broadcast hash join is legitimate and
+    a shuffled sort-merge (which would re-shuffle the whole tokenized
+    corpus on the join key) must not appear."""
+    plan = plan_of(spark, "tx16_bigram_vocab_coverage", sf_dir)
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    # The pin that would have caught the original defect (the r12 verdict
+    # flag): the join must be keyed on the BOUNDED hashed bucket (hb),
+    # never the raw bigram string — a plan-level guarantee the build side
+    # is <= 2^22 rows.  The bucket projection must appear in the plan.
+    import re
+
+    from ifcb_data_pipeline_spark.queries.text import TX16_BUCKETS
+
+    lk = re.search(r"Left keys \[1\]: \[(\w+)#", plan)
+    rk = re.search(r"Right keys \[1\]: \[(\w+)#", plan)
+    assert lk and rk, "BroadcastHashJoin keys not found in formatted plan"
+    assert lk.group(1) == "hb" and rk.group(1) == "hb", (
+        f"membership join keyed on ({lk.group(1)}, {rk.group(1)}), not the "
+        "bounded hash bucket"
+    )
+    assert f"% {TX16_BUCKETS}" in plan, "fixed bucket-space projection missing"
+
+
+def test_pk4_has_no_window_and_two_corpus_scans(spark, sf_dir):
+    """pk4's boundary detection + interval construction live in array
+    higher-order functions on the document row: no Window operator.  The
+    chunk stream is derived twice (dup-agg side and probe side — the same
+    recompute-over-checkpoint call dd20 makes), so exactly two pushed
+    parquet scans and no more."""
+    import re
+
+    plan = plan_of(spark, "pk4_cdc_chunking", sf_dir)
+    assert "Window" not in plan, "pk4 regressed to the window/join-back shape"
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2
+
+
+def test_i13_is_checkpoint_fed(spark, sf_dir):
+    """The distinct-shingle and hashed frames are localCheckpoint-ed, so
+    the executed plan reads materialized RDDs — ZERO parquet re-scans
+    across the five signature/set consumers (12 scans without it)."""
+    import re
+
+    plan = plan_of(spark, "i13_incremental_minhash", sf_dir)
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
+
+
+def test_w14_is_single_scan_no_join(spark, sf_dir):
+    import re
+
+    plan = plan_of(spark, "w14_spearman_trend", sf_dir)
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
+    assert "Join" not in plan
+
+
+def test_r15_checkpoint_scan_budget(spark, sf_dir):
+    """Each op's executed plan re-scans parquet at most once: the shared
+    frames (a30's distinct hashes, j18's build keys, dp13's digit frame,
+    w15's cents and diff frames) are localCheckpoint-ed."""
+    import re
+
+    budget = {
+        "a30_bottomk_distinct_sample": 1,  # the exact-twin orders scan
+        "j18_bloom_join_prefilter": 1,  # the customer probe scan
+        "w15_ks_two_sample": 0,
+        "dp13_leading_digit_audit": 0,
+    }
+    for name, max_scans in budget.items():
+        plan = plan_of(spark, name, sf_dir)
+        n = len(re.findall(r"\(\d+\) Scan parquet", plan))
+        assert n <= max_scans, f"{name}: {n} parquet scans (budget {max_scans})"

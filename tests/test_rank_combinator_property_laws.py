@@ -1,4 +1,4 @@
-"""Hypothesis property laws for the rank combinators (round 15).
+"""Hypothesis property laws for the rank combinators.
 
 `tests/test_rank_combinators.py` pins both checkpoint paths on fixed
 frames; these laws add randomized SHAPES — heavy ties, constant keys,

@@ -1,11 +1,9 @@
 """Registry-sweep timing guard.
 
-The driver's correctness gate executes the registry in ``load_all()``
-order and cuts a hard 50-entry prefix (rounds 1-2 evidence).  This test
-times that exact prefix at sf0.01 (Spark side only — the DuckDB oracle
-side is cheap by comparison) and fails if it outgrows the driver's
-observed budget, so a future reorder can't silently push gate entries
-past the cut or the wall clock.
+Times the first 50 registry entries in ``load_all()`` order at sf0.01
+(Spark side only — the DuckDB oracle side is cheap by comparison) and
+fails if they outgrow the budget, so a reorder or a slow new entry near
+the front of the registry can't silently blow up the sweep's wall clock.
 """
 
 from __future__ import annotations

@@ -379,7 +379,7 @@ def test_forced_broadcast_inventory_is_pinned():
 # Incident class: Spark window/rank orderBy defaults to NULLS FIRST while
 # DuckDB defaults to NULLS LAST — a rank key that can be NULL silently
 # desyncs the two engines' row_number/lag frames (the w13 ADVICE-r12 and
-# w14 ADVICE-r13 findings; tests/test_r14_null_rank_parity.py makes the
+# w14 ADVICE-r13 findings; tests/test_null_rank_parity.py makes the
 # class fire on planted data).  Every entry below is an explicit claim
 # that the default-ordered key(s) at that site are STRUCTURALLY non-null:
 # table primary keys (event_id, doc_id, ts, sample, *_orderkey), md5

@@ -1,7 +1,7 @@
-"""Hypothesis property laws for the round-13 contracts (pure Python).
+"""Hypothesis property laws for tx16, w14 and i13 (pure Python).
 
 Randomized, Spark-free laws that must hold for ANY input — a depth
-layer on top of the staged pools' fixed-corpus replays:
+layer on top of the fixed-corpus replays in `tests/test_semantic_laws.py`:
 
 * tx16's hash-bucket membership can never produce a FALSE NEGATIVE: a
   bigram that IS in the vocabulary always lands in its own bucket, so

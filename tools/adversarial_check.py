@@ -17,12 +17,10 @@ runtime coalescing that can mask them.  Bit-level agreement here is
 strictly stronger evidence than the default-config gate.
 
 Usage:
-    python tools/adversarial_check.py                     # live 50-row prefix
-    python tools/adversarial_check.py --full              # whole registry
+    python tools/adversarial_check.py                     # whole registry
     python tools/adversarial_check.py --names a1_biovolume_rollup dd20_...
-    python tools/adversarial_check.py --staged r14 r15    # unregistered pools
     python tools/adversarial_check.py --sf /root/testdata/sf0.1 --names ...
-    python tools/adversarial_check.py --full --hostile broadcast-off,codegen-off,tz-offset
+    python tools/adversarial_check.py --hostile broadcast-off,codegen-off,tz-offset
 
 --hostile (round 15) stacks further axes on the standing pair:
 broadcast-off disables AUTO broadcast so every unforced join becomes a
@@ -54,18 +52,8 @@ sys.path.insert(0, str(REPO / "tools"))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    # Mutually exclusive (ADVICE r12): silently ignoring one mode flag
-    # when another is present lets a user believe queries ran that never
-    # did.  Exactly one of --full/--names/--staged (or none = prefix).
-    mode = ap.add_mutually_exclusive_group()
-    mode.add_argument("--full", action="store_true", help="whole registry")
-    mode.add_argument("--names", nargs="*", default=None, help="explicit query keys")
-    mode.add_argument(
-        "--staged",
-        nargs="*",
-        default=None,
-        help="unregistered pool suffixes (e.g. r14 r15): check their STAGED "
-        "dicts instead of the registry",
+    ap.add_argument(
+        "--names", nargs="*", default=None, help="explicit query keys (default: all)"
     )
     ap.add_argument("--partitions", default="7")
     ap.add_argument(
@@ -87,33 +75,21 @@ def main() -> int:
         print(f"unknown --hostile axes: {sorted(unknown_axes)}")
         return 1
 
-    import importlib
-
     from pyspark.sql import SparkSession
 
     from driver_sim import frames_match
-    from ifcb_data_pipeline_spark.queries import PREFIX_ORDER, load_all
+    from ifcb_data_pipeline_spark.queries import load_all
     from oracle_harness import duckdb_connection
 
-    reg = dict(load_all())
-    if args.staged:
-        reg = {}
-        for suffix in args.staged:
-            mod = importlib.import_module(
-                f"ifcb_data_pipeline_spark.queries.staged_{suffix}"
-            )
-            reg.update(mod.STAGED)
-        names = list(reg)
-    elif args.names:
+    reg = load_all()
+    if args.names:
         unknown = [n for n in args.names if n not in reg]
         if unknown:
             print(f"unknown query keys: {unknown}")
             return 1
         names = list(args.names)
-    elif args.full:
-        names = list(reg)
     else:
-        names = list(PREFIX_ORDER)
+        names = list(reg)
 
     # local[8,4] (not local[8]): plain local mode hard-pins
     # spark.task.maxFailures=1, so ONE transient task failure (a python

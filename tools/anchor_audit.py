@@ -34,15 +34,6 @@ ANCHOR_FILES = [
     # operator-level reference-case anchors (e.g. the clean_taxa_name
     # truth table that anchors c1, the adjacency-kill cases for w1)
     "tests/test_operators.py",
-    # staged-pool verification files: each staged candidate ships its
-    # pure-Python replay + family laws here BEFORE registration, so the
-    # anchor gate stays green the moment a future round registers one
-    # (the audit maps registry names only — unregistered names are
-    # simply not looked up).
-    "tests/test_staged_r12.py",
-    "tests/test_staged_r13.py",
-    "tests/test_staged_r14.py",
-    "tests/test_staged_r15.py",
 ]
 
 
@@ -55,7 +46,7 @@ def registry_names() -> list[str]:
 
 def anchor_map() -> dict[str, list[str]]:
     """Strict matching (ADVICE r10 item 1): a mere prose mention — a
-    contrast note in a staged file's comment, a coincidental local
+    contrast note in a comment, a coincidental local
     variable named ``c1`` — must NOT count as an anchor.  A key is
     anchored only by a ``def test_...`` line that names it (the test is
     the anchor) or an explicit ``# anchors: <key> ...`` marker placed on

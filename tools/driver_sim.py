@@ -1,6 +1,6 @@
 """Pandas-level driver simulation — the closest local replica of the gate.
 
-The round driver compares each prefix query's Spark result against its
+The round driver compares each query's Spark result against its
 DuckDB oracle THROUGH pandas (row-count, sorted-column schema, value
 hash).  The r6/r7 sp6/a25 reds proved the pandas conversion layer is
 itself part of the contract: DuckDB HUGEINT became float64 on the way
@@ -11,10 +11,10 @@ this tool additionally replicates the driver's actual data path:
     spark_df.toPandas()  vs  con.sql(oracle).df()
 
 sorted by column name, row-sorted, compared on BOTH the pandas dtype and
-the element values (bit-exact for floats).  Run per round over the
-50-entry driver prefix before shipping:
+the element values (bit-exact for floats).  Runs the whole registry,
+or only the named queries:
 
-    python tools/driver_sim.py [sf_dir] [--full]
+    python tools/driver_sim.py [sf_dir] [--only=q1,q2]
 """
 
 from __future__ import annotations
@@ -115,13 +115,12 @@ def main() -> int:
     sys.path.insert(0, "tests")
     from oracle_harness import duckdb_connection
 
-    from ifcb_data_pipeline_spark.queries import PREFIX_ORDER, load_all
+    from ifcb_data_pipeline_spark.queries import load_all
     from ifcb_data_pipeline_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01"
-    full = "--full" in sys.argv
     reg = load_all()
-    names = list(reg) if full else list(PREFIX_ORDER)
+    names = list(reg)
     for a in sys.argv:  # --only=q1,q2 — targeted re-verify (r19)
         if a.startswith("--only="):
             names = [n.strip() for n in a[len("--only="):].split(",") if n.strip()]

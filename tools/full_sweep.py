@@ -1,9 +1,9 @@
 """One-command round verification battery.
 
-Runs the complete evidence set a round's SWEEP ledger entry records,
-in order, stopping at the first failure:
+Runs the complete verification evidence set in order, stopping at the
+first failure:
 
-1. round_start bundle (rotation audit, anchor audit, preflight)
+1. third-layer anchor audit (every registry entry has a law/replay test)
 2. full-registry driver-sim at sf0.001 / sf0.01 / sf0.1 (bit-level
    oracle mirror, default config)
 3. full-registry adversarial sweep (AQE off, partitions=7) at all
@@ -89,15 +89,15 @@ def main() -> int:
     py = sys.executable
 
     legs: list[tuple[str, list[str], dict | None]] = [
-        ("round_start", [py, "tools/round_start.py"], None),
+        ("anchor_audit", [py, "tools/anchor_audit.py"], None),
     ]
     for sf in sfs:
-        legs.append((f"driver-sim --full {sf}", [py, "tools/driver_sim.py", sf, "--full"], None))
+        legs.append((f"driver-sim {sf}", [py, "tools/driver_sim.py", sf], None))
     for sf in sfs:
         legs.append(
             (
-                f"adversarial --full {sf}",
-                [py, "tools/adversarial_check.py", "--full", "--sf", sf],
+                f"adversarial {sf}",
+                [py, "tools/adversarial_check.py", "--sf", sf],
                 None,
             )
         )
@@ -106,11 +106,10 @@ def main() -> int:
             for sf in sfs:
                 legs.append(
                     (
-                        f"adversarial --full {sf} @partitions={parts}",
+                        f"adversarial {sf} @partitions={parts}",
                         [
                             py,
                             "tools/adversarial_check.py",
-                            "--full",
                             "--sf",
                             sf,
                             "--partitions",
@@ -121,8 +120,8 @@ def main() -> int:
                 )
     legs.append(
         (
-            "driver-sim --full sf0.01 @32 threads",
-            [py, "tools/driver_sim.py", "/root/testdata/sf0.01", "--full"],
+            "driver-sim sf0.01 @32 threads",
+            [py, "tools/driver_sim.py", "/root/testdata/sf0.01"],
             {"SPARK_GRAFT_CPUS": "32"},
         )
     )
@@ -131,11 +130,10 @@ def main() -> int:
     # path, non-UTC session start) at the driver's compare SF
     legs.append(
         (
-            "adversarial --full sf0.01 @hostile-axes",
+            "adversarial sf0.01 @hostile-axes",
             [
                 py,
                 "tools/adversarial_check.py",
-                "--full",
                 "--sf",
                 "/root/testdata/sf0.01",
                 "--hostile",

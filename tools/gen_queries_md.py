@@ -11,16 +11,11 @@ import sys
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from ifcb_data_pipeline_spark.queries import PREFIX_ORDER, REGISTRY, load_all  # noqa: E402
+from ifcb_data_pipeline_spark.queries import load_all  # noqa: E402
 
 HEADER = """# QUERIES — registry index (auto-generated)
 
-{n} queries; ✅ = DuckDB oracle, ◻ = rows-only gate.
-Registry order = driver execution order: the first 50 entries are the
-current round's driver-verified prefix (see
-`queries/__init__.py::PREFIX_ORDER` for the slot-assignment rationale
-and the precomputed next-round rotation plan; `tools/rotation_audit.py`
-cross-checks the plan against the CORRECTNESS artifacts).
+{n} queries in registry order; ✅ = DuckDB oracle, ◻ = rows-only gate.
 
 | # | query | gate | survey ref |
 |---|---|---|---|
@@ -28,17 +23,14 @@ cross-checks the plan against the CORRECTNESS artifacts).
 
 
 def main() -> None:
-    load_all()
-    assert set(PREFIX_ORDER) <= set(REGISTRY), "prefix names missing from registry"
-    ordered = list(PREFIX_ORDER) + [n for n in REGISTRY if n not in set(PREFIX_ORDER)]
-    lines = [HEADER.format(n=len(ordered))]
-    for i, name in enumerate(ordered):
-        q = REGISTRY[name]
+    reg = load_all()
+    lines = [HEADER.format(n=len(reg))]
+    for i, (name, q) in enumerate(reg.items()):
         gate = "✅" if q.oracle else "◻"
         ref = q.survey_ref or "—"
         lines.append(f"| {i} | `{name}` | {gate} | {ref} |\n")
     (REPO / "QUERIES.md").write_text("".join(lines))
-    print(f"wrote QUERIES.md: {len(ordered)} queries")
+    print(f"wrote QUERIES.md: {len(reg)} queries")
 
 
 if __name__ == "__main__":

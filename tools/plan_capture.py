@@ -5,6 +5,10 @@ Usage: python tools/plan_capture.py <round> <suffix> [query ...]
 Writes ``plans/r<round>/<query>_<suffix>.txt`` for each named query
 (default: the bench HEADLINE set).  Plan capture is driver-only — no
 job runs — so it is safe to run in a contended window.
+
+The output is scratch for before/after plan diffs: ``/plans/`` is
+git-ignored, and the plan shapes that matter are pinned in
+``tests/test_physical_plans.py``.
 """
 
 from __future__ import annotations

@@ -4,8 +4,7 @@ The bench covers the 31 headline queries; this times ALL registered
 queries end-to-end (``toPandas()``) in one session at the given SF to
 catch sleepers outside the headline suite — a query whose cost drifted
 without any bench row noticing.  One pass, cold within the session, in
-registry order (construction order, NOT the prefix), so successive
-rounds are comparable.
+registry order, so successive runs are comparable.
 
 Usage: python tools/registry_profile.py [SF_DIR] [label]
 Prints one JSON line: {"label": ..., "sf_dir": ..., "total_s": ...,
@@ -32,7 +31,7 @@ def main() -> int:
     from ifcb_data_pipeline_spark.queries import load_all
     from ifcb_data_pipeline_spark.session import get_spark
 
-    reg = dict(load_all())
+    reg = load_all()
     spark = get_spark("registry-profile", cpus=32)
     # Warm the session before timing: the first measured query otherwise
     # absorbs JVM/codegen/python-worker startup (~3-4 s locally) and
