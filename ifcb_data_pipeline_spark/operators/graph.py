@@ -74,6 +74,20 @@ def _observation_get(obs: Observation, timeout_s: float = _OBSERVE_TIMEOUT_S):
     return payload
 
 
+def _observed_or(obs: Observation, fallback):
+    """The metrics of ``obs``, or ``fallback()`` when the runtime does not
+    deliver them.  The first timeout sets the session-wide
+    ``_OBSERVE_UNAVAILABLE`` latch, so later calls go straight to the
+    fallback instead of waiting out the timeout again."""
+    global _OBSERVE_UNAVAILABLE
+    if not _OBSERVE_UNAVAILABLE:
+        try:
+            return _observation_get(obs)
+        except TimeoutError:
+            _OBSERVE_UNAVAILABLE = True
+    return fallback()
+
+
 def _canonical(e: DataFrame) -> DataFrame:
     """Undirected canonical form: (min, max) pairs, self-loops dropped."""
     return (
@@ -202,23 +216,17 @@ def connected_components(
         obs.get blocks forever there), fall back — once, then
         permanently for the session — to an explicit two-column agg on
         the checkpointed frame (one extra job per round)."""
-        global _OBSERVE_UNAVAILABLE
         fp_cols = (
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
         )
-        if not _OBSERVE_UNAVAILABLE:
-            obs = Observation()
-            ck = df.observe(obs, *fp_cols).localCheckpoint()  # eager job
-            try:
-                got = _observation_get(obs)
-                return ck, (got["n"], got["h"])
-            except TimeoutError:
-                _OBSERVE_UNAVAILABLE = True
-        else:
+        obs = Observation()
+        if _OBSERVE_UNAVAILABLE:
             ck = df.localCheckpoint()
-        row = ck.agg(*fp_cols).collect()[0]
-        return ck, (row["n"], row["h"])
+        else:
+            ck = df.observe(obs, *fp_cols).localCheckpoint()  # eager job
+        got = _observed_or(obs, lambda: ck.agg(*fp_cols).collect()[0])
+        return ck, (got["n"], got["h"])
 
     e, fp = checkpoint_with_fingerprint(
         _canonical(
@@ -359,10 +367,7 @@ def pagerank(
         .observe(obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    try:
-        n_edges = int(_observation_get(obs)["n"])
-    except TimeoutError:
-        n_edges = e_deg.count()
+    n_edges = int(_observed_or(obs, lambda: {"n": e_deg.count()})["n"])
 
     # Scale-adaptive iteration parallelism (round 18, guide §2.2) — the
     # same sizing rule as connected_components: every iteration's

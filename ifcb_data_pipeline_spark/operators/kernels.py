@@ -1,5 +1,4 @@
-"""Per-image feature kernels in pure numpy — SURVEY §2.9
-U1-U10, U12 (all but the MATLAB-parity raster rotation U11).
+"""Per-image feature kernels in pure numpy — SURVEY §2.9 U1-U12.
 
 Real implementations of the reference's per-ROI feature surface using
 only numpy (the reference computes them with skimage/scipy:
@@ -7,18 +6,20 @@ only numpy (the reference computes them with skimage/scipy:
 ``blob_geometry.py:22-208``, ``perimeter.py:24-104``,
 ``texture.py:9-69``, ``hog.py:8-57``, ``ringwedge.py:13-108``,
 ``biovolume.py:56-158``; formulas are standard image-moment /
-computational-geometry / spectral math).  The U4 surface carries the
-MATLAB-parity pieces the reference specifies exactly: the Benkrid
-weighted perimeter, the shared ``(30203·x) mod 29663`` PRNG, and the
-PRNG-subsampled pairwise-distance stats.  U5 implements BOTH biovolume
-branches (solid-of-revolution and Moberg & Sosik distance-map, float32
-column-major deterministic accumulation) with the reference's
-``area_ratio/ecc/p`` selection rule.  Documented deviations: U1
-segmentation links gradient magnitude rather than phase congruency;
-U11 raster rotation is absent, so the SoR branch projects onto the
-major axis analytically instead of rotating the raster.  Bit-parity
-with historical MATLAB datasets would additionally require the golden
-data absent from this environment.
+computational-geometry / spectral math).  U1 is the reference's
+phase-congruency segmentation chain (:func:`segment_roi_pc`, with the
+phase-congruency map in :mod:`.phasecong`); :func:`segment_roi` keeps a
+gradient-hysteresis variant.  The U4 surface carries the MATLAB-parity
+pieces the reference specifies exactly: the Benkrid weighted perimeter,
+the shared ``(30203·x) mod 29663`` PRNG, and the PRNG-subsampled
+pairwise-distance stats.  U5 implements BOTH biovolume branches
+(solid-of-revolution over the raster rotated by U11, :mod:`.rotation`,
+and Moberg & Sosik distance-map, float32 column-major deterministic
+accumulation) with the reference's ``area_ratio/ecc/p`` selection rule.
+The chain is certified bit-for-bit against fixtures made by executing
+the reference's own Python (``tests/test_golden_*_parity.py``);
+bit-parity with historical MATLAB datasets would additionally require
+golden data made by MATLAB itself.
 
 All functions take a binary mask / grayscale image as a 2-D numpy array
 and return plain floats — deterministic, vectorizable inside the
@@ -399,9 +400,10 @@ def features_from_images(
                 # cropped bbox / branch-selected biovolume + the summed
                 # family — reference-certified bit-for-bit in
                 # tests/test_golden_chain_parity.py.
-                ref = roi_features_ref(mask)
+                blobs = find_blobs_sorted(mask)
+                ref = roi_features_ref(mask, blobs)
                 tex = texture_stats(img, mask)
-                sym = symmetry_features(mask)
+                sym = symmetry_features(mask, blobs)
                 if ringwedge_size and mask.any():
                     # the reference transforms the segmented MASK, not
                     # the grayscale image (all.py:409-418)
@@ -423,7 +425,7 @@ def features_from_images(
                             if k in _KERNEL_FEATURE_COLS
                         },
                         **tex,
-                        **perimeter_pair_stats(mask),
+                        **perimeter_pair_stats(mask, blobs=blobs),
                         **sym,  # b180/b90/bflip + h180/h90/hflip
                         "moment_invariants": hu_moments(mask),
                         "hog": hog_features(img),
@@ -437,37 +439,64 @@ def features_from_images(
 
 # --- connected components (enables U12 summed-over-blobs features) ---------
 
-def label_components(mask: np.ndarray) -> tuple[np.ndarray, int]:
-    """4-connected component labeling (skimage.measure.label equivalent)
-    via vectorized iterative min-label propagation: every on-pixel starts
-    as its own linear index and repeatedly takes the minimum of its
-    4-neighborhood until fixpoint (≤ component-diameter passes, each a
-    handful of whole-array numpy ops — no per-pixel Python loop).
-    Returns (labels, n_components); labels are 1..n in first-pixel
-    (row-major) order, 0 = background."""
-    m = mask.astype(bool)
+# Neighbours a pixel takes its label from, as (dy, dx): the 4-neighbourhood,
+# plus the diagonals for 8-connectivity.
+_NEIGHBOURS_4 = ((-1, 0), (1, 0), (0, -1), (0, 1))
+_NEIGHBOURS_8 = _NEIGHBOURS_4 + ((-1, -1), (-1, 1), (1, -1), (1, 1))
+
+
+def _label(mask: np.ndarray, neighbours) -> tuple[np.ndarray, int]:
+    """Exact connected-component labeling by min-label propagation.
+
+    Every on-pixel starts as its own row-major linear index; background
+    holds the sentinel ``h·w``, above every index.  Each pass lowers
+    every on-pixel to the minimum over its neighbours, in place, through
+    slice views built once (``np.minimum(dst, src, out=dst, where=on)``),
+    then jumps each label to its target's label.  A label is always the
+    index of a pixel in the same component, so the passes reach a fixed
+    point where every component carries its first pixel's index.
+    Compacting those roots gives labels 1..n in first-pixel (row-major)
+    order, 0 = background."""
+    m = np.asarray(mask).astype(bool)
     h, w = m.shape
     if not m.any():
         return np.zeros((h, w), dtype=np.int32), 0
-    ids = (np.arange(h * w, dtype=np.int64) + 1).reshape(h, w)
-    lab = np.where(m, ids, 0)
+    n_px = h * w
+    # flat[n_px] is the sentinel's own slot, so jumping leaves it fixed.
+    flat = np.full(n_px + 1, n_px, dtype=np.int64)
+    on = m.ravel()
+    flat[:n_px][on] = np.flatnonzero(on)
+    lab = flat[:n_px].reshape(h, w)
+    views = []
+    for dy, dx in neighbours:
+        dst = (slice(max(-dy, 0), h - max(dy, 0)), slice(max(-dx, 0), w - max(dx, 0)))
+        src = (slice(max(dy, 0), h - max(-dy, 0)), slice(max(dx, 0), w - max(-dx, 0)))
+        views.append((lab[dst], lab[src], m[dst]))
+    prev = np.empty_like(flat)
     while True:
-        nxt = lab.copy()
-        up = np.vstack([lab[1:, :], np.zeros((1, w), dtype=lab.dtype)])
-        down = np.vstack([np.zeros((1, w), dtype=lab.dtype), lab[:-1, :]])
-        left = np.hstack([lab[:, 1:], np.zeros((h, 1), dtype=lab.dtype)])
-        right = np.hstack([np.zeros((h, 1), dtype=lab.dtype), lab[:, :-1]])
-        for s in (up, down, left, right):
-            np.minimum(nxt, np.where(m & (s > 0), s, nxt), out=nxt)
-        if np.array_equal(nxt, lab):
+        np.copyto(prev, flat)
+        for dst, src, where in views:
+            np.minimum(dst, src, out=dst, where=where)
+        flat[:] = flat[flat]
+        if np.array_equal(prev, flat):
             break
-        lab = nxt
-    # Compact to 1..n; roots are min linear indices ⇒ sorting them gives
-    # first-encounter (row-major) order, matching a classic two-pass pass.
-    roots = np.unique(lab[lab > 0])
+    roots = np.unique(lab[m])
     out = np.zeros((h, w), dtype=np.int32)
     out[m] = np.searchsorted(roots, lab[m]) + 1
     return out, len(roots)
+
+
+def label_components(mask: np.ndarray) -> tuple[np.ndarray, int]:
+    """4-connected component labeling (skimage.measure.label equivalent).
+    Returns (labels, n_components); labels are 1..n in first-pixel
+    (row-major) order, 0 = background."""
+    return _label(mask, _NEIGHBOURS_4)
+
+
+def label_components_8(mask: np.ndarray) -> tuple[np.ndarray, int]:
+    """8-connected variant of :func:`label_components` (the reference's
+    ``find_blobs`` labels with EIGHT connectivity, ``blobs.py:7-10``)."""
+    return _label(mask, _NEIGHBOURS_8)
 
 
 def summed_features(mask: np.ndarray) -> dict[str, float]:
@@ -731,39 +760,30 @@ def fill_holes(mask: np.ndarray) -> np.ndarray:
     touching the border)."""
     inv = ~mask.astype(bool)
     # Pad with background=True so the outer background is one component
-    # touching the border; anything not reaching it is a hole.
-    labels, n = label_components(
-        np.pad(inv, 1, constant_values=True).astype(np.uint8)
-    )
-    border_labels = set(labels[0, :]) | set(labels[-1, :]) | set(
-        labels[:, 0]
-    ) | set(labels[:, -1])
-    holes = (labels[1:-1, 1:-1] > 0) & ~np.isin(
-        labels[1:-1, 1:-1], list(border_labels)
-    )
-    return mask.astype(bool) | holes
+    # holding the first pixel, label 1; every higher label is a hole.
+    labels, _ = label_components(np.pad(inv, 1, constant_values=True))
+    return mask.astype(bool) | (labels[1:-1, 1:-1] > 1)
 
 
 def hysteresis(weak: np.ndarray, strong: np.ndarray) -> np.ndarray:
     """Keep weak components containing at least one strong pixel — the
     fixpoint of the reference's iterative EIGHT-connected dilation growth
     (``morphology.py:22-36``: strong seeds grown through the weak set)."""
-    labels, n = label_components_8(weak.astype(np.uint8))
-    if n == 0:
-        return np.zeros_like(weak, dtype=bool)
-    keep = set(np.unique(labels[strong.astype(bool) & (labels > 0)]))
-    return np.isin(labels, list(keep)) & (labels > 0)
+    labels, n = label_components_8(weak)
+    keep = np.zeros(n + 1, dtype=bool)
+    keep[labels[strong.astype(bool)]] = True
+    keep[0] = False
+    return keep[labels]
 
 
 def remove_small_blobs(mask: np.ndarray, min_area: int = 40) -> np.ndarray:
     """MATLAB ``bwareaopen`` as the reference applies it
     (``segmentation.py:141-153``): 8-connected components below
     ``min_area`` pixels are dropped."""
-    labels, n = label_components_8(mask.astype(np.uint8))
-    keep = [
-        i for i in range(1, n + 1) if np.count_nonzero(labels == i) >= min_area
-    ]
-    return np.isin(labels, keep)
+    labels, _ = label_components_8(mask)
+    keep = np.bincount(labels.ravel(), minlength=1) >= min_area
+    keep[0] = False
+    return keep[labels]
 
 
 def segment_roi(
@@ -1034,9 +1054,9 @@ def segment_roi_pc(
     b = bwmorph_thin(b, 3)
     b = b | kmeans_dark_mask(img)
     b = fill_holes(b)
-    eroded = erode_diamond(b, 1)
-    if remove_small_blobs(eroded, min_area + 1).any():
-        b = eroded
+    kept = remove_small_blobs(erode_diamond(b, 1), min_area + 1)
+    if kept.any():
+        return kept
     return remove_small_blobs(b, min_area + 1)
 
 
@@ -1089,23 +1109,30 @@ def hausdorff_symmetry(rotated: np.ndarray) -> tuple[float, float, float]:
     return h180, h90, hflip
 
 
-def rotated_largest_blob(mask: np.ndarray) -> np.ndarray | None:
+def rotated_largest_blob(
+    mask: np.ndarray, blobs: list[np.ndarray] | None = None
+) -> np.ndarray | None:
     """The largest blob rotated so its major axis is horizontal — the
-    input both symmetry families receive (``all.py:166-171, 276-316``)."""
+    input both symmetry families receive (``all.py:166-171, 276-316``).
+    ``blobs`` is ``find_blobs_sorted(mask)`` when the caller has it."""
     from .rotation import rotate_blob
 
-    blobs = find_blobs_sorted(mask)
+    if blobs is None:
+        blobs = find_blobs_sorted(mask)
     if not blobs:
         return None
     blob = blobs[0]
     return rotate_blob(blob, explicit_orientation(blob))
 
 
-def symmetry_features(mask: np.ndarray) -> dict[str, float]:
+def symmetry_features(
+    mask: np.ndarray, blobs: list[np.ndarray] | None = None
+) -> dict[str, float]:
     """U6 exports over the segmented mask: the reference's binary
     overlap ratios + modified-Hausdorff distances of the rotated largest
-    blob (``all.py:276-316``)."""
-    rotated = rotated_largest_blob(mask)
+    blob (``all.py:276-316``).  ``blobs`` is ``find_blobs_sorted(mask)``
+    when the caller has it."""
+    rotated = rotated_largest_blob(mask, blobs)
     if rotated is None:
         return {
             "symmetry_b180": 0.0, "symmetry_b90": 0.0, "symmetry_bflip": 0.0,
@@ -1248,18 +1275,22 @@ def _scipy_skew_kurtosis(d: np.ndarray) -> tuple[float, float]:
     return float(m3 / m2**1.5), float(m4 / m2**2.0)
 
 
-def perimeter_pair_stats(mask: np.ndarray, max_n: int = 10000) -> dict[str, float]:
+def perimeter_pair_stats(
+    mask: np.ndarray, max_n: int = 10000, blobs: list[np.ndarray] | None = None
+) -> dict[str, float]:
     """U4 pairwise-distance stats in the reference's exact wiring
     (``perimeter.py:42-67``, ``all.py:253-275``): the LARGEST blob's
     perimeter points sorted by ``y·max(x) + x`` (crop coordinates),
     ``min(n², 10000)`` pairs drawn with the shared PRNG, distances
     normalized by that blob's equivalent diameter, summarized with
-    scipy-form biased skewness / Pearson kurtosis."""
+    scipy-form biased skewness / Pearson kurtosis.  ``blobs`` is
+    ``find_blobs_sorted(mask)`` when the caller has it."""
     keys = (
         "perimeter_mean", "perimeter_median",
         "perimeter_skewness", "perimeter_kurtosis",
     )
-    blobs = find_blobs_sorted(mask)
+    if blobs is None:
+        blobs = find_blobs_sorted(mask)
     if not blobs:
         return dict.fromkeys(keys, 0.0)
     blob = blobs[0]
@@ -1512,36 +1543,6 @@ def biovolume_auto(mask: np.ndarray) -> dict[str, float]:
 # form by ~1) — certified against fixtures generated by EXECUTING the
 # reference package (tests/test_golden_chain_parity.py).
 
-def label_components_8(mask: np.ndarray) -> tuple[np.ndarray, int]:
-    """8-connected variant of :func:`label_components` (the reference's
-    ``find_blobs`` labels with EIGHT connectivity, ``blobs.py:7-10``)."""
-    m = mask.astype(bool)
-    h, w = m.shape
-    if not m.any():
-        return np.zeros((h, w), dtype=np.int32), 0
-    ids = (np.arange(h * w, dtype=np.int64) + 1).reshape(h, w)
-    lab = np.where(m, ids, 0)
-    z_col = np.zeros((h, 1), dtype=lab.dtype)
-    z_row = np.zeros((1, w), dtype=lab.dtype)
-    while True:
-        nxt = lab.copy()
-        up = np.vstack([lab[1:, :], z_row])
-        down = np.vstack([z_row, lab[:-1, :]])
-        shifted = [up, down]
-        for base in (lab, up, down):
-            shifted.append(np.hstack([base[:, 1:], z_col]))
-            shifted.append(np.hstack([z_col, base[:, :-1]]))
-        for s in shifted:
-            np.minimum(nxt, np.where(m & (s > 0), s, nxt), out=nxt)
-        if np.array_equal(nxt, lab):
-            break
-        lab = nxt
-    roots = np.unique(lab[lab > 0])
-    out = np.zeros((h, w), dtype=np.int32)
-    out[m] = np.searchsorted(roots, lab[m]) + 1
-    return out, len(roots)
-
-
 def find_blobs_sorted(mask: np.ndarray) -> list[np.ndarray]:
     """Cropped single-component masks, 8-connected, sorted by
     (-area, bbox x0, bbox y0) — the reference's ``find_blobs`` order
@@ -1672,20 +1673,27 @@ def convex_hull_properties_ref(hull: np.ndarray) -> tuple[float, float]:
     return float(perimeter), float(area)
 
 
+# The Feret sweep's angles, 0° to -359° in 1° steps (the reference's
+# per-angle loop, ``blob_geometry.py:193-208``).  cos/sin come from one
+# scalar np.cos/np.sin call per angle, as in that loop, and
+# |cosθ|+|sinθ| is summed per angle the same way.
+_FERET_THETA = np.linspace(0, -359, 360) * (np.pi / 180.0)
+_FERET_COS = np.array([np.cos(t) for t in _FERET_THETA])
+_FERET_SIN = np.array([np.sin(t) for t in _FERET_THETA])
+_FERET_DL = np.array([np.abs(c) + np.abs(s) for c, s in zip(_FERET_COS, _FERET_SIN)])
+
+
 def feret_diameters_ref(hull: np.ndarray) -> tuple[float, float]:
     """(min, max) Feret diameter: 360×1° rotating projection sweep with
     the |cosθ|+|sinθ| pixel-width correction
-    (``blob_geometry.py:193-208``)."""
+    (``blob_geometry.py:193-208``), all angles as one ``(360, n)``
+    projection whose every element takes the loop's IEEE operations."""
     y, x = hull.astype(np.float64).T
-    m = []
-    for theta in np.linspace(0, -359, 360) * (np.pi / 180.0):
-        cos_t, sin_t = np.cos(theta), np.sin(theta)
-        x2 = x * cos_t - y * sin_t
-        # dl summed FIRST — the reference's grouping (a-b)+(c+d); the
-        # left-associated a-b+c+d differs in the last ulp
-        dl = np.abs(cos_t) + np.abs(sin_t)
-        m.append(np.max(x2) - np.min(x2) + dl)
-    return float(np.min(m)), float(np.max(m))
+    x2 = x[None, :] * _FERET_COS[:, None] - y[None, :] * _FERET_SIN[:, None]
+    # dl summed FIRST — the reference's grouping (a-b)+(c+d); the
+    # left-associated a-b+c+d differs in the last ulp
+    m = (x2.max(axis=1) - x2.min(axis=1)) + _FERET_DL
+    return float(m.min()), float(m.max())
 
 
 def blob_features_ref(blob: np.ndarray) -> dict[str, float]:
@@ -1747,11 +1755,15 @@ def blob_features_ref(blob: np.ndarray) -> dict[str, float]:
     }
 
 
-def roi_features_ref(mask: np.ndarray) -> dict[str, float]:
+def roi_features_ref(
+    mask: np.ndarray, blobs: list[np.ndarray] | None = None
+) -> dict[str, float]:
     """``compute_features``' exported set: the largest blob's features +
     numBlobs + the summed-over-blobs family (``all.py:446-545``),
-    including the zero→NaN ratio semantics."""
-    blobs = find_blobs_sorted(mask)
+    including the zero→NaN ratio semantics.  ``blobs`` is
+    ``find_blobs_sorted(mask)`` when the caller has it."""
+    if blobs is None:
+        blobs = find_blobs_sorted(mask)
     if not blobs:
         out = {
             k: 0.0

@@ -56,6 +56,17 @@ FEATURE_SCHEMA = T.StructType(
 _ROIS_PER_TASK = 2048
 
 
+def synthetic_roi_pixels(roi: int):
+    """Deterministic fake pixels of ROI number ``roi`` (uint8, h×w):
+    repeatable across runs and engines; stands in for the .roi slice."""
+    import numpy as np
+
+    w = 8 + (roi % 16)
+    h = 8 + (roi * 3 % 16)
+    px = (roi * 31 + np.arange(w * h)) % 251
+    return px.astype(np.uint8).reshape(h, w)
+
+
 def explode_bins_to_rois(bins: DataFrame, rois_per_bin_col: str = "n_rois") -> DataFrame:
     """Bin → ROI expansion (S2, the only UDTF-shaped operator): one row per
     ROI.  The payload is a real (deterministic) PGM image so downstream
@@ -96,20 +107,15 @@ def explode_bins_to_rois(bins: DataFrame, rois_per_bin_col: str = "n_rois") -> D
     bins = bins.repartition(width)  # round-robin: even bin spread
 
     def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
             out = {"sample": [], "roi_number": [], "image": [], "width": [], "height": []}
             for sample, n in zip(pdf["sample"], pdf[rois_per_bin_col]):
                 for roi in range(1, int(n) + 1):
-                    # Deterministic fake pixels: repeatable across runs and
-                    # engines; stands in for the .roi slice.
-                    w = 8 + (roi % 16)
-                    h = 8 + (roi * 3 % 16)
-                    px = (roi * 31 + np.arange(w * h)) % 251
+                    px = synthetic_roi_pixels(roi)
+                    h, w = px.shape
                     out["sample"].append(sample)
                     out["roi_number"].append(roi)
-                    out["image"].append(encode_pgm(px.astype(np.uint8).reshape(h, w)))
+                    out["image"].append(encode_pgm(px))
                     out["width"].append(w)
                     out["height"].append(h)
             yield pd.DataFrame(out)

@@ -106,14 +106,16 @@ def psd_powerlaw_fit(hist: DataFrame, min_points: int = 3) -> DataFrame:
     )
 
 
-def psd_flags(
-    fits: DataFrame,
+def psd_flag(
+    columns: list[str],
     profile: PsdProfile = PROFILE_PIPELINE,
     bin_width: float = 5.0,
-) -> DataFrame:
-    """Full `ifcb_psd` flag vocabulary over a fits+stats frame.
+) -> Column:
+    """Full `ifcb_psd` flag vocabulary as one column over a fits+stats
+    frame with columns ``columns``: the concatenated flags, NULL when no
+    rule fires.
 
-    ``fits`` must carry the fit columns (``a``, ``k``, ``r_sqr``,
+    The frame must carry the fit columns (``a``, ``k``, ``r_sqr``,
     ``n_bins``); each further rule switches on only when its stat
     columns are present, so callers with fit-only frames (the ingest
     plan) get the fit-based rules and the full u13 query feeds every
@@ -131,7 +133,7 @@ def psd_flags(
     "Beads", …); rules concatenate in a fixed order so the flag
     column is deterministic.
     """
-    cols = set(fits.columns)
+    cols = set(columns)
     p = profile
     rules: list[Column] = [
         F.when(F.col("r_sqr") < p.r_sqr, F.lit("Poor fit")),
@@ -160,9 +162,16 @@ def psd_flags(
         )
     if "humidity" in cols:
         rules.append(F.when(F.col("humidity") > p.humidity, F.lit("Humidity")))
-    return fits.select(
-        "sample", F.concat_ws(", ", *rules).alias("flag")
-    ).withColumn("flag", F.nullif(F.col("flag"), F.lit("")))
+    return F.nullif(F.concat_ws(", ", *rules), F.lit(""))
+
+
+def psd_flags(
+    fits: DataFrame,
+    profile: PsdProfile = PROFILE_PIPELINE,
+    bin_width: float = 5.0,
+) -> DataFrame:
+    """(sample, flag) rows of :func:`psd_flag` over ``fits``."""
+    return fits.select("sample", psd_flag(fits.columns, profile, bin_width).alias("flag"))
 
 
 def psd_fit_pandas(hist: DataFrame, min_points: int = 3) -> DataFrame:

@@ -9,13 +9,36 @@ idempotent; a new delivery of bins processes only the new bins.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.graph import _observed_or
 from ..operators.kernels import features_from_images
 from ..operators.multimodal import explode_bins_to_rois
-from ..operators.psd import psd_flags, psd_powerlaw_fit, size_histogram
+from ..operators.psd import PROFILE_INGEST, psd_flag, psd_powerlaw_fit, size_histogram
 from ..streaming.incremental import CheckpointedJob
+
+# The tick's PSD histogram bin width; the flag rules read peak bins on
+# the same scale.
+PSD_BIN_WIDTH = 2.0
+
+
+def write_psd(features: DataFrame, path: str) -> int:
+    """Append the per-sample PSD power-law fit of ``features``
+    (``sample``, ``EquivDiameter``) with its ingest-profile QC flag to
+    ``path``; returns the number of flagged samples.  Samples are grouped
+    on the bin id string itself, so real ids such as
+    ``D20240423T115846_IFCB127`` work.  The flagged count rides the write
+    as an observed metric, not a second job."""
+    hist = size_histogram(features, "sample", "EquivDiameter", bin_width=PSD_BIN_WIDTH)
+    fits = psd_powerlaw_fit(hist)
+    psd = fits.withColumn(
+        "flag", psd_flag(fits.columns, PROFILE_INGEST, bin_width=PSD_BIN_WIDTH)
+    )
+    obs = Observation()
+    psd.observe(obs, F.count("flag").alias("flagged")).write.mode("append").parquet(path)
+    flagged = psd.where(F.col("flag").isNotNull())
+    return int(_observed_or(obs, lambda: {"flagged": flagged.count()})["flagged"])
 
 
 def ingest_tick(
@@ -40,18 +63,7 @@ def ingest_tick(
     n_rois = features.count()
     features.write.mode("append").parquet(f"{output_dir}/features")
 
-    hist = size_histogram(
-        features.withColumn("sample_key", F.col("sample").cast("long")),
-        "sample_key",
-        "EquivDiameter",
-        bin_width=2.0,
-    )
-    fits = psd_powerlaw_fit(hist)
-    flags = psd_flags(fits)
-    flagged = flags.where(F.col("flag").isNotNull())
-    n_flagged = flagged.count()
-    fits.join(flags, "sample").write.mode("append").parquet(f"{output_dir}/psd")
-
+    n_flagged = write_psd(features, f"{output_dir}/psd")
     job.mark_done(todo.select("sample"))
     features.unpersist()
     todo.unpersist()

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,10 +42,18 @@ class CheckpointedJob:
         self.ledger_path = os.path.join(checkpoint_dir, "ledger")
 
     def ledger(self) -> DataFrame:
+        """The processed keys; empty before the first ``mark_done``.  The
+        declared schema spares a schema-inference job per read.  Only a
+        missing ledger reads as empty: an unreadable one raises, since
+        treating it as empty would re-queue every key and append its
+        output twice."""
+        schema = f"{self.key} string"
         try:
-            return self.spark.read.parquet(self.ledger_path)
-        except Exception:
-            return self.spark.createDataFrame([], f"{self.key} string")
+            return self.spark.read.schema(schema).parquet(self.ledger_path)
+        except AnalysisException as exc:
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
+            return self.spark.createDataFrame([], schema)
 
     def pending(self, candidates: DataFrame) -> DataFrame:
         return new_work(candidates, self.ledger(), self.key)

@@ -63,6 +63,31 @@ def test_get_exception_is_surfaced_not_swallowed():
         _observation_get(_RaisingObs(), timeout_s=5.0)
 
 
+def test_observed_or_latches_after_first_timeout(monkeypatch):
+    """A get that never returns times out once; the session-wide latch
+    then sends every later call straight to its fallback."""
+    from ifcb_data_pipeline_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_OBSERVE_UNAVAILABLE", False)
+    monkeypatch.setattr(
+        graph, "_observation_get",
+        lambda obs: _observation_get(obs, timeout_s=0.2),
+    )
+    assert graph._observed_or(_BlockedObs(), lambda: {"n": 7}) == {"n": 7}
+    assert graph._OBSERVE_UNAVAILABLE
+    t0 = time.monotonic()
+    assert graph._observed_or(_PromptObs(), lambda: {"n": 8}) == {"n": 8}
+    assert time.monotonic() - t0 < 0.1
+
+
+def test_observed_or_passes_delivered_metrics_through(monkeypatch):
+    from ifcb_data_pipeline_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_OBSERVE_UNAVAILABLE", False)
+    assert graph._observed_or(_PromptObs(), lambda: {"fp": 0}) == {"fp": 42}
+    assert not graph._OBSERVE_UNAVAILABLE
+
+
 def test_ringwedge_even_size_rejected():
     """Companion ADVICE-r17 fix: even FFT canvases produce an opaque
     broadcast error deep in the half-plane vstack; the guard must turn

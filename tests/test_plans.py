@@ -13,7 +13,7 @@ from ifcb_data_pipeline_spark.plans.ecotaxa_export import (
     to_ecotaxa_rows,
     write_ecotaxa,
 )
-from ifcb_data_pipeline_spark.plans.ingest_qc import ingest_tick
+from ifcb_data_pipeline_spark.plans.ingest_qc import ingest_tick, write_psd
 from ifcb_data_pipeline_spark.plans.shark_mapping import (
     SHARK_COLUMNS,
     shark_mapping,
@@ -76,3 +76,77 @@ def test_ingest_tick_incremental(spark):
         feats = spark.read.parquet(f"{out}/features")
         assert feats.count() == r1["rois"] + 5
         assert feats.select("sample").distinct().count() == 9
+
+
+def test_ingest_tick_reference_bin_ids(spark):
+    """Real bin ids (not numeric strings) flow through the PSD step: psd
+    ``sample`` is the bin id string, like the features and the ledger,
+    and the flagged count equals the flagged psd rows."""
+    ids = ["D20240423T115846_IFCB127", "D20240423T121213_IFCB127",
+           "D20240424T000512_IFCB134"]
+    bins = spark.createDataFrame(
+        [(s, 24 + 3 * i) for i, s in enumerate(ids)], "sample string, n_rois int"
+    )
+    with tempfile.TemporaryDirectory() as tmp:
+        ckpt, out = f"{tmp}/ckpt", f"{tmp}/out"
+        r1 = ingest_tick(spark, bins, ckpt, out)
+        assert r1["bins"] == 3 and r1["rois"] == 24 + 27 + 30
+        psd = spark.read.parquet(f"{out}/psd")
+        assert psd.columns == ["sample", "n_bins", "a", "k", "r_sqr", "flag"]
+        assert dict(psd.dtypes)["sample"] == "string"
+        rows = psd.collect()
+        assert {r["sample"] for r in rows} <= set(ids)
+        assert r1["psd_flagged"] == sum(r["flag"] is not None for r in rows)
+        ledger = spark.read.parquet(f"{ckpt}/ledger")
+        assert sorted(r["sample"] for r in ledger.collect()) == ids
+        assert ingest_tick(spark, bins, ckpt, out) == {
+            "bins": 0, "rois": 0, "psd_flagged": 0,
+        }
+
+
+def _psd_panel(spark):
+    """One clean and one poorly fitting bin id, as (sample, EquivDiameter)."""
+    clean, poor = "D20240423T115846_IFCB127", "D20240423T121213_IFCB127"
+    rows = []
+    # clean: counts fall as a power law over size bins 1..6
+    for b, n in zip(range(1, 7), (64, 16, 7, 4, 3, 2)):
+        rows += [(clean, 2.0 * b + 0.5)] * n
+    # poor: flat-then-spiky counts, no power law (r² well under 0.5)
+    for b, n in zip(range(1, 7), (3, 9, 3, 9, 3, 9)):
+        rows += [(poor, 2.0 * b + 0.5)] * n
+    features = spark.createDataFrame(rows, "sample string, EquivDiameter double")
+    return clean, poor, features
+
+
+def test_write_psd_counts_flagged_samples(spark):
+    """write_psd fits each bin id's size histogram (2.0-wide bins) and
+    returns the flagged count observed on the write."""
+    clean, poor, features = _psd_panel(spark)
+    with tempfile.TemporaryDirectory() as tmp:
+        assert write_psd(features, f"{tmp}/psd") == 1
+        got = {r["sample"]: r for r in spark.read.parquet(f"{tmp}/psd").collect()}
+    assert set(got) == {clean, poor}
+    assert got[clean]["flag"] is None and got[clean]["r_sqr"] > 0.9
+    assert got[poor]["flag"] == "Poor fit"
+
+
+def test_write_psd_falls_back_once_when_metrics_never_arrive(spark, monkeypatch):
+    """On a runtime whose observe metrics never fire, write_psd counts the
+    flagged rows itself, and the first timeout latches the session-wide
+    fallback: later writes do not wait for the metrics again."""
+    from ifcb_data_pipeline_spark.operators import graph
+
+    waits = []
+
+    def never_delivered(obs, timeout_s=None):
+        waits.append(obs)
+        raise TimeoutError("metrics not delivered")
+
+    monkeypatch.setattr(graph, "_observation_get", never_delivered)
+    monkeypatch.setattr(graph, "_OBSERVE_UNAVAILABLE", False)
+    _, _, features = _psd_panel(spark)
+    with tempfile.TemporaryDirectory() as tmp:
+        assert write_psd(features, f"{tmp}/a") == 1
+        assert len(waits) == 1 and graph._OBSERVE_UNAVAILABLE
+        assert write_psd(features, f"{tmp}/b") == 1
+        assert len(waits) == 1

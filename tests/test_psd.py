@@ -82,6 +82,37 @@ def test_flag_vocabulary_both_profiles(spark):
     assert psd_flags(df65, PROFILE_INGEST).first()["flag"] == "Bubbles"
 
 
+def test_fit_only_flags_equal_in_both_profiles(spark):
+    """The ingest tick flags fit-only frames with the ingest profile at
+    its own 2.0 bin width; on such frames only the fit rules (Poor fit,
+    Beads) exist, and both profiles set them alike."""
+    from ifcb_data_pipeline_spark.operators.psd import (
+        PROFILE_INGEST,
+        PROFILE_PIPELINE,
+        psd_flags,
+    )
+
+    assert (PROFILE_INGEST.r_sqr, PROFILE_INGEST.beads) == (
+        PROFILE_PIPELINE.r_sqr, PROFILE_PIPELINE.beads,
+    )
+    fits = spark.createDataFrame(
+        [("clean", 10, 1.0, -2.0, 0.9), ("poor", 4, 1.0, -2.0, 0.1),
+         ("beads", 6, 1e21, -2.0, 0.9), ("both", 3, 1e21, -1.0, 0.2),
+         ("edge", 5, 1e20, -2.0, 0.5), ("null_r2", 3, 1.0, 0.0, None)],
+        "sample string, n_bins long, a double, k double, r_sqr double",
+    )
+
+    def flags(df) -> dict:
+        return {r["sample"]: r["flag"] for r in df.collect()}
+
+    pipeline = flags(psd_flags(fits))
+    assert flags(psd_flags(fits, PROFILE_INGEST, bin_width=2.0)) == pipeline
+    assert pipeline == {
+        "clean": None, "poor": "Poor fit", "beads": "Beads",
+        "both": "Poor fit, Beads", "edge": None, "null_r2": None,
+    }
+
+
 def test_nls_recovers_exact_power_law(spark):
     from ifcb_data_pipeline_spark.operators.psd import psd_fit_nls
 

@@ -3,8 +3,10 @@ re-runs (SURVEY §2.10 I1-I4)."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from ifcb_data_pipeline_spark.streaming.incremental import (
@@ -46,6 +48,43 @@ def test_checkpointed_job_empty_ledger(spark):
         job = CheckpointedJob(spark, tmp, "key")
         cand = spark.createDataFrame([("x",)], ["key"])
         assert job.pending(cand).count() == 1
+
+
+def test_checkpointed_job_missing_ledger_reads_empty(spark):
+    with tempfile.TemporaryDirectory() as tmp:
+        job = CheckpointedJob(spark, tmp, "key")
+        ledger = job.ledger()
+        assert ledger.schema.simpleString() == "struct<key:string>"
+        assert ledger.count() == 0
+
+
+def test_checkpointed_job_corrupt_ledger_raises(spark):
+    """An unreadable ledger must not read as empty: that would re-queue
+    every key and append its output a second time."""
+    with tempfile.TemporaryDirectory() as tmp:
+        job = CheckpointedJob(spark, tmp, "key")
+        os.makedirs(job.ledger_path)
+        with open(os.path.join(job.ledger_path, "part-00000.parquet"), "wb") as f:
+            f.write(b"not a parquet file")
+        cand = spark.createDataFrame([("x",)], ["key"])
+        with pytest.raises(Exception, match="(?i)parquet"):
+            job.pending(cand).count()
+
+
+def test_checkpointed_job_ledger_read_runs_no_job(spark):
+    """The ledger is read with its declared schema, so defining the
+    pending frame starts no schema-inference job."""
+    with tempfile.TemporaryDirectory() as tmp:
+        job = CheckpointedJob(spark, tmp, "key")
+        job.mark_done(spark.createDataFrame([("a",), ("b",)], ["key"]))
+        sc = spark.sparkContext
+        sc.setJobGroup("ledger-read", "ledger read")
+        try:
+            pending = job.pending(spark.createDataFrame([("a",), ("c",)], ["key"]))
+            assert sc.statusTracker().getJobIdsForGroup("ledger-read") == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert [r["key"] for r in pending.collect()] == ["c"]
 
 
 def test_undelivered_recent_short_circuit(spark):
