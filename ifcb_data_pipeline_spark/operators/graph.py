@@ -5,22 +5,17 @@ The reference resolves duplicate groups with per-file hash equality
 closure never exceeds one hash bucket there.  A fuzzy-dedup pair graph
 (LSH collisions, containment pairs) *does* chain: A~B, B~C with A≁C, and
 a 100 TB corpus can produce million-node near-dup chains (boilerplate
-families, serial crawls).  Two closure strategies live in this package:
+families, serial crawls).  :func:`connected_components` is the package's
+one closure (dd6, dd7 and dd13 all label through it): alternating
+large-star / small-star contraction (Kiveris et al., *Connected
+Components in MapReduce and Beyond*, ACM SoCC'14).  Each round is two
+window-min stages over the current edge set, and the edge set contracts
+to a star forest rooted at component minima in **O(log n)** rounds
+regardless of diameter — a 1M-node chain needs ~20 rounds here versus
+~1M for min-label propagation.  Once the edge set fits one
+advisory-sized partition, a single task finishes the contraction.
 
-* ``queries.dedup._lsh_cluster_labels`` — min-label propagation, one
-  join per round, converges in O(component diameter) rounds.  Right
-  when components are compact (the LSH-collision common case).
-* :func:`connected_components` (here) — alternating large-star /
-  small-star contraction (Kiveris et al., *Connected Components in
-  MapReduce and Beyond*, ACM SoCC'14).  Each round is two
-  groupBy-min + join stages over the current edge set, and the edge set
-  contracts to a star forest rooted at component minima in **O(log n)**
-  rounds regardless of diameter — a 1M-node chain needs ~20 rounds
-  here versus ~1M for propagation.  This is the 100 TB-safe default
-  when component shape is unknown.
-
-Both return the same labeling (component minimum), so they are
-interchangeable and cross-checkable.  :func:`pagerank` (fixed-iteration
+:func:`pagerank` (fixed-iteration
 link analysis — the crawl-side quality signal) shares the same iterative
 discipline: per-iteration key-partitioned joins with localCheckpoint-ed
 O(1) lineage.
@@ -30,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from .skew import _parse_bytes
 
 # Flipped (permanently, per session) the first time an Observation fails
 # to deliver within the timeout — e.g. a runtime where the eager
@@ -86,6 +83,21 @@ def _observed_or(obs: Observation, fallback):
         except TimeoutError:
             _OBSERVE_UNAVAILABLE = True
     return fallback()
+
+
+# Round cap of :func:`connected_components`: O(log n) star rounds label
+# any graph this engine builds long before it.
+_MAX_ROUNDS = 25
+
+
+def _advisory_bytes(spark) -> int:
+    """The AQE advisory partition size in bytes (64 MB when unset or
+    unparseable) — the sizing input of the iteration exchanges."""
+    try:
+        return _parse_bytes(spark.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
+    except Exception:
+        return 64 << 20
 
 
 def _canonical(e: DataFrame) -> DataFrame:
@@ -182,18 +194,18 @@ def _local_components(e: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 25,
     _round_counter: list | None = None,
     local_finish_edges: int | None = None,
 ) -> DataFrame:
     """Label every non-isolated node with its component's minimum node id.
 
-    ``edges`` is an undirected edge list (direction and duplicates are
-    ignored).  Returns ``(node long, cluster long)`` for every node that
-    appears in ``edges``; isolated nodes are the caller's to union in
-    (they are singleton components by definition).
+    ``edges`` is an undirected ``(src, dst)`` edge list (direction and
+    duplicates are ignored).  Returns ``(node long, cluster long)`` for
+    every node that appears in ``edges``; isolated nodes are the
+    caller's to union in (they are singleton components by definition).
+    ``local_finish_edges`` overrides the edge count at or below which a
+    single task finishes the contraction (``0`` forces star rounds to
+    the fixpoint); ``_round_counter`` receives the star rounds run.
 
     Scale design: each star is ONE key-partitioned window shuffle over
     the *current* edge set (window-min, not groupBy + join back), the
@@ -202,7 +214,7 @@ def connected_components(
     fingerprint rides that checkpoint job as an ``observe`` metric — so
     each two-pair round costs exactly ONE Spark job.  Convergence is
     detected by the (count, bit_xor-of-xxhash64) fingerprint and then
-    *proven* with an exact two-way subtract before exiting, so a
+    *proven* with an exact anti-join before exiting, so a
     fingerprint collision can never return early with a wrong labeling.
     """
     def checkpoint_with_fingerprint(df: DataFrame):
@@ -231,8 +243,8 @@ def connected_components(
     e, fp = checkpoint_with_fingerprint(
         _canonical(
             edges.select(
-                F.col(src).cast("long").alias("u"),
-                F.col(dst).cast("long").alias("v"),
+                F.col("src").cast("long").alias("u"),
+                F.col("dst").cast("long").alias("v"),
             )
         )
     )
@@ -249,14 +261,8 @@ def connected_components(
     # (never capped by the session default: if the derived count exceeds
     # it, the data genuinely needs more).  Restored in finally so only
     # the iteration runs resized.
-    from .skew import _parse_bytes
-
     spark = edges.sparkSession
-    try:
-        advisory = _parse_bytes(spark.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
-    except Exception:
-        advisory = 64 << 20
+    advisory = _advisory_bytes(spark)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
 
     def _iter_parts(n_edges: int) -> int:
@@ -289,7 +295,7 @@ def connected_components(
     rounds_done = 0
     converged = False
     try:
-        while rounds_done < max_rounds:
+        while rounds_done < _MAX_ROUNDS:
             if fp[0] <= local_finish_edges:
                 if _round_counter is not None:
                     _round_counter.append(rounds_done)
@@ -318,7 +324,7 @@ def connected_components(
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
+            f"connected_components did not converge in {_MAX_ROUNDS} rounds"
         )
 
     # Star forest: every edge is (leaf > root); roots label themselves.
@@ -378,14 +384,8 @@ def pagerank(
     # 1e-6 on output (finite-decimal rule), and the adversarial
     # partition-count sweeps pin exactly this axis.  Restored in
     # finally; only the fixed-iteration loop runs resized.
-    from .skew import _parse_bytes
-
     spark = edges.sparkSession
-    try:
-        advisory = _parse_bytes(spark.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
-    except Exception:
-        advisory = 64 << 20
+    advisory = _advisory_bytes(spark)
     iter_parts = max(1, -(-max(n_edges, n) * 48 // max(advisory, 1 << 20)))
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
 

@@ -21,6 +21,7 @@ from ..operators.dedup import (
     shingle_sets,
     simhash,
 )
+from ..operators.graph import connected_components
 from ..operators.text import STOPWORDS as _TEXT_STOPWORDS
 from . import register
 from ._util import dround, dround_sql, fan_out, tables
@@ -316,9 +317,10 @@ def dd5_embedding_cosine_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- DD6: duplicate-cluster assignment (connected components) --------------
 # Near-dup pairs from the LSH stage are edges; each doc gets its
-# cluster's min doc id as label.  Spark side: iterative min-label
-# propagation (converges in <= diameter rounds; pair graphs from dedup
-# are tiny relative to the corpus).  Oracle: recursive CTE closure.
+# cluster's min doc id as label.  Spark side: the package's one closure,
+# operators/graph.connected_components (star contraction, finished in a
+# single task once the edge set fits one partition — pair graphs from
+# dedup are tiny relative to the corpus).  Oracle: recursive CTE closure.
 DD6_SQL = f"""
 WITH {SHINGLES_SQL.strip()},
 hw AS (
@@ -367,79 +369,8 @@ def _lsh_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded = banded_signatures(sigs, bands=8, num_hashes=16)
     a = banded.select(F.col("doc").alias("src"), "band", "sig")
     b = banded.select(F.col("doc").alias("dst"), "band", "sig")
-    edges = (
-        a.join(b, ["band", "sig"])
-        .where(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .dropDuplicates()
-    )
-    bi = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).dropDuplicates()
-    # Materialize the collision graph ONCE — localCheckpoint truncates the
-    # corpus→shingle→minhash→band lineage so each propagation round joins
-    # the small edge set instead of recomputing the whole LSH chain, and
-    # its blocks are context-cleaned when the plan is dropped (no cache
-    # leak across invocations).
-    bi = bi.localCheckpoint()
-    # Size-gated hybrid: the collision graph is |LSH-colliding docs| ≪
-    # |corpus| by construction.  When it fits comfortably on the driver
-    # (the common case even at 100 TB corpus scale — collisions are the
-    # rare event), a single collect + union-find beats N propagation
-    # rounds of (join + count) job overhead.  The distributed min-label
-    # loop below remains the fallback for pathological duplication.
-    n_edges = bi.count()
-    if n_edges <= 1_000_000:
-        parent: dict = {}
-
-        def find(a):
-            root = a
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(a, a) != a:
-                parent[a], a = root, parent[a]
-            return root
-
-        for row in bi.collect():
-            ra, rb = find(row.src), find(row.dst)
-            if ra != rb:
-                lo, hi = min(ra, rb), max(ra, rb)
-                parent[hi] = lo
-        nodes = set(parent) | {row.src for row in bi.select("src").dropDuplicates().collect()}
-        data = [(int(n), int(find(n))) for n in sorted(nodes)]
-        return spark.createDataFrame(data, "node long, cluster long")
-    # Min-label propagation to fixpoint (edge set is small: only docs
-    # that collided in LSH; each round is one broadcast-scale join).
-    labels = bi.select("src").dropDuplicates().select(
-        F.col("src").alias("node"), F.col("src").alias("cluster")
-    ).cache()
-    while True:
-        neighbor_min = (
-            bi.join(labels, bi.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("cluster").alias("n_cluster"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster"), F.coalesce(F.col("n_cluster"), F.col("cluster"))
-                ).alias("cluster"),
-            )
-            .cache()
-        )
-        changed = (
-            updated.alias("u")
-            .join(labels.alias("l"), "node")
-            .where(F.col("u.cluster") != F.col("l.cluster"))
-            .count()
-        )
-        labels.unpersist()
-        labels = updated
-        if changed == 0:
-            break
-    return labels
+    edges = a.join(b, ["band", "sig"]).where(F.col("src") < F.col("dst"))
+    return connected_components(edges)
 
 
 @register("dd6_dup_clusters", DD6_SQL, survey_ref="north-star dedup: connected-component cluster labels")
@@ -912,11 +843,10 @@ def dd12_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- DD13: connected components via star contraction -----------------------
-# The dup graphs dd6 labels are LSH-collision graphs — compact components
-# where min-label propagation's O(diameter) round count is fine.  dd13
-# exercises the opposite regime: a deterministic CHAIN-shaped graph
+# dd6 runs the same closure on LSH-collision graphs — compact components.
+# dd13 exercises the opposite regime: a deterministic CHAIN-shaped graph
 # (doc i — doc i+1 inside 50-doc blocks, plus sparse +150 bridges merging
-# blocks) where propagation would need ~diameter rounds but the
+# blocks) where min-label propagation would need ~diameter rounds but the
 # large-star/small-star contraction (operators/graph.py) converges in
 # O(log n).  Oracle: recursive-CTE closure — algorithm-independent.
 DD13_SQL = """
@@ -949,8 +879,6 @@ FROM closure c JOIN sizes s USING (cluster)
 
 @register("dd13_star_components", DD13_SQL, survey_ref="beyond reference: O(log n)-round connected components (Kiveris et al. SoCC'14); generalizes 03_delete_duplicates.R:28-60 transitive closure")
 def dd13_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import connected_components
-
     (documents,) = tables(spark, sf_dir, "documents")
     nodes = documents.select(F.col("doc_id").alias("node"))
     chain = nodes.where(F.col("node") % 50 != 49).select(

@@ -147,9 +147,8 @@ def _scan() -> dict[tuple[str, str], int]:
 # (file, innermost enclosing function, action) -> site count.  Every
 # entry is a previously adjudicated BOUNDED driver action (the judge's
 # per-round .collect() audit list): 1-row aggregates/fingerprints,
-# distinct-name frames bounded by the taxonomy, 2-row template metadata,
-# or the size-gated union-find (explicit 1M-edge gate with a distributed
-# fallback).  A driver action on a content-scaled frame is the
+# distinct-name frames bounded by the taxonomy, or 2-row template
+# metadata.  A driver action on a content-scaled frame is the
 # "operator isn't distributed" failure class — new sites fail here until
 # the bound is argued.
 ACTION_INVENTORY: dict[tuple[str, str, str], int] = {
@@ -165,7 +164,6 @@ ACTION_INVENTORY: dict[tuple[str, str, str], int] = {
     ("operators/multimodal.py", "explode_bins_to_rois", "first"): 1,
     ("operators/resolver.py", "resolve_and_broadcast", "collect"): 1,  # distinct names
     ("operators/windows.py", "gap_fill", "first"): 1,
-    ("queries/dedup.py", "_lsh_cluster_labels", "collect"): 2,  # size-gated union-find
     ("queries/dedup.py", "dd16_quality_survivor", "collect"): 1,  # 1-row max-id
     ("queries/dedup.py", "dd19_repeated_ngram_spans", "first"): 1,
     ("queries/dedup.py", "variant_offset", "collect"): 1,  # 1-row max-id

@@ -4150,28 +4150,12 @@ def test_a14_monthly_histogram_replay(spark):
 # --- dd6/dd7: LSH clusters via union-find replay ----------------------------
 
 
-def _uf_components(edges, nodes):
-    parent = {n: n for n in nodes}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {n: find(n) for n in nodes}
-
-
 def test_dd6_dup_clusters_unionfind_replay(spark):
     got = _run(spark, "dd6_dup_clusters")
     candidates, _ = _lsh_minhash_replay()
     edges = candidates(8, 2)
     nodes = sorted({n for e in edges for n in e})
-    comp = _uf_components(edges, nodes)
+    comp = _union_find_components(edges, nodes)
     from collections import Counter
 
     sizes = Counter(comp.values())
@@ -4190,7 +4174,7 @@ def test_dd7_dedup_materialize_replay(spark):
     candidates, _ = _lsh_minhash_replay()
     edges = candidates(8, 2)
     nodes = sorted({n for e in edges for n in e})
-    comp = _uf_components(edges, nodes)
+    comp = _union_find_components(edges, nodes)
     corpus, _, _ = _replay_corpus_shingles()
     assert len(got) == len(corpus)
     for r in got.itertuples():
