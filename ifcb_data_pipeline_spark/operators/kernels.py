@@ -8,18 +8,20 @@ only numpy (the reference computes them with skimage/scipy:
 ``biovolume.py:56-158``; formulas are standard image-moment /
 computational-geometry / spectral math).  U1 is the reference's
 phase-congruency segmentation chain (:func:`segment_roi_pc`, with the
-phase-congruency map in :mod:`.phasecong`); :func:`segment_roi` keeps a
-gradient-hysteresis variant.  The U4 surface carries the MATLAB-parity
-pieces the reference specifies exactly: the Benkrid weighted perimeter,
-the shared ``(30203·x) mod 29663`` PRNG, and the PRNG-subsampled
-pairwise-distance stats.  U5 implements BOTH biovolume branches
-(solid-of-revolution over the raster rotated by U11, :mod:`.rotation`,
-and Moberg & Sosik distance-map, float32 column-major deterministic
-accumulation) with the reference's ``area_ratio/ecc/p`` selection rule.
-The chain is certified bit-for-bit against fixtures made by executing
-the reference's own Python (``tests/test_golden_*_parity.py``);
-bit-parity with historical MATLAB datasets would additionally require
-golden data made by MATLAB itself.
+phase-congruency map in :mod:`.phasecong`).  The U4 surface carries the
+MATLAB-parity pieces the reference specifies exactly: the Benkrid
+weighted perimeter, the shared ``(30203·x) mod 29663`` PRNG, and the
+PRNG-subsampled pairwise-distance stats.  U5 implements BOTH biovolume
+branches (solid-of-revolution over the raster rotated by U11,
+:mod:`.rotation`, and Moberg & Sosik distance-map, float32 column-major
+deterministic accumulation) with the reference's ``area_ratio/ecc/p``
+selection rule.  The chain is certified bit-for-bit against fixtures
+made by executing the reference's own Python
+(``tests/test_golden_*_parity.py``), except the values that go through
+``np.linalg`` (HOG, the ellipse minor axis and eccentricity), which
+match within stated ulp bounds because BLAS/LAPACK kernels differ by
+CPU; bit-parity with historical MATLAB datasets would additionally
+require golden data made by MATLAB itself.
 
 All functions take a binary mask / grayscale image as a 2-D numpy array
 and return plain floats — deterministic, vectorizable inside the
@@ -33,121 +35,6 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-
-
-# --- U2: moment-based blob geometry ---------------------------------------
-
-def blob_geometry(mask: np.ndarray) -> dict[str, float]:
-    """Area, centroid, bbox/extent, equivalent diameter, ellipse fit
-    (major/minor/eccentricity/orientation from central moments)
-    — reference surface: ``blob_geometry.py:22-86``."""
-    ys, xs = np.nonzero(mask)
-    area = float(len(xs))
-    if area == 0:
-        return {k: 0.0 for k in (
-            "Area", "EquivDiameter", "Extent", "MajorAxisLength",
-            "MinorAxisLength", "Eccentricity", "Orientation",
-            "BoundingBox_xwidth", "BoundingBox_ywidth",
-        )}
-    cx, cy = xs.mean(), ys.mean()
-    # Central second moments with the 1/12 pixel-variance correction
-    # (MATLAB regionprops convention).
-    mxx = ((xs - cx) ** 2).mean() + 1 / 12
-    myy = ((ys - cy) ** 2).mean() + 1 / 12
-    mxy = ((xs - cx) * (ys - cy)).mean()
-    common = math.sqrt((mxx - myy) ** 2 + 4 * mxy**2)
-    major = 2 * math.sqrt(2) * math.sqrt(mxx + myy + common)
-    minor = 2 * math.sqrt(2) * math.sqrt(max(mxx + myy - common, 0.0))
-    ecc = math.sqrt(1 - (minor / major) ** 2) if major > 0 else 0.0
-    if mxy == 0:
-        orient = 0.0 if mxx >= myy else 90.0
-    else:
-        orient = math.degrees(math.atan2(2 * mxy, mxx - myy) / 2)
-    bb_x = float(xs.max() - xs.min() + 1)
-    bb_y = float(ys.max() - ys.min() + 1)
-    return {
-        "Area": area,
-        "EquivDiameter": math.sqrt(4 * area / math.pi),
-        "Extent": area / (bb_x * bb_y),
-        "MajorAxisLength": major,
-        "MinorAxisLength": minor,
-        "Eccentricity": ecc,
-        "Orientation": orient,
-        "BoundingBox_xwidth": bb_x,
-        "BoundingBox_ywidth": bb_y,
-    }
-
-
-# --- U3: convex hull (monotone chain) + hull metrics -----------------------
-
-def convex_hull(points: np.ndarray) -> np.ndarray:
-    """Andrew's monotone chain; points (N,2) → hull vertices CCW."""
-    pts = np.unique(points, axis=0)
-    if len(pts) <= 2:
-        return pts
-    pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
-
-    def cross(o, a, b):
-        return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
-
-    lower: list[np.ndarray] = []
-    for p in pts:
-        while len(lower) >= 2 and cross(lower[-2], lower[-1], p) <= 0:
-            lower.pop()
-        lower.append(p)
-    upper: list[np.ndarray] = []
-    for p in pts[::-1]:
-        while len(upper) >= 2 and cross(upper[-2], upper[-1], p) <= 0:
-            upper.pop()
-        upper.append(p)
-    return np.array(lower[:-1] + upper[:-1], dtype=float)
-
-
-def hull_metrics(mask: np.ndarray) -> dict[str, float]:
-    """ConvexArea (shoelace + half-pixel rasterization correction),
-    ConvexPerimeter, Feret diameters — reference surface:
-    ``blob_geometry.py:145-208``."""
-    ys, xs = np.nonzero(mask)
-    if len(xs) == 0:
-        return {"ConvexArea": 0.0, "ConvexPerimeter": 0.0,
-                "maxFeretDiameter": 0.0, "minFeretDiameter": 0.0}
-    hull = convex_hull(np.column_stack([xs, ys]))
-    if len(hull) < 3:
-        span = math.dist(hull[0], hull[-1]) if len(hull) == 2 else 0.0
-        return {"ConvexArea": float(len(xs)), "ConvexPerimeter": 2 * span,
-                "maxFeretDiameter": span + 1, "minFeretDiameter": 1.0}
-    x, y = hull[:, 0], hull[:, 1]
-    shoelace = 0.5 * abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1)))
-    per = float(np.sum(np.hypot(np.diff(np.append(x, x[0])),
-                                np.diff(np.append(y, y[0])))))
-    # Rotating-caliper Feret diameters over 1° steps.
-    d = hull - hull.mean(axis=0)
-    angles = np.radians(np.arange(0, 180))
-    cos, sin = np.cos(angles), np.sin(angles)
-    proj = d[:, 0][:, None] * cos[None, :] + d[:, 1][:, None] * sin[None, :]
-    widths = proj.max(axis=0) - proj.min(axis=0) + 1  # pixel-width corrected
-    return {
-        "ConvexArea": float(shoelace + per / 2 + 1),  # rasterized hull area
-        "ConvexPerimeter": per,
-        "maxFeretDiameter": float(widths.max()),
-        "minFeretDiameter": float(widths.min()),
-    }
-
-
-# --- U4: perimeter estimate ------------------------------------------------
-
-def perimeter_estimate(mask: np.ndarray) -> float:
-    """Boundary length from 4-connected edge crossings (the reference uses
-    a weighted 3×3 Benkrid kernel, ``perimeter.py:24-67``; this estimator
-    counts exposed pixel edges, exact for axis-aligned shapes)."""
-    m = mask.astype(bool)
-    padded = np.pad(m, 1)
-    edges = 0
-    edges += np.count_nonzero(padded[1:-1, 1:-1] & ~padded[:-2, 1:-1])
-    edges += np.count_nonzero(padded[1:-1, 1:-1] & ~padded[2:, 1:-1])
-    edges += np.count_nonzero(padded[1:-1, 1:-1] & ~padded[1:-1, :-2])
-    edges += np.count_nonzero(padded[1:-1, 1:-1] & ~padded[1:-1, 2:])
-    return float(edges)
 
 
 # --- U7: texture statistics ------------------------------------------------
@@ -348,31 +235,26 @@ KERNEL_FEATURE_SCHEMA = (
 )
 
 
-def features_from_images(
-    rois,
-    threshold: int = 128,
-    segment: bool | str = "pc",
-    ringwedge_size: int | None = 65,
-):
+# U10's FFT canvas on the kernel path.
+# PARITY NOTE (ADVICE r17): Ring/Wedge values are reference-certified
+# ONLY at size=301 — the reference's kaccie masks are pinned to a 301
+# canvas regardless of input dim (``ringwedge.py:79``).  65 is a
+# profiling shape for the tiny synthetic panel payloads (mm1/mm2/mm2b/mm6
+# bake their oracles at the same 65), NOT a parity value: a
+# production-parity export needs 301 here (must stay odd).
+RINGWEDGE_SIZE = 65
+
+
+def features_from_images(rois):
     """Real U1-U12 features over ROI byte images.
 
-    The default runs the reference's full chain: U1 phase-congruency
-    segmentation (``segment="pc"``) → U2/U3 geometry → U4 Benkrid
-    perimeter + pair stats → U5 shape-adaptive biovolume (U11 rotation
-    inside the SoR branch) → U6 symmetry → U7 texture → U8 Hu moments →
-    U9 HOG → U10 ring/wedge → U12 summed-over-blobs.  ``segment=True``
-    selects the gradient-hysteresis variant, ``segment=False`` a fixed
-    threshold; ``ringwedge_size`` shrinks U10's FFT canvas from the
-    reference's 301 (right for full-size ROIs, wasteful for the tiny
-    synthetic payloads; must stay odd) and ``None`` skips it.
-    PARITY NOTE (ADVICE r17): Ring/Wedge values are reference-certified
-    ONLY at size=301 — the reference's kaccie masks are pinned to a 301
-    canvas regardless of input dim (``ringwedge.py:79``), so the
-    default 65 is a profiling shape for the tiny synthetic panel
-    payloads (mm1/mm2/mm2b/mm6 bake their oracles at the same 65), NOT
-    a parity value.  Any production-parity export path must pass
-    ``ringwedge_size=301``.
-    Arrow-batched; one python call per batch, numpy inside.
+    Runs the reference's full chain: U1 phase-congruency segmentation
+    (:func:`segment_roi_pc`) → U2/U3 geometry → U4 Benkrid perimeter +
+    pair stats → U5 shape-adaptive biovolume (U11 rotation inside the
+    SoR branch) → U6 symmetry → U7 texture → U8 Hu moments → U9 HOG →
+    U10 ring/wedge on a :data:`RINGWEDGE_SIZE` canvas → U12
+    summed-over-blobs.  Arrow-batched; one python call per batch, numpy
+    inside.
 
     Family forms are the reference's exact estimators, certified
     bit-for-bit against reference-executed fixtures in
@@ -389,12 +271,7 @@ def features_from_images(
                 pdf["sample"], pdf["roi_number"], pdf["image"], pdf["width"], pdf["height"]
             ):
                 img = decode_image(bytes(blob), w, h)
-                if segment == "pc":
-                    mask = segment_roi_pc(img)
-                elif segment:
-                    mask = segment_roi(img)
-                else:
-                    mask = img > threshold
+                mask = segment_roi_pc(img)
                 # compute_features-faithful chain (all.py:446-545): the
                 # largest blob's cov-form ellipse / Heron hull / Feret /
                 # cropped bbox / branch-selected biovolume + the summed
@@ -404,17 +281,15 @@ def features_from_images(
                 ref = roi_features_ref(mask, blobs)
                 tex = texture_stats(img, mask)
                 sym = symmetry_features(mask, blobs)
-                if ringwedge_size and mask.any():
+                if mask.any():
                     # the reference transforms the segmented MASK, not
                     # the grayscale image (all.py:409-418)
-                    rw = ringwedge_features(mask, size=ringwedge_size)
+                    rw = ringwedge_features(mask, size=RINGWEDGE_SIZE)
                     ring_wedge = [
                         *rw["Ring"], *rw["Wedge"], rw["RWcenter2total_powerratio"],
                     ]
-                elif ringwedge_size:
-                    ring_wedge = [0.0] * 99
                 else:
-                    ring_wedge = []
+                    ring_wedge = [0.0] * 99
                 rows.append(
                     {
                         "sample": sample,
@@ -497,49 +372,6 @@ def label_components_8(mask: np.ndarray) -> tuple[np.ndarray, int]:
     """8-connected variant of :func:`label_components` (the reference's
     ``find_blobs`` labels with EIGHT connectivity, ``blobs.py:7-10``)."""
     return _label(mask, _NEIGHBOURS_8)
-
-
-def summed_features(mask: np.ndarray) -> dict[str, float]:
-    """U12: features over ALL blobs (largest-blob features come from U2;
-    the reference sums per-blob values in float64,
-    ``ifcb_features/all.py:446-538``) plus ratio features with 0-guards."""
-    labels, n = label_components(mask)
-    summed_area = 0.0
-    summed_perimeter = 0.0
-    summed_convex_area = 0.0
-    summed_convex_perimeter = 0.0
-    summed_major = 0.0
-    summed_minor = 0.0
-    for i in range(1, n + 1):
-        blob = labels == i
-        g = blob_geometry(blob)
-        hm = hull_metrics(blob)
-        summed_area += g["Area"]
-        summed_perimeter += perimeter_estimate(blob)
-        summed_convex_area += hm["ConvexArea"]
-        summed_convex_perimeter += hm["ConvexPerimeter"]
-        summed_major += g["MajorAxisLength"]
-        summed_minor += g["MinorAxisLength"]
-    return {
-        "numBlobs": float(n),
-        "summedArea": summed_area,
-        "summedPerimeter": summed_perimeter,
-        "summedConvexArea": summed_convex_area,
-        "summedConvexPerimeter": summed_convex_perimeter,
-        "summedMajorAxisLength": summed_major,
-        "summedMinorAxisLength": summed_minor,
-        "Area_over_PerimeterSquared": (
-            summed_area / summed_perimeter**2 if summed_perimeter else float("nan")
-        ),
-        "Area_over_Perimeter": (
-            summed_area / summed_perimeter if summed_perimeter else float("nan")
-        ),
-        "summedConvexPerimeter_over_Perimeter": (
-            summed_convex_perimeter / summed_perimeter
-            if summed_perimeter
-            else float("nan")
-        ),
-    }
 
 
 # --- U9: HOG (histogram of oriented gradients) -----------------------------
@@ -740,20 +572,7 @@ def ringwedge_features(
     }
 
 
-# --- U1: segmentation (gradient-hysteresis variant) ------------------------
-
-def _dilate3(m: np.ndarray) -> np.ndarray:
-    p = np.pad(m.astype(bool), 1)
-    out = np.zeros_like(p)
-    for dy in (-1, 0, 1):
-        for dx in (-1, 0, 1):
-            out |= np.roll(np.roll(p, dy, 0), dx, 1)
-    return out[1:-1, 1:-1]
-
-
-def _erode3(m: np.ndarray) -> np.ndarray:
-    return ~_dilate3(~m.astype(bool))
-
+# --- U1 helpers: hole fill, hysteresis, small-blob removal -----------------
 
 def fill_holes(mask: np.ndarray) -> np.ndarray:
     """Fill enclosed background regions (holes = inverse components not
@@ -786,30 +605,7 @@ def remove_small_blobs(mask: np.ndarray, min_area: int = 40) -> np.ndarray:
     return keep[labels]
 
 
-def segment_roi(
-    img: np.ndarray,
-    t_strong: float = 0.3,
-    t_weak: float = 0.09,
-    min_area: int = 40,
-) -> np.ndarray:
-    """U1 blob mask: gradient-magnitude hysteresis (thresholds as
-    fractions of the max gradient — the reference thresholds its phase
-    congruency map at 0.3/0.09, ``segmentation.py:14-17``) → binary
-    closing → hole fill → erosion → small-blob removal."""
-    g = img.astype(np.float64)
-    gy, gx = np.gradient(g)
-    mag = np.hypot(gx, gy)
-    if mag.max() == 0:
-        return np.zeros_like(img, dtype=bool)
-    mag = mag / mag.max()
-    linked = hysteresis(mag >= t_weak, mag >= t_strong)
-    closed = _erode3(_dilate3(linked))
-    filled = fill_holes(closed)
-    eroded = _erode3(filled)
-    return remove_small_blobs(eroded, min_area=min_area)
-
-
-# --- U1 (full): phase-congruency segmentation chain ------------------------
+# --- U1: phase-congruency segmentation chain -------------------------------
 
 def _shift_or(mask: np.ndarray, offsets: list[tuple[int, int]]) -> np.ndarray:
     """OR of the mask shifted by each (dy, dx) — generic dilation core."""
@@ -1146,42 +942,6 @@ def symmetry_features(
     }
 
 
-# --- U5: solid-of-revolution biovolume -------------------------------------
-
-def biovolume_sor(mask: np.ndarray) -> dict[str, float]:
-    """Solid-of-revolution biovolume: pixels are projected onto the
-    blob's major axis; each unit slice contributes a circular
-    cross-section ``π/4·w²`` where ``w`` is the chord length (pixel count
-    of the slice — exact for convex blobs).  This is the reference's SoR
-    branch (``biovolume.py:56-158``; selected over the distance-map
-    method for near-symmetric shapes); the representative width is the
-    mean chord.  Validated analytically: a disk of radius r yields the
-    sphere volume 4/3·π·r³ (tested)."""
-    ys, xs = np.nonzero(mask)
-    if len(xs) == 0:
-        return {"Biovolume": 0.0, "RepresentativeWidth": 0.0, "SurfaceArea": 0.0}
-    g = blob_geometry(mask)
-    theta = math.radians(g["Orientation"])
-    # Rotate so the major axis is horizontal (pure coordinate transform).
-    x = xs - xs.mean()
-    y = ys - ys.mean()
-    xr = x * math.cos(theta) + y * math.sin(theta)
-    bins = np.round(xr - xr.min()).astype(int)
-    widths = np.bincount(bins).astype(np.float64)
-    widths = widths[widths > 0]
-    volume = float(np.sum(math.pi / 4.0 * widths**2))
-    # Lateral surface of the revolved solid (circumference per slice) +
-    # end caps approximated by the first/last cross-sections.
-    surface = float(np.sum(math.pi * widths)) + float(
-        math.pi / 4.0 * (widths[0] ** 2 + widths[-1] ** 2)
-    )
-    return {
-        "Biovolume": volume,
-        "RepresentativeWidth": float(widths.mean()),
-        "SurfaceArea": surface,
-    }
-
-
 # --- U4: Benkrid weighted perimeter + seeded-PRNG pairwise stats -----------
 
 def perimeter_image(mask: np.ndarray) -> np.ndarray:
@@ -1319,7 +1079,7 @@ def perimeter_pair_stats(
     }
 
 
-# --- U5: distance-map biovolume (Moberg & Sosik) + branch selection --------
+# --- U5: distance-map (Moberg & Sosik) and raster SoR biovolume ------------
 
 def _edt_sq_1d(f: np.ndarray) -> np.ndarray:
     """1-D squared-distance transform (Felzenszwalb & Huttenlocher 2004
@@ -1484,39 +1244,7 @@ def biovolume_sor_raster(rotated: np.ndarray) -> dict[str, float]:
     }
 
 
-def biovolume_sor_rotated(mask: np.ndarray) -> dict[str, float]:
-    """Reference-shape SoR: rotate the blob to its major axis with the
-    MATLAB-parity raster rotation (U11), then run the raster SoR."""
-    from .rotation import rotate_blob
-
-    g = blob_geometry(mask)
-    if g["Area"] == 0:
-        return {"Biovolume": 0.0, "RepresentativeWidth": 0.0, "SurfaceArea": 0.0}
-    rotated = rotate_blob(mask, -g["Orientation"])
-    return biovolume_sor_raster(rotated)
-
-
-def biovolume_auto(mask: np.ndarray) -> dict[str, float]:
-    """U5 shape-adaptive biovolume — the reference's branch selection
-    (``all.py:225-234``): solid-of-revolution for compact/symmetric blobs
-    (``area_ratio < 1.2 or (ecc < 0.8 and p > 0.8)`` where
-    ``area_ratio = convex_area/area`` and ``p = equiv_d/major_axis``),
-    distance-map (Moberg & Sosik) for everything else."""
-    g = blob_geometry(mask)
-    if g["Area"] == 0:
-        return {
-            "Biovolume": 0.0, "RepresentativeWidth": 0.0,
-            "SurfaceArea": 0.0, "BiovolumeBranch": "none",
-        }
-    hull = hull_metrics(mask)
-    area_ratio = hull["ConvexArea"] / g["Area"]
-    p = g["EquivDiameter"] / g["MajorAxisLength"] if g["MajorAxisLength"] else 0.0
-    use_sor = area_ratio < 1.2 or (g["Eccentricity"] < 0.8 and p > 0.8)
-    out = biovolume_sor_rotated(mask) if use_sor else biovolume_distmap(mask)
-    return {**out, "BiovolumeBranch": "sor" if use_sor else "distmap"}
-
-
-# --- compute_features-faithful per-blob feature chain (round 16) ------------
+# --- compute_features-faithful per-blob feature chain -----------------------
 # The reference's exported features come from ``compute_features``
 # (``ifcb_features/all.py:497-545``): the image is segmented, split into
 # 8-connected blobs sorted largest-first (``blobs.py:13-30``), and the
@@ -1537,11 +1265,10 @@ def biovolume_auto(mask: np.ndarray) -> dict[str, float]:
 #   * biovolume — the U5 branch rule with THESE inputs (area_ratio from
 #     the Heron convex area, cov-form ecc/major) on the cropped blob
 #     (``all.py:200-233``)
-# These forms differ measurably from the MATLAB-regionprops conventions
-# in :func:`blob_geometry`/:func:`hull_metrics` (cov uses n-1; MATLAB
-# moments add 1/12; the shoelace hull area differs from the Heron+per/2
-# form by ~1) — certified against fixtures generated by EXECUTING the
-# reference package (tests/test_golden_chain_parity.py).
+# These forms differ measurably from MATLAB regionprops (cov uses n-1
+# where regionprops adds 1/12 to the moments; a shoelace hull area differs
+# from the Heron+per/2 form by ~1) — certified against fixtures generated
+# by EXECUTING the reference package (tests/test_golden_chain_parity.py).
 
 def find_blobs_sorted(mask: np.ndarray) -> list[np.ndarray]:
     """Cropped single-component masks, 8-connected, sorted by
@@ -1570,9 +1297,10 @@ def ellipse_properties_cov(blob: np.ndarray) -> tuple[float, float, float]:
     point is NaN/undefined and would poison every downstream feature.
     The reference never reaches this case in production — its
     segmentation's min-blob-41 gate (``segmentation.py:141-153``) drops
-    specks before ``all.py`` runs — so the sanitized value only shows up
-    on the engine's ``segment=False`` raw-threshold path, where a NaN
-    row would be strictly worse at corpus scale.  Pinned by
+    specks before ``all.py`` runs, and so does :func:`segment_roi_pc` —
+    so the sanitized value only shows up when :func:`roi_features_ref`
+    is called on an unsegmented mask, where a NaN row would be strictly
+    worse at corpus scale.  Pinned by
     ``tests/test_kernels.py::test_speck_blobs_are_sanitized_not_nan``."""
     P = np.vstack(np.where(blob)).astype(np.float64)
     if P.shape[1] < 2:

@@ -104,17 +104,3 @@ def rotate_blob(mask: np.ndarray, theta_deg: float) -> np.ndarray:
     horizontal (``blobs.py:63-69``)."""
     return imrotate_nearest_crop(center_blob(mask), theta_deg)
 
-
-def rotated_bbox(mask: np.ndarray) -> tuple[int, int]:
-    """(height, width) of the rotated blob's tight bbox with the
-    reference's half-pixel edge convention (``blobs.py:137-149``)."""
-    b = np.asarray(mask, dtype=bool)
-    if not b.any():
-        return 0, 0
-    col_any = b.any(axis=0)
-    row_any = b.any(axis=1)
-    x0 = int(np.argmax(col_any)) + 0.5
-    x1 = len(col_any) - int(np.argmax(col_any[::-1]))
-    y0 = int(np.argmax(row_any)) + 0.5
-    y1 = len(row_any) - int(np.argmax(row_any[::-1]))
-    return int((y1 - y0) + 0.5), int((x1 - x0) + 0.5)

@@ -357,9 +357,9 @@ FROM (VALUES
 def mm2_real_kernel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kernels import features_from_images
 
-    # Full U1-U12 chain at the default ringwedge_size=65 profiling
-    # canvas — oracle baked at the same 65; production parity needs 301
-    # (see features_from_images PARITY NOTE / ADVICE r17).
+    # Full U1-U12 chain at the RINGWEDGE_SIZE=65 profiling canvas —
+    # oracle baked at the same 65; production parity needs 301 (see the
+    # kernels.RINGWEDGE_SIZE PARITY NOTE / ADVICE r17).
     feats = features_from_images(panel_rois(spark))
     return feats.select(
         "sample",
@@ -384,8 +384,9 @@ def mm2_real_kernel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r4 item 8) with topologies the original panel never produces:
 # annuli and square frames (input holes — the segmentation's fill step
 # resolves them deterministically), disjoint disk pairs (two segmented
-# blobs: numBlobs=2, exercises the multi-blob labeling in U12
-# summed_features and is exported so the driver checks it), and
+# blobs: numBlobs=2, exercises the multi-blob labeling of the U12
+# summed family in roi_features_ref and is exported so the oracle
+# checks it), and
 # plus-shapes (non-convex: Solidity 0.38-0.67, and both U5 branches
 # fire across the panel — plus_30x6 takes distmap, the rest SoR after
 # the round-17 reference-exact segmentation shifted the pair blobs'
@@ -428,7 +429,7 @@ FROM (VALUES
 def mm2b_kernel_topologies(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kernels import features_from_images
 
-    # ringwedge_size=65 profiling canvas, oracle baked to match (parity=301).
+    # RINGWEDGE_SIZE=65 profiling canvas, oracle baked to match (parity=301).
     feats = features_from_images(panel_rois(spark, MM2B_PANEL))
     return feats.select(
         "sample",
@@ -1113,7 +1114,7 @@ FROM (VALUES
 def mm6_augmentation_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kernels import features_from_images
 
-    # ringwedge_size=65 profiling canvas, oracle baked to match (parity=301).
+    # RINGWEDGE_SIZE=65 profiling canvas, oracle baked to match (parity=301).
     feats = features_from_images(augmented_panel_rois(spark))
     return feats.select(
         F.split_part(F.col("sample"), F.lit("__"), F.lit(1)).alias("sample"),

@@ -63,7 +63,7 @@ def sim1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table would lose.  Candidate pairs = agree on ≥1 table, deduped
 # BEFORE the exact-cosine verify; rank ≤ 3 per query as before.
 # tests/test_invariants.py::test_sim2_buckets_bounded pins occupancy.
-from ..operators.dedup import sign_hyperplanes  # noqa: E402
+from ..operators.dedup import _band_struct_array, sign_hyperplanes  # noqa: E402
 
 _SIM2_DIM, _SIM2_BANDS, _SIM2_ROWS = 64, 4, 8
 _SIM2_PLANES = sign_hyperplanes(_SIM2_DIM, _SIM2_BANDS * _SIM2_ROWS)
@@ -83,29 +83,9 @@ def _sim2_sig_sql(b: int) -> str:
 
 def sim2_coded(e: DataFrame) -> DataFrame:
     """(vec_id, band, sig): one row per vector per LSH table."""
-    from ..operators.dedup import _plane_literal_columns
-
-    # memoized literal Columns — 32 plane arrays × 64 F.lit py4j round
-    # trips per call otherwise (same fix as embedding_lsh_pairs, r17)
-    plane_cols = _plane_literal_columns(_SIM2_DIM, _SIM2_BANDS * _SIM2_ROWS)
-
-    def band_sig(b: int):
-        bits = []
-        for r in range(_SIM2_ROWS):
-            arr = plane_cols[b * _SIM2_ROWS + r]
-            bits.append(F.when(dot(F.col("v"), arr) > 0, "1").otherwise("0"))
-        return F.concat(*bits)
-
     return e.select(
         "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_sig(b).alias("sig"))
-                    for b in range(_SIM2_BANDS)
-                ]
-            )
-        ).alias("bs"),
+        F.explode(_band_struct_array("v", _SIM2_DIM, _SIM2_BANDS, _SIM2_ROWS)).alias("bs"),
     ).select("vec_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
 
 

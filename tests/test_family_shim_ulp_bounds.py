@@ -33,21 +33,17 @@ Pinned bounds (measured on the 13-case panel):
 from __future__ import annotations
 
 import json
-import math
 import pathlib
 
 import numpy as np
 import pytest
 
 import ifcb_data_pipeline_spark.operators.kernels as K
+from tests.ulp import floor4
 
 FIXTURE = pathlib.Path(__file__).parent / "fixtures" / "golden_families.json"
 
 REL_BOUND = 5e-15
-
-
-def _floor4(x: float) -> float:
-    return math.floor(x * 10000.0 + 0.5) / 10000.0
 
 
 def _cases():
@@ -132,7 +128,7 @@ def _assert_bounded(pairs, label):
                 base,
                 alt,
             )
-        assert _floor4(alt) == _floor4(base), (
+        assert floor4(alt) == floor4(base), (
             f"{label}: shim reorder crossed a 4dp floor boundary",
             base,
             alt,

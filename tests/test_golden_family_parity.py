@@ -4,7 +4,9 @@
 (`texture.py`, `hog.py`, `ringwedge.py`, `perimeter.py`,
 `blob_geometry.py`, `segmentation.py`, `morphology.py` — see the
 generator's trust notes) on a 10-image grayscale panel and recorded
-every value.  The engine must reproduce all of them BIT-FOR-BIT:
+every value.  The engine must reproduce all of them BIT-FOR-BIT, except
+HOG, which holds to :data:`HOG_ULP_BOUND` and the exact 4-decimal floor
+form:
 
 - U1 segmentation masks (downstream of a shared phase-congruency map),
 - U7 texture statistics (contrast-enhanced statxture),
@@ -27,9 +29,17 @@ import numpy as np
 import pytest
 
 from ifcb_data_pipeline_spark.operators import kernels as K
+from tests.ulp import floor4, ulp_distance
 
 FIXTURE = pathlib.Path(__file__).parent / "fixtures" / "golden_families.json"
 CASES = json.loads(FIXTURE.read_text())["cases"]
+
+# hog_features divides each window by np.linalg.norm(H) + 0.01, and the
+# norm of a 1-D vector is sqrt(dot(H, H)): BLAS picks its dot kernel per
+# CPU, and the SIMD lane order of that 9-term sum moves the last bits.
+# Largest distance measured on a CPU other than the one that baked the
+# fixture: 3 ulp (243 of the 1,377 panel values differ there).
+HOG_ULP_BOUND = 3
 
 
 def _img(case) -> np.ndarray:
@@ -79,7 +89,11 @@ def test_texture_parity(case):
 @pytest.mark.parametrize("case", CASES, ids=_ids(CASES))
 def test_hog_parity(case):
     got = K.hog_features(_img(case))
-    assert [repr(float(v)) for v in got] == case["hog"]
+    assert len(got) == len(case["hog"])
+    for i, (v, ref) in enumerate(zip(got, case["hog"])):
+        rv = float(ref)
+        assert ulp_distance(v, rv) <= HOG_ULP_BOUND, (i, ref, repr(float(v)))
+        assert floor4(v) == floor4(rv), (i, ref, repr(float(v)))
 
 
 @pytest.mark.parametrize("case", CASES, ids=_ids(CASES))

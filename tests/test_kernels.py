@@ -9,14 +9,16 @@ import numpy as np
 import pytest
 
 from ifcb_data_pipeline_spark.operators.kernels import (
-    blob_geometry,
-    convex_hull,
+    biovolume_sor_raster,
+    blob_features_ref,
+    explicit_orientation,
     features_from_images,
+    find_blobs_sorted,
     hu_moments,
-    hull_metrics,
-    perimeter_estimate,
+    roi_features_ref,
     texture_stats,
 )
+from ifcb_data_pipeline_spark.operators.rotation import rotate_blob
 
 
 def disk_mask(r: int, pad: int = 2) -> np.ndarray:
@@ -32,8 +34,13 @@ def rect_mask(w: int, h: int, pad: int = 2) -> np.ndarray:
     return m
 
 
+def largest_blob_features(mask: np.ndarray) -> dict:
+    """The exported per-blob features of the mask's largest blob."""
+    return blob_features_ref(find_blobs_sorted(mask)[0])
+
+
 def test_rectangle_geometry_exact():
-    g = blob_geometry(rect_mask(10, 4))
+    g = largest_blob_features(rect_mask(10, 4))
     assert g["Area"] == 40.0
     assert g["BoundingBox_xwidth"] == 10.0 and g["BoundingBox_ywidth"] == 4.0
     assert g["Extent"] == 1.0
@@ -43,38 +50,24 @@ def test_rectangle_geometry_exact():
 
 def test_disk_geometry_analytic():
     r = 20
-    g = blob_geometry(disk_mask(r))
+    g = largest_blob_features(disk_mask(r))
     assert g["Area"] == pytest.approx(math.pi * r * r, rel=0.02)
     assert g["EquivDiameter"] == pytest.approx(2 * r, rel=0.02)
     assert g["Eccentricity"] < 0.05  # circle ≈ no eccentricity
     assert g["MajorAxisLength"] == pytest.approx(2 * r, rel=0.05)
 
 
-def test_rectangle_perimeter_exact():
-    # Exposed-edge perimeter of a w×h rectangle is exactly 2(w+h).
-    assert perimeter_estimate(rect_mask(10, 4)) == 28.0
-
-
-def test_convex_hull_square():
-    pts = np.array([[0, 0], [4, 0], [0, 4], [4, 4], [2, 2], [1, 3]])
-    hull = convex_hull(pts)
-    assert len(hull) == 4
-    assert {tuple(p) for p in hull} == {(0, 0), (4, 0), (4, 4), (0, 4)}
-
-
 def test_hull_metrics_disk():
     r = 20
-    h = hull_metrics(disk_mask(r))
+    h = largest_blob_features(disk_mask(r))
     assert h["maxFeretDiameter"] == pytest.approx(2 * r + 1, rel=0.03)
     assert h["minFeretDiameter"] == pytest.approx(2 * r + 1, rel=0.03)
     assert h["ConvexPerimeter"] == pytest.approx(2 * math.pi * r, rel=0.05)
 
 
 def test_solidity_convex_shape_near_one():
-    mask = disk_mask(15)
-    g = blob_geometry(mask)
-    h = hull_metrics(mask)
-    assert g["Area"] / h["ConvexArea"] == pytest.approx(1.0, abs=0.05)
+    g = largest_blob_features(disk_mask(15))
+    assert g["Area"] / g["ConvexArea"] == pytest.approx(1.0, abs=0.05)
 
 
 def test_hu_moments_invariance():
@@ -142,16 +135,17 @@ def test_label_components_counts_blobs():
 
 
 def test_summed_features_two_rectangles():
-    from ifcb_data_pipeline_spark.operators.kernels import summed_features
-
+    # The Benkrid perimeter of an axis-aligned w×h rectangle runs through
+    # the border pixel centres: 2(w-1) + 2(h-1).
     m = np.zeros((12, 20), dtype=np.uint8)
-    m[2:6, 2:8] = 1     # 6×4 → area 24, perimeter 20
-    m[8:11, 10:15] = 1  # 5×3 → area 15, perimeter 16
-    s = summed_features(m)
+    m[2:6, 2:8] = 1     # 6×4 → area 24, perimeter 16
+    m[8:11, 10:15] = 1  # 5×3 → area 15, perimeter 12
+    s = roi_features_ref(m)
     assert s["numBlobs"] == 2.0
     assert s["summedArea"] == 39.0
-    assert s["summedPerimeter"] == 36.0
-    assert s["Area_over_Perimeter"] == pytest.approx(39.0 / 36.0)
+    assert s["summedPerimeter"] == 28.0
+    # the ratio is the largest blob's, not the summed family's
+    assert s["Area_over_Perimeter"] == 24.0 / 16.0
 
 
 def test_hog_properties():
@@ -203,19 +197,6 @@ def test_ringwedge_properties():
     assert 60 <= dominant_angle <= 120
 
 
-def test_segmentation_recovers_bright_disk():
-    from ifcb_data_pipeline_spark.operators.kernels import segment_roi
-
-    img = np.full((60, 60), 30, dtype=np.uint8)
-    yy, xx = np.mgrid[:60, :60]
-    disk = (xx - 30) ** 2 + (yy - 30) ** 2 <= 15 * 15
-    img[disk] = 220
-    mask = segment_roi(img)
-    inter = np.count_nonzero(mask & disk)
-    union = np.count_nonzero(mask | disk)
-    assert inter / union > 0.8  # IoU with the true disk
-
-
 def test_fill_holes_and_small_blob_removal():
     from ifcb_data_pipeline_spark.operators.kernels import (
         fill_holes,
@@ -255,15 +236,16 @@ def test_symmetry_square_vs_asymmetric():
 
 
 def test_biovolume_sphere_and_cylinder():
-    from ifcb_data_pipeline_spark.operators.kernels import biovolume_sor
-
     r = 20
-    v = biovolume_sor(disk_mask(r))
+    v = largest_blob_features(disk_mask(r))
+    assert v["BiovolumeBranch"] == "sor"
     assert v["Biovolume"] == pytest.approx(4 / 3 * math.pi * r**3, rel=0.05)
+    # mean column width of a disk: area / columns = πr²/(2r+1) ≈ πr/2
     assert v["RepresentativeWidth"] == pytest.approx(math.pi * r / 2, rel=0.05)
     # A w×h rectangle revolves into a cylinder: length w, diameter h.
     w, h = 40, 10
-    c = biovolume_sor(rect_mask(w, h))
+    c = largest_blob_features(rect_mask(w, h))
+    assert c["BiovolumeBranch"] == "sor"
     assert c["Biovolume"] == pytest.approx(math.pi / 4 * h**2 * w, rel=0.05)
 
 
@@ -384,14 +366,11 @@ def test_biovolume_branches_agree_on_disk():
     selection rule, all.py:225-234).  SoR is exact for solids of
     revolution; the ribbon-calibrated distance map comes in low on a
     sphere — which is exactly why the rule routes compact shapes to SoR."""
-    from ifcb_data_pipeline_spark.operators.kernels import (
-        biovolume_distmap,
-        biovolume_sor,
-    )
+    from ifcb_data_pipeline_spark.operators.kernels import biovolume_distmap
 
     r = 20
     sphere = 4 / 3 * math.pi * r**3
-    sor = biovolume_sor(disk_mask(r))
+    sor = biovolume_sor_raster(disk_mask(r).astype(bool))
     dm = biovolume_distmap(disk_mask(r))
     assert sor["Biovolume"] == pytest.approx(sphere, rel=0.05)
     assert dm["Biovolume"] == pytest.approx(sphere, rel=0.25)
@@ -399,15 +378,13 @@ def test_biovolume_branches_agree_on_disk():
 
 
 def test_biovolume_auto_branch_selection():
-    from ifcb_data_pipeline_spark.operators.kernels import biovolume_auto
-
     # Disk: area_ratio ≈ 1 < 1.2 → solid of revolution.
-    assert biovolume_auto(disk_mask(15))["BiovolumeBranch"] == "sor"
+    assert largest_blob_features(disk_mask(15))["BiovolumeBranch"] == "sor"
     # Thin L: concave (area_ratio ≥ 1.2) and eccentric → distance map.
     lshape = np.zeros((60, 60), dtype=np.uint8)
     lshape[5:55, 5:9] = 1
     lshape[51:55, 5:55] = 1
-    assert biovolume_auto(lshape)["BiovolumeBranch"] == "distmap"
+    assert largest_blob_features(lshape)["BiovolumeBranch"] == "distmap"
 
 
 # --- U1 (full): phase congruency + reference segmentation chain -------------
@@ -526,33 +503,17 @@ def test_rotation_exact_at_quarter_turns():
 
 
 def test_rotation_preserves_area_and_aligns_major_axis():
-    from ifcb_data_pipeline_spark.operators.rotation import rotate_blob
-
     yy, xx = np.mgrid[:80, :80]
     th = np.radians(25)
     u = (xx - 40) * np.cos(th) + (yy - 40) * np.sin(th)
     v = -(xx - 40) * np.sin(th) + (yy - 40) * np.cos(th)
     ellipse = ((u / 28) ** 2 + (v / 9) ** 2 <= 1).astype(np.uint8)
-    g = blob_geometry(ellipse)
-    rotated = rotate_blob(ellipse, -g["Orientation"])
-    g2 = blob_geometry(rotated)
-    assert abs(g2["Orientation"]) < 2.0           # major axis horizontal
+    rotated = rotate_blob(ellipse, explicit_orientation(ellipse))
+    assert abs(explicit_orientation(rotated)) < 2.0  # major axis horizontal
     assert rotated.sum() == pytest.approx(ellipse.sum(), rel=0.03)
 
 
-def test_rotated_bbox_half_pixel_convention():
-    from ifcb_data_pipeline_spark.operators.rotation import rotated_bbox
-
-    assert rotated_bbox(rect_mask(14, 6)) == (6, 14)
-    assert rotated_bbox(np.zeros((5, 5), dtype=bool)) == (0, 0)
-
-
 def test_raster_sor_matches_analytic_on_revolution_solids():
-    from ifcb_data_pipeline_spark.operators.kernels import (
-        biovolume_sor_raster,
-        biovolume_sor_rotated,
-    )
-
     r = 20
     sphere = biovolume_sor_raster(disk_mask(r).astype(bool))
     assert sphere["Biovolume"] == pytest.approx(4 / 3 * math.pi * r**3, rel=0.05)
@@ -568,7 +529,7 @@ def test_raster_sor_matches_analytic_on_revolution_solids():
     v = -(xx - 45) * np.sin(th) + (yy - 45) * np.cos(th)
     a, b = 30, 11
     ellipse = ((u / a) ** 2 + (v / b) ** 2 <= 1).astype(np.uint8)
-    out = biovolume_sor_rotated(ellipse)
+    out = biovolume_sor_raster(rotate_blob(ellipse, explicit_orientation(ellipse)))
     assert out["Biovolume"] == pytest.approx(4 / 3 * math.pi * a * b * b, rel=0.08)
 
 
@@ -676,13 +637,10 @@ def test_letterbox_preserves_aspect_and_fills(img):
 def test_speck_blobs_are_sanitized_not_nan():
     """INTENTIONAL DEVIATION pin (ADVICE r16): the reference's np.cov on
     a 1-2 pixel blob is NaN/undefined, but all.py never sees specks in
-    production (segmentation's min-blob-41 gate).  The engine's raw
-    segment=False path CAN see them, and sanitizes to finite zeros
-    instead of letting NaN poison the summed-feature epilogue."""
-    from ifcb_data_pipeline_spark.operators.kernels import (
-        ellipse_properties_cov,
-        roi_features_ref,
-    )
+    production (segmentation's min-blob-41 gate).  roi_features_ref
+    called on an unsegmented mask CAN see them, and sanitizes to finite
+    zeros instead of letting NaN poison the summed-feature epilogue."""
+    from ifcb_data_pipeline_spark.operators.kernels import ellipse_properties_cov
 
     one = np.zeros((7, 7), dtype=bool)
     one[3, 3] = True

@@ -15,7 +15,6 @@ the total is the median of the per-repeat totals.
 from __future__ import annotations
 
 import argparse
-import inspect
 import os
 import statistics
 import sys
@@ -47,15 +46,9 @@ def delivery_panel() -> list[tuple[str, int, object]]:
     return panel
 
 
-#: U10's FFT canvas on the ingest path: ``features_from_images``' default.
-RINGWEDGE_SIZE = inspect.signature(K.features_from_images).parameters[
-    "ringwedge_size"
-].default
-
-
 def _ringwedge(s):
     if s["mask"].any():
-        K.ringwedge_features(s["mask"], size=RINGWEDGE_SIZE)
+        K.ringwedge_features(s["mask"], size=K.RINGWEDGE_SIZE)
 
 
 #: (family, fn(state)) in ``features_from_images`` order; each stage
