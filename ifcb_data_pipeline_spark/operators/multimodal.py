@@ -2,10 +2,10 @@
 
 Images/audio/video are opaque ``binary`` columns with typed metadata
 structs, processed by Arrow-batched ``mapInPandas`` kernels.  The Spark
-plumbing — schemas, per-bin → per-ROI expansion, batch shapes, salted
-repartitioning for skewed bins — is real and tested; pixel decode is
-real too (:mod:`.image_codec`: pure-numpy PGM/BMP/raw-slab), with only
-compressed container formats (PNG/JPEG) left to an imaging library
+plumbing — schemas, per-bin → per-ROI expansion, batch shapes, the
+ROI-count-sized round-robin spread of bins — is real and tested; pixel
+decode is real too (:mod:`.image_codec`: pure-numpy PGM/BMP/raw-slab),
+with only compressed container formats (PNG/JPEG) left to an imaging library
 (reference kernels: ``ifcb_features/*.py``, e.g. ``biovolume.py:56-158``,
 ``segmentation.py:117-186``).
 """
@@ -244,14 +244,6 @@ def sample_video_frames(videos: DataFrame, every_k: int) -> DataFrame:
             yield pd.DataFrame(out)
 
     return videos.mapInPandas(expand, schema=FRAME_SCHEMA)
-
-
-def salt_skewed_bins(rois: DataFrame, partitions: int, salt_mod: int = 8) -> DataFrame:
-    """Skew guard (SURVEY §7.3): bloom-day bins are huge; salting by
-    ``(sample, roi mod k)`` keeps kernel stages balanced."""
-    return rois.repartition(
-        partitions, F.col("sample"), F.col("roi_number") % salt_mod
-    )
 
 
 AUDIO_SCHEMA = T.StructType(

@@ -38,10 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-EVENT_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-    " value double, props string"
-)
+from ..sources.tables import stream_schema
 
 STATE_SCHEMA = (
     "user_id bigint, last_type string, value double, last_ts timestamp,"
@@ -147,7 +144,7 @@ def run_merge_stream(
 
     stream = (
         spark.readStream.format("parquet")
-        .schema(EVENT_SCHEMA)
+        .schema(stream_schema("events"))
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(input_dir)
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import explode_bins_to_rois, extract_features
+from ..sources.tables import stream_table
 from . import register
 from ._util import HASH32_SQL, dround, dround_sql, hash32, tables
 
@@ -138,17 +139,7 @@ GROUP BY 1, 2
 
 @register("st1_stream_windowed_counts", ST1_SQL, survey_ref="SURVEY §2.10; Structured Streaming tumbling window")
 def st1_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The file source wants a directory: stream sf_dir with a glob filter
-    # so only events.parquet enters the micro-batches.
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(
-            "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-            " value double, props string"
-        )
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "events")
     windowed = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -746,15 +737,7 @@ WHERE window_start + INTERVAL '10 minutes'
 
 @register("st3_watermarked_append", ST3_SQL, survey_ref="SURVEY §2.10; watermark + append-mode finalized windows")
 def st3_watermarked_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(
-            "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-            " value double, props string"
-        )
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "events")
     windowed = (
         stream.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
@@ -803,21 +786,8 @@ FROM events c JOIN events p
 
 @register("st4_stream_stream_join", ST4_SQL, survey_ref="SURVEY §2.10; watermarked stream-stream interval join")
 def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-        " value double, props string"
-    )
-
-    def stream():
-        return (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-        )
-
     clicks = (
-        stream()
+        stream_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -827,7 +797,7 @@ def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("click_ts", "1 hour")
     )
     purchases = (
-        stream()
+        stream_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -902,20 +872,11 @@ FROM events
 
 @register("st5_streaming_dedup", ST5_SQL, survey_ref="SURVEY §2.10 + dedup family; bounded-state streaming dedup")
 def st5_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-        " value double, props string"
+    doubled = (
+        stream_table(spark, sf_dir, "events")
+        .union(stream_table(spark, sf_dir, "events"))
+        .withWatermark("ts", "1 hour")
     )
-
-    def stream():
-        return (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-        )
-
-    doubled = stream().union(stream()).withWatermark("ts", "1 hour")
     deduped = doubled.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "event_type", dround(F.col("value"), 4).alias("value")
     )
@@ -1156,15 +1117,7 @@ FROM starts GROUP BY window_start, event_type
 @register("st6_sliding_window_rates", ST6_SQL, survey_ref="SURVEY §2.10; sliding (overlapping) streaming windows")
 def st6_sliding_window_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(
-            "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-            " value double, props string"
-        )
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "events")
     windowed = (
         stream.groupBy(
             F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type"
@@ -1358,15 +1311,7 @@ def st7_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(
-            "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-            " value double, props string"
-        )
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "events")
     if _drain_to_memory(
         shape(stream).writeStream.format("memory").outputMode("complete"),
         "st7_enriched",
@@ -1434,15 +1379,7 @@ def st8_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", "session_start", "session_end", "n_events")
         )
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(
-            "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-            " value double, props string"
-        )
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "events")
     sessions = (
         stream.withWatermark("ts", "40 minutes")
         .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")

@@ -1,3 +1,3 @@
-from .tables import TABLES, load_table, load_tables, register_views
+from .tables import SCHEMAS, TABLES, load_table, stream_table
 
-__all__ = ["TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["SCHEMAS", "TABLES", "load_table", "stream_table"]

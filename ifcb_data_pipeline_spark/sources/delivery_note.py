@@ -20,9 +20,3 @@ def render_template(template: str, meta: DataFrame) -> str:
     if len(rows) != 1:
         raise ValueError(f"delivery-note meta must be exactly 1 row, got {len(rows)}")
     return template.format(**rows[0].asDict())
-
-
-def write_delivery_note(template: str, meta: DataFrame, path: str) -> str:
-    with open(path, "w") as f:
-        f.write(render_template(template, meta))
-    return path

@@ -56,6 +56,10 @@ def read_features_csv(spark: SparkSession, path: str) -> DataFrame:
     df = (
         spark.read.schema(FEATURES_V4_SCHEMA)
         .option("header", "true")
+        # Check each file's header against the declared names: by default
+        # Spark applies the schema by position and a reordered file would
+        # silently swap feature columns.
+        .option("enforceSchema", "false")
         .option("pathGlobFilter", "*_fea_v4.csv")
         .csv(path)
         .withColumn(

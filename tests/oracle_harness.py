@@ -20,12 +20,12 @@ import math
 
 import duckdb
 
+from ifcb_data_pipeline_spark.sources.tables import TABLES
+
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
+    for t in TABLES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )

@@ -15,12 +15,45 @@ import pytest
 
 from tests.conftest import SF_SMOKE
 
-# name -> jobs started while the warmed build runs, at sf0.001.
+# name -> jobs started while the warmed build runs, at sf0.001: every
+# headline query of bench.py, plus the closure and PageRank queries.
+# Table loads declare their schema and start no job, so what remains is
+# the queries' own eager work.
 BUILD_JOBS = {
-    "dd6_dup_clusters": 6,
-    "dd7_dedup_materialize": 7,
-    "dd13_star_components": 4,
-    "g1_pagerank": 41,
+    "a1_biovolume_rollup": 0,
+    "a4_monthly_stats": 0,
+    "dd11_span_dedup": 0,
+    "dd13_star_components": 3,
+    "dd2_minhash_lsh": 3,
+    "dd6_dup_clusters": 5,
+    "dd7_dedup_materialize": 5,
+    "dp8_exact_quantiles": 5,
+    "g1_pagerank": 40,
+    "j1_enrichment_chain": 0,
+    "j14_bucketed_range_join": 0,
+    "j17_point_in_time_join": 0,
+    "j4_asof_join": 0,
+    "j5_interval_join": 0,
+    "mm9_perceptual_dedup": 2,
+    "o8_zorder_layout": 0,
+    "p1_shark_export": 0,
+    "p2_hab_alert": 0,
+    "p3_dashboard_metadata": 0,
+    "pk1_sequence_packing": 0,
+    "pk2_document_chunking": 0,
+    "sim10_pq_adc": 2,
+    "sim1_cosine_topk": 0,
+    "sim8_kmeans_refine": 0,
+    "sim9_quantized_rerank": 0,
+    "sp8_importance_resampling": 4,
+    "tp1_training_corpus": 0,
+    "tp2_multimodal_corpus": 3,
+    "tp3_incremental_refresh": 0,
+    "tp4_curriculum_order": 3,
+    "tp5_funnel_report": 1,
+    "tx13_bm25_topk": 2,
+    "tx2_quality_score": 0,
+    "w1_adjacency_removal": 0,
 }
 
 
@@ -43,3 +76,9 @@ def test_warmed_build_job_count(spark, name):
     fn = load_all()[name].fn
     fn(spark, SF_SMOKE)
     assert _build_jobs(spark, fn, f"build-jobs-{name}") == BUILD_JOBS[name]
+
+
+def test_every_headline_query_is_pinned():
+    import bench
+
+    assert set(bench.HEADLINE) <= set(BUILD_JOBS)

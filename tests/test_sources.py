@@ -99,6 +99,43 @@ def test_delivery_note_render(spark):
     assert note == "SHARK delivery 2024: 123 samples on 2024-05-01"
 
 
+def test_features_csv_read(spark, tmp_path):
+    from ifcb_data_pipeline_spark.sources.features_csv import (
+        FEATURES_V4_SCHEMA,
+        read_features_csv,
+    )
+
+    features = FEATURES_V4_SCHEMA.fieldNames()[1:]
+    bins = {"D20240423T115840_IFCB134": 3, "D20240424T120000_IFCB110": 2}
+    for sample, n in bins.items():
+        lines = [",".join(["roi_number", *features])]
+        for roi in range(1, n + 1):
+            lines.append(",".join([str(roi)] + [f"{roi}.{j:02d}" for j in range(len(features))]))
+        (tmp_path / f"{sample}_fea_v4.csv").write_text("\n".join(lines) + "\n")
+    (tmp_path / "class_scores.csv").write_text("roi_number,score\n1,0.5\n")
+
+    df = read_features_csv(spark, str(tmp_path))
+    assert len(features) == 30
+    assert df.dtypes == [("sample", "string"), ("roi_number", "int")] + [
+        (c, "double") for c in features
+    ]
+    got = {(r["sample"], r["roi_number"]): [r[c] for c in features] for r in df.collect()}
+    assert got == {
+        (sample, roi): [float(f"{roi}.{j:02d}") for j in range(30)]
+        for sample, n in bins.items()
+        for roi in range(1, n + 1)
+    }
+
+    # a file whose header orders the features differently fails the read
+    # instead of landing its values in the wrong columns
+    swapped = ["roi_number", features[1], features[0], *features[2:]]
+    (tmp_path / "D20240425T120000_IFCB134_fea_v4.csv").write_text(
+        ",".join(swapped) + "\n" + ",".join(["1"] + ["0.5"] * 30) + "\n"
+    )
+    with pytest.raises(Exception, match="does not conform to the schema"):
+        read_features_csv(spark, str(tmp_path)).collect()
+
+
 def test_partitioned_class_sink(spark):
     import glob
     import tempfile
