@@ -21,7 +21,7 @@ from .joins import (
     prefix_blacklist_anti_join,
 )
 from .similarity import cosine, cosine_topk, dot, label_centroids
-from .skew import salted_aggregate, salted_broadcast_join
+from .skew import salted_aggregate
 from .windows import adjacency_flag_filter, gap_fill, global_rank
 
 __all__ = [
@@ -47,7 +47,6 @@ __all__ = [
     "pagerank",
     "prefix_blacklist_anti_join",
     "salted_aggregate",
-    "salted_broadcast_join",
     "shingle_sets",
     "simhash",
 ]

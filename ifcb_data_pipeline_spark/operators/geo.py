@@ -11,9 +11,9 @@ Two tiers:
   path (both engines compute identically) and also the right *first*
   filter at scale: a bounding-box pass prunes the vast majority of points
   before any exact geometry runs.
-* :func:`tag_polygons_shapely` — exact point-in-polygon via a broadcast
-  prepared-geometry STRtree inside a vectorized pandas UDF; gated behind
-  an import-try because shapely does not ship in this container.
+* :func:`tag_polygons` — exact point-in-polygon and near-boundary
+  tagging in numpy inside an Arrow-batched ``mapInPandas`` kernel, the
+  stage after the bounding-box prune.
 """
 
 from __future__ import annotations
@@ -134,32 +134,3 @@ def tag_polygons(
             yield out
 
     return points.mapInPandas(kernel, schema=out_schema)
-
-
-def tag_polygons_shapely(
-    points: DataFrame,
-    polygons_wkt: list[tuple[str, str]],
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
-    """Exact point-in-polygon via broadcast shapely STRtree (vectorized
-    pandas UDF).  Raises ImportError where shapely is unavailable."""
-    import pandas as pd  # noqa: F401
-    from shapely import STRtree, from_wkt  # noqa: F401  (absent in container)
-
-    names = [n for n, _ in polygons_wkt]
-    geoms = [from_wkt(w) for _, w in polygons_wkt]
-    tree = STRtree(geoms)
-
-    @F.pandas_udf("string")
-    def which_polygon(lat: "pd.Series", lon: "pd.Series") -> "pd.Series":
-        from shapely import points as mk_points
-
-        pts = mk_points(list(zip(lon, lat)))
-        out = []
-        for p in pts:
-            hits = tree.query(p, predicate="within")
-            out.append(names[hits[0]] if len(hits) else None)
-        return pd.Series(out)
-
-    return points.withColumn("basin", which_polygon(F.col(lat_col), F.col(lon_col)))

@@ -4,9 +4,6 @@
   scale: broadcast the (small) query set, scan the corpus once, then a
   TWO-PHASE top-k (local per-(query, source-partition) heads, bounded
   final rank) so no corpus-sized partition is ever sorted on one task.
-* :func:`signlsh_topk` — random-hyperplane (sign) LSH: bucket by the sign
-  pattern against a small anchor set, search only the bucket.  The scale
-  path: candidate generation is an equi-join on the bucket key.
 
 Dot products use ``zip_with`` + ``aggregate`` — JVM-side higher-order
 functions, no Python UDF in the hot path.  (Measured round 15: HOFs are
@@ -69,68 +66,6 @@ def cosine_topk(
     # heads are a superset of the global top-k for ANY partitioning,
     # so the result is partitioning-invariant (pinned by
     # tests/test_invariants.py's repartition law).
-    local = scored.withColumn("__pid", F.spark_partition_id())
-    w_local = Window.partitionBy("query_id", "__pid").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    heads = (
-        local.withColumn("__lrk", F.row_number().over(w_local))
-        .where(F.col("__lrk") <= k)
-        .drop("__lrk", "__pid")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        heads.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
-
-
-def sign_bucket(vec, anchors: list[tuple[int, list[float]]]) -> Column:
-    """Bucket id = concatenated signs of dot(vec, anchor_i), anchors
-    ordered by id — a deterministic random-hyperplane LSH code."""
-    bits = [
-        F.when(dot(vec, F.array(*[F.lit(float(x)) for x in a])) > 0, "1").otherwise("0")
-        for _, a in sorted(anchors)
-    ]
-    return F.concat(*bits)
-
-
-def signlsh_topk(
-    vectors: DataFrame,
-    anchors: list[tuple[int, list[float]]],
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """Approximate top-k: only vectors sharing the query's LSH bucket are
-    scored.  The bucket join is an equi-join — the 100 TB-safe plan."""
-    coded = vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        sign_bucket(F.col(vec_col), anchors).alias("bucket"),
-    )
-    a = coded.select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"), "bucket"
-    )
-    b = coded.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"), "bucket"
-    )
-    scored = (
-        a.join(b, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-    )
-    # Same two-phase top-k as cosine_topk: a hot LSH bucket makes one
-    # query's candidate set arbitrarily large, so never sort it on one
-    # task — local per-(query, partition) heads first, then the bounded
-    # final rank (≤ k × n_partitions rows per query).
     local = scored.withColumn("__pid", F.spark_partition_id())
     w_local = Window.partitionBy("query_id", "__pid").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")

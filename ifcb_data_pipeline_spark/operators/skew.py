@@ -2,13 +2,13 @@
 bins").
 
 AQE's skew-join handling covers sort-merge joins automatically; these
-helpers cover the two cases it doesn't:
+helpers cover what it doesn't:
 
 * :func:`salted_aggregate` — two-stage aggregation for skewed group
   keys: partial aggregate on (key, salt), final on key.  Works for any
   algebraic aggregate list (sum/count/min/max).
-* :func:`salted_broadcast_join` — replicate the broadcast side per salt
-  so a hot key's rows spread across ``salt_mod`` tasks.
+* :func:`fan_out` — raise map-side parallelism when a scan's split count
+  caps it.
 """
 
 from __future__ import annotations
@@ -49,24 +49,6 @@ def salted_aggregate(
         for out, (_, _, ffn) in aggs.items()
     ]
     return partial.groupBy(*keys).agg(*final_aggs)
-
-
-def salted_broadcast_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str,
-    salt_mod: int = 8,
-) -> DataFrame:
-    """Broadcast join with the dim side replicated per salt value, so a
-    hot join key's fact rows land in ``salt_mod`` different tasks."""
-    salted_fact = fact.withColumn(
-        "__salt", F.pmod(F.crc32(F.concat_ws("§", on, F.spark_partition_id())), salt_mod)
-    )
-    salted_dim = dim.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_mod - 1)))
-    ).withColumn("__salt", F.col("__salt").cast("bigint"))
-    out = salted_fact.join(F.broadcast(salted_dim), [on, "__salt"])
-    return out.drop("__salt")
 
 
 def _parse_bytes(v: str) -> int:

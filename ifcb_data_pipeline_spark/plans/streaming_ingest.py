@@ -92,11 +92,11 @@ def run_streaming_tick(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    timeout_s: int = 120,
-) -> bool:
+) -> None:
     """One ``availableNow`` pass: drain every not-yet-processed file,
     append newly-finalized windows to ``output_dir`` as parquet, then
-    stop.  Returns True when the trigger drained within the budget.
+    stop.  A failed or stalled stream raises (see
+    :func:`~ifcb_data_pipeline_spark.streaming.incremental.drain`).
 
     Exactly-once is a TWO-part contract: append mode never re-emits a
     finalized window on the happy path, and the sink is keyed on
@@ -105,7 +105,7 @@ def run_streaming_tick(
     overwrites the same directory — ``foreachBatch`` alone is only
     at-least-once.  Batch contents are deterministic per batch_id (the
     source offsets are committed before the sink runs)."""
-    from ..streaming.incremental import stream_directory
+    from ..streaming.incremental import drain, stream_directory
 
     stream = stream_directory(
         spark, input_dir, READING_SCHEMA, fmt="csv", options={"header": "true"}
@@ -120,18 +120,11 @@ def run_streaming_tick(
             os.path.join(output_dir, f"batch_id={batch_id}")
         )
 
-    query = (
+    drain(
         finalized.writeStream.outputMode("append")
         .foreachBatch(sink)
         .option("checkpointLocation", os.path.join(checkpoint_dir, "qc_windows"))
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        return query.awaitTermination(timeout_s)
-    finally:
-        if query.isActive:
-            query.stop()
 
 
 def batch_twin(spark: SparkSession, input_dir: str) -> DataFrame:

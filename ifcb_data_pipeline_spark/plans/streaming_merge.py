@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import stream_schema
+from ..streaming.incremental import drain
 
 STATE_SCHEMA = (
     "user_id bigint, last_type string, value double, last_ts timestamp,"
@@ -128,12 +129,11 @@ def run_merge_stream(
     input_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    timeout: int = 120,
-) -> bool:
-    """Drain the change directory with availableNow, folding each
-    micro-batch into a new snapshot version.  Returns True when the
-    stream drained inside the budget."""
+) -> None:
+    """Drain the change directory with availableNow, one file per
+    micro-batch, folding each batch into a new snapshot version.  A
+    failed or stalled stream raises (see
+    :func:`~ifcb_data_pipeline_spark.streaming.incremental.drain`)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         state = read_state(spark, state_dir, below=batch_id)
@@ -145,20 +145,11 @@ def run_merge_stream(
     stream = (
         spark.readStream.format("parquet")
         .schema(stream_schema("events"))
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .load(input_dir)
     )
-    query = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(sink).option(
+            "checkpointLocation", checkpoint_dir
+        )
     )
-    try:
-        finished = query.awaitTermination(timeout)
-    finally:
-        try:
-            query.stop()
-        except Exception:
-            pass
-    return bool(finished)

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, stream_table
 
 
 def tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
@@ -26,6 +26,16 @@ def tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     # non-UTC timezone; the oracle (DuckDB) is timezone-naive UTC.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return [load_table(spark, sf_dir, n) for n in names]
+
+
+def streams(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
+    """File streams over the named tables, one independent source per
+    name, under the same UTC forcing as :func:`tables`.  A stream reads
+    event time as ``timestamp``, which the session zone interprets, so
+    without it a non-UTC session shifts the emitted window and session
+    bounds away from the oracles'."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return [stream_table(spark, sf_dir, n) for n in names]
 
 
 # Canonical implementation lives with the other physical-layout

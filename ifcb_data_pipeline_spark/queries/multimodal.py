@@ -5,8 +5,10 @@ Arrow-batched feature kernel → rollup); because the stub payload is
 deterministic, the *entire* Python-UDF path is verifiable against a pure
 SQL oracle — the strongest check available for UDF plumbing.
 
-st1 runs an actual Structured Streaming job (availableNow trigger,
-memory sink) over the events parquet and returns the materialized result.
+st1–st8 each run an actual Structured Streaming job over the events
+parquet, drained once with an availableNow trigger into a memory sink,
+and return that sink's table.  There is no batch copy of any of them: a
+stream that fails or stalls raises.
 """
 
 from __future__ import annotations
@@ -15,20 +17,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import explode_bins_to_rois, extract_features
-from ..sources.tables import stream_table
+from ..streaming.incremental import drain
 from . import register
-from ._util import HASH32_SQL, dround, dround_sql, hash32, tables
+from ._util import HASH32_SQL, dround, dround_sql, hash32, streams, tables
 
 
-def _drain_to_memory(writer, query_name: str, timeout: int = 60) -> bool:
-    """Start a memory-sink streaming query and drain it via availableNow.
-
-    Returns True only when the stream started AND fully drained inside the
-    budget.  Timeouts and outright streaming failures (analysis errors,
-    StreamingQueryException from schema drift or state-store trouble) both
-    return False, so every caller's deterministic batch twin is reachable
-    on ANY streaming-path failure — an exception must not bypass the
-    fallback (ADVICE r4).
+def _drain_to_memory(stream_df: DataFrame, mode: str, name: str) -> DataFrame:
+    """Drain ``stream_df`` into the memory sink ``name`` (see
+    :func:`~ifcb_data_pipeline_spark.streaming.incremental.drain`, which
+    raises on a failed or stalled stream) and return the sink's table.
 
     State-partition clamp (round 18 profile work): stateful operators
     materialize one state store PER shuffle partition PER stateful op —
@@ -43,38 +40,15 @@ def _drain_to_memory(writer, query_name: str, timeout: int = 60) -> bool:
     partition count is sized to the executor fleet — the clamp is a
     local-drain optimization, not a scale policy.
     """
-    spark = writer._df.sparkSession if hasattr(writer, "_df") else None
-    prev = None
+    spark = stream_df.sparkSession
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(min(int(prev), 8)))
     try:
-        if spark is not None:
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(min(int(prev), 8))
-            )
-    except Exception:
-        prev = None
-    try:
-        try:
-            query = writer.queryName(query_name).trigger(availableNow=True).start()
-        except Exception:
-            return False
-        try:
-            finished = query.awaitTermination(timeout)
-        except Exception:
-            finished = False
-        finally:
-            # Release the handle so a re-run in-session is clean.
-            try:
-                query.stop()
-            except Exception:
-                pass
-        return bool(finished)
+        drain(stream_df.writeStream.format("memory").outputMode(mode).queryName(name))
     finally:
-        if prev is not None:
-            try:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-            except Exception:
-                pass
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return spark.table(name)
+
 
 # --- MM1: bin → ROI → features through mapInPandas -------------------------
 # Fake-ROI math (must mirror operators/multimodal.py):
@@ -139,27 +113,13 @@ GROUP BY 1, 2
 
 @register("st1_stream_windowed_counts", ST1_SQL, survey_ref="SURVEY §2.10; Structured Streaming tumbling window")
 def st1_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = stream_table(spark, sf_dir, "events")
+    (stream,) = streams(spark, sf_dir, "events")
     windowed = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    if _drain_to_memory(
-        windowed.writeStream.format("memory").outputMode("complete"),
-        "st1_windowed",
-    ):
-        return spark.table("st1_windowed")
-    # Deterministic fallback: if the streaming run didn't drain within the
-    # budget (contended driver environment) or failed, compute the
-    # IDENTICAL result as a batch plan rather than returning a partial
-    # micro-batch state.
-    (events,) = tables(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
+    return _drain_to_memory(windowed, "complete", "st1_windowed")
 
 
 # --- MM2: the full real kernel chain over analytic shapes (hash gate) ------
@@ -605,8 +565,7 @@ def mm4_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # running counters kept in GroupState; the counter is MONOTONE, so even
 # if the file source splits into several micro-batches (each emitting an
 # update row), the final state per key is the row with the max count —
-# deterministic, hence SQL-oracle-checkable.  Falls back to the
-# identical batch plan if the stream cannot drain in the budget.
+# deterministic, hence SQL-oracle-checkable.
 ST2_SQL = """
 WITH ranked AS (
     SELECT user_id, event_type, value,
@@ -674,45 +633,18 @@ def st2_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = stream.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    if _drain_to_memory(
-        updates.writeStream.format("memory").outputMode("update"),
-        "st2_stateful",
-    ):
-        sink = spark.table("st2_stateful")
-        # final state per key = max n_events (monotone counter)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-        return (
-            sink.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select(
-                "user_id",
-                "n_events",
-                dround(F.col("value_sum"), 4).alias("value_sum"),
-                "last_event_type",
-            )
+    sink = _drain_to_memory(updates, "update", "st2_stateful")
+    # final state per key = max n_events (monotone counter)
+    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    return (
+        sink.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .select(
+            "user_id",
+            "n_events",
+            dround(F.col("value_sum"), 4).alias("value_sum"),
+            "last_event_type",
         )
-    # Batch fallback: identical result computed without the state store.
-    (events,) = tables(spark, sf_dir, "events")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    ranked = events.withColumn("__rn", F.row_number().over(w))
-    aggs = events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("value").alias("value_sum"),
-    )
-    last = ranked.where(F.col("__rn") == 1).select(
-        "user_id", F.col("event_type").alias("last_event_type")
-    )
-    return aggs.join(last, "user_id").select(
-        "user_id",
-        "n_events",
-        dround(F.col("value_sum"), 4).alias("value_sum"),
-        "last_event_type",
     )
 
 
@@ -737,29 +669,14 @@ WHERE window_start + INTERVAL '10 minutes'
 
 @register("st3_watermarked_append", ST3_SQL, survey_ref="SURVEY §2.10; watermark + append-mode finalized windows")
 def st3_watermarked_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = stream_table(spark, sf_dir, "events")
+    (stream,) = streams(spark, sf_dir, "events")
     windowed = (
         stream.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    if _drain_to_memory(
-        windowed.writeStream.format("memory").outputMode("append"),
-        "st3_watermarked",
-    ):
-        return spark.table("st3_watermarked")
-    # Batch fallback: identical finalized-window set.
-    (events,) = tables(spark, sf_dir, "events")
-    mx = events.agg(F.max("ts").alias("mx"))
-    win = events.groupBy(
-        F.window("ts", "10 minutes").alias("w"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return (
-        win.crossJoin(F.broadcast(mx))
-        .where(F.col("w.end") <= F.col("mx") - F.expr("INTERVAL 30 minutes"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
+    return _drain_to_memory(windowed, "append", "st3_watermarked")
 
 
 # --- ST4: stream-stream interval join (click → purchase attribution) -------
@@ -770,8 +687,7 @@ def st3_watermarked_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB contract (state ~ |2 h of keys|, not the stream history).  The
 # availableNow drain over the single events file is one micro-batch, so
 # the inner-join output is complete and deterministic — hence the exact
-# SQL twin.  Falls back to the identical batch interval join if the
-# stream cannot drain in budget.
+# SQL twin.
 ST4_SQL = """
 SELECT c.event_id AS click_id, p.event_id AS purchase_id,
        c.user_id AS user_id,
@@ -786,9 +702,9 @@ FROM events c JOIN events p
 
 @register("st4_stream_stream_join", ST4_SQL, survey_ref="SURVEY §2.10; watermarked stream-stream interval join")
 def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    click_src, purchase_src = streams(spark, sf_dir, "events", "events")
     clicks = (
-        stream_table(spark, sf_dir, "events")
-        .where(F.col("event_type") == "click")
+        click_src.where(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
             F.col("user_id"),
@@ -797,8 +713,7 @@ def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("click_ts", "1 hour")
     )
     purchases = (
-        stream_table(spark, sf_dir, "events")
-        .where(F.col("event_type") == "purchase")
+        purchase_src.where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("p_user_id"),
@@ -821,37 +736,7 @@ def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("purchase_ts").cast("long") - F.col("click_ts").cast("long")
         ).alias("lag_seconds"),
     )
-    if _drain_to_memory(
-        joined.writeStream.format("memory").outputMode("append"),
-        "st4_attribution",
-    ):
-        return spark.table("st4_attribution")
-    # Batch fallback: the identical interval join.
-    (events,) = tables(spark, sf_dir, "events")
-    c = events.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("click_ts")
-    )
-    p = events.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return (
-        c.join(
-            p,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("purchase_ts") > F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 2 hours")),
-        )
-        .select(
-            "click_id",
-            "purchase_id",
-            "user_id",
-            (
-                F.col("purchase_ts").cast("long") - F.col("click_ts").cast("long")
-            ).alias("lag_seconds"),
-        )
-    )
+    return _drain_to_memory(joined, "append", "st4_attribution")
 
 
 # --- ST5: streaming dedup via dropDuplicatesWithinWatermark ----------------
@@ -872,26 +757,12 @@ FROM events
 
 @register("st5_streaming_dedup", ST5_SQL, survey_ref="SURVEY §2.10 + dedup family; bounded-state streaming dedup")
 def st5_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    doubled = (
-        stream_table(spark, sf_dir, "events")
-        .union(stream_table(spark, sf_dir, "events"))
-        .withWatermark("ts", "1 hour")
-    )
+    first, second = streams(spark, sf_dir, "events", "events")
+    doubled = first.union(second).withWatermark("ts", "1 hour")
     deduped = doubled.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "event_type", dround(F.col("value"), 4).alias("value")
     )
-    if _drain_to_memory(
-        deduped.writeStream.format("memory").outputMode("append"),
-        "st5_dedup",
-    ):
-        return spark.table("st5_dedup")
-    # Batch fallback: the identical distinct-by-key result.
-    (events,) = tables(spark, sf_dir, "events")
-    return (
-        events.unionByName(events)
-        .dropDuplicates(["event_id"])
-        .select("event_id", "event_type", dround(F.col("value"), 4).alias("value"))
-    )
+    return _drain_to_memory(deduped, "append", "st5_dedup")
 
 
 def _synthetic_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1095,8 +966,7 @@ def mm6_augmentation_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 1-hour window advancing every 30 minutes, so each event lands in
 # exactly two windows — the standard "rate over the trailing hour,
 # refreshed twice an hour" monitoring shape.  Same run contract as
-# st1: real Structured Streaming drained via availableNow with the
-# deterministic batch twin behind the exception-safe drain helper.
+# st1: real Structured Streaming drained once via availableNow.
 # State is |open windows| × |event types| — bounded regardless of
 # stream length.  The oracle materializes the two candidate window
 # starts per event arithmetically.
@@ -1116,8 +986,7 @@ FROM starts GROUP BY window_start, event_type
 
 @register("st6_sliding_window_rates", ST6_SQL, survey_ref="SURVEY §2.10; sliding (overlapping) streaming windows")
 def st6_sliding_window_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    stream = stream_table(spark, sf_dir, "events")
+    (stream,) = streams(spark, sf_dir, "events")
     windowed = (
         stream.groupBy(
             F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type"
@@ -1125,19 +994,7 @@ def st6_sliding_window_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    if _drain_to_memory(
-        windowed.writeStream.format("memory").outputMode("complete"),
-        "st6_sliding",
-    ):
-        return spark.table("st6_sliding")
-    (events,) = tables(spark, sf_dir, "events")
-    return (
-        events.groupBy(
-            F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type"
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
+    return _drain_to_memory(windowed, "complete", "st6_sliding")
 
 
 # --- MM7: modality-coverage profile ----------------------------------------
@@ -1301,24 +1158,16 @@ def st7_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = customer.select("c_custkey", "c_mktsegment")
     cents = F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("long")
 
-    def shape(fact: DataFrame) -> DataFrame:
-        return (
-            fact.join(dim, fact.user_id == dim.c_custkey)
-            .groupBy(F.col("c_mktsegment").alias("segment"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(cents).cast("long").alias("value_cents"),
-            )
+    (stream,) = streams(spark, sf_dir, "events")
+    enriched = (
+        stream.join(dim, stream.user_id == dim.c_custkey)
+        .groupBy(F.col("c_mktsegment").alias("segment"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(cents).cast("long").alias("value_cents"),
         )
-
-    stream = stream_table(spark, sf_dir, "events")
-    if _drain_to_memory(
-        shape(stream).writeStream.format("memory").outputMode("complete"),
-        "st7_enriched",
-    ):
-        return spark.table("st7_enriched")
-    (events,) = tables(spark, sf_dir, "events")
-    return shape(events)
+    )
+    return _drain_to_memory(enriched, "complete", "st7_enriched")
 
 
 # --- ST8: streaming session windows (watermarked, append mode) -------------
@@ -1371,15 +1220,7 @@ WHERE session_end <= (SELECT max(ts::TIMESTAMP) - INTERVAL '40 minutes' FROM eve
 
 @register("st8_streaming_sessions", ST8_SQL, survey_ref="SURVEY §2.10 + §2.6 W5; streaming session_window with watermark (native form of w5/w7 over an unbounded stream)")
 def st8_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def finalize(sessions: DataFrame, events: DataFrame) -> DataFrame:
-        mx = events.agg(F.max("ts").alias("mx"))
-        return (
-            sessions.crossJoin(F.broadcast(mx))
-            .where(F.col("session_end") <= F.col("mx") - F.expr("INTERVAL 40 minutes"))
-            .select("user_id", "session_start", "session_end", "n_events")
-        )
-
-    stream = stream_table(spark, sf_dir, "events")
+    (stream,) = streams(spark, sf_dir, "events")
     sessions = (
         stream.withWatermark("ts", "40 minutes")
         .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
@@ -1391,25 +1232,7 @@ def st8_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    if _drain_to_memory(
-        sessions.writeStream.format("memory").outputMode("append"),
-        "st8_sessions",
-    ):
-        return spark.table("st8_sessions")
-    # Batch twin: native session_window in batch mode (no watermark there,
-    # so the finalized-set filter is applied explicitly).
-    (events,) = tables(spark, sf_dir, "events")
-    batch_sessions = (
-        events.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    return finalize(batch_sessions, events)
+    return _drain_to_memory(sessions, "append", "st8_sessions")
 
 
 # --- MM9: perceptual-hash (dHash) image dedup manifest ----------------------

@@ -472,9 +472,9 @@ def test_mm8_patch_sums_by_bruteforce(spark):
         assert total == whole, (s, roi)
 
 
-def test_st7_stream_equals_batch_twin(spark):
-    """The streaming result must equal the batch twin exactly (same
-    shape() over a batch frame), and conservation must hold: segment
+def test_st7_stream_equals_duckdb_join_rollup(spark):
+    """The streaming result must equal a DuckDB join + group-by over the
+    same parquet files exactly, and conservation must hold: segment
     counts add up to the number of dim-matched events."""
     rows = REG["st7_stream_static_join"].fn(spark, SMALL_SF).collect()
     got = {(r["segment"], r["event_type"]): (r["n"], r["value_cents"]) for r in rows}

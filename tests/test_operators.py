@@ -554,54 +554,3 @@ def test_pagerank_mass_conserved_without_dangling(spark):
     ranks = [r["rank"] for r in pagerank(df, iterations=8).collect()]
     assert len(ranks) == n
     assert sum(ranks) == pytest.approx(1.0, rel=1e-9)
-
-
-def test_signlsh_topk_matches_bucket_restricted_bruteforce(spark):
-    """signlsh_topk's two-phase top-k must return exactly the k best
-    cosine neighbors WITHIN each vector's LSH bucket (the operator's
-    contract), identical to a driver-side brute-force over the same
-    buckets — and be invariant to the input partitioning (the local-heads
-    phase keys on spark_partition_id, so any partitioning's heads are a
-    superset of the global top-k)."""
-    import itertools
-    import math
-    import random
-
-    from ifcb_data_pipeline_spark.operators.similarity import signlsh_topk
-
-    rng = random.Random(7)
-    dim = 8
-    rows = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(40)]
-    anchors = [(j, [rng.gauss(0, 1) for _ in range(dim)]) for j in range(3)]
-
-    def bucket(v):
-        return "".join(
-            "1" if sum(x * y for x, y in zip(v, a)) > 0 else "0"
-            for _, a in sorted(anchors)
-        )
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / math.sqrt(sum(x * x for x in a) * sum(y * y for y in b))
-
-    want = {}
-    for i, v in rows:
-        cands = sorted(
-            (
-                (-cos(v, w), j)
-                for j, w in rows
-                if j != i and bucket(w) == bucket(v)
-            ),
-        )[:3]
-        for rank, (negc, j) in enumerate(cands, start=1):
-            want[(i, j)] = rank
-
-    for parts in (1, 5, 13):
-        df = spark.createDataFrame(rows, "vec_id long, v array<double>").repartition(
-            parts
-        )
-        got = {
-            (r["query_id"], r["neighbor_id"]): r["rank"]
-            for r in signlsh_topk(df, anchors, k=3).collect()
-        }
-        assert got == want, f"parts={parts}"

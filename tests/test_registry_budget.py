@@ -1,63 +1,9 @@
-"""Registry-sweep timing guard.
-
-Times the first 50 registry entries in ``load_all()`` order at sf0.01
-(Spark side only — the DuckDB oracle side is cheap by comparison) and
-fails if they outgrow the budget, so a reorder or a slow new entry near
-the front of the registry can't silently blow up the sweep's wall clock.
-"""
+"""bench.py contract checks: the headline names resolve in the registry
+and the summary line fits the bounded stdout tail that is captured."""
 
 from __future__ import annotations
 
-import time
-
 from ifcb_data_pipeline_spark.queries import load_all
-
-PREFIX = 50
-BUDGET_S = 90.0
-
-
-def _sweep(spark, sf_dir, names, reg) -> tuple[float, dict[str, float]]:
-    timings: dict[str, float] = {}
-    t0 = time.monotonic()
-    for name in names:
-        t = time.monotonic()
-        df = reg[name].fn(spark, sf_dir)
-        df.collect()
-        timings[name] = time.monotonic() - t
-    return time.monotonic() - t0, timings
-
-
-def test_prefix_sweep_within_budget(spark, sf_dir):
-    """Retry-once hygiene (the bench.py spread-retry rule, VERDICT r17
-    item 8): this box's co-tenancy swings parallel throughput up to 3×
-    between windows (MACHINE_BASELINE.jsonl), and a single sweep in a
-    bad window reads as a 130 s "regression" on unchanged code (r18
-    forensics: the warm sweep is ~41 s in a clean window even after
-    running the WHOLE registry first, so the overruns were window
-    draws, not code or JVM aging).  One overrun triggers exactly one
-    re-sweep — warm, so it also sheds the cold-session first-query
-    cost the driver's fresh-process gate amortizes differently — and
-    the better draw is judged.  A real prefix regression fails both."""
-    from bench import machine_probe
-
-    reg = load_all()
-    names = list(reg)[:PREFIX]
-    total, timings = _sweep(spark, sf_dir, names, reg)
-    if total >= BUDGET_S:
-        probe_mid = machine_probe()
-        retry_total, retry_timings = _sweep(spark, sf_dir, names, reg)
-        # probe BOTH windows (ADVICE r18): the failure message must
-        # describe the sweep actually judged, not the discarded draw.
-        probe_after = machine_probe()
-        if retry_total < total:
-            total, timings = retry_total, retry_timings
-        slowest = sorted(timings.items(), key=lambda kv: -kv[1])[:8]
-        assert total < BUDGET_S, (
-            f"first-{PREFIX} prefix took {total:.1f}s best-of-2 "
-            f"(> {BUDGET_S}s budget; probe between sweeps {probe_mid}, "
-            f"after retry {probe_after}); "
-            f"slowest: {[(n, round(s, 2)) for n, s in slowest]}"
-        )
 
 
 def test_bench_summary_line_fits_tail_window():

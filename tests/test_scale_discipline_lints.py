@@ -45,7 +45,6 @@ BROADCAST_INVENTORY: dict[tuple[str, str], int] = {
     ("operators/similarity.py", "cosine_topk"): 1,
     ("operators/similarity.py", "ivf_assign"): 1,
     ("operators/similarity.py", "ivf_assign_probes"): 1,
-    ("operators/skew.py", "salted_broadcast_join"): 1,
     ("operators/windows.py", "global_rank"): 1,
     ("operators/windows.py", "grouped_prefix_sum"): 1,
     ("operators/windows.py", "stitched_adjacency_flag"): 1,
@@ -67,8 +66,6 @@ BROADCAST_INVENTORY: dict[tuple[str, str], int] = {
     ("queries/joins.py", "j18_bloom_join_prefilter"): 2,
     ("queries/joins.py", "j1_enrichment_chain"): 2,
     ("queries/multimodal.py", "augmented_panel_rois"): 1,
-    ("queries/multimodal.py", "finalize"): 1,
-    ("queries/multimodal.py", "st3_watermarked_append"): 1,
     ("queries/pipelines.py", "k7_ecotaxa_export"): 1,
     ("queries/pipelines.py", "p2_hab_alert"): 1,
     ("queries/profiling.py", "dp11_psi_drift"): 1,
@@ -248,8 +245,6 @@ CROSSJOIN_INVENTORY: dict[tuple[str, str], int] = {
     ("queries/dedup.py", "dd14_lsh_recall"): 2,
     ("queries/dedup.py", "dd15_lsh_parameter_sweep"): 2,
     ("queries/multimodal.py", "augmented_panel_rois"): 1,
-    ("queries/multimodal.py", "finalize"): 1,
-    ("queries/multimodal.py", "st3_watermarked_append"): 1,
     ("queries/profiling.py", "dp11_psi_drift"): 1,
     ("queries/profiling.py", "dp4_domain_mixture"): 1,
     ("queries/profiling.py", "dp9_mutual_information"): 5,
@@ -339,9 +334,9 @@ def test_no_native_round_anywhere():
 
 def test_no_row_at_a_time_udfs():
     """Row-at-a-time Python UDFs (F.udf/@udf) are the slow path — banned
-    outright.  Arrow-batched pandas UDFs are allowed but pinned: the only
-    one in the package is geo.py's point-in-polygon vectorized kernel
-    (everything else is built-in functions or mapInPandas batches)."""
+    outright.  Arrow-batched pandas UDFs are allowed but pinned: the
+    package has none (everything is built-in functions or mapInPandas
+    batches)."""
     row_udfs, pandas_udfs = [], []
     for p in sorted(PKG.rglob("*.py")):
         text = p.read_text()
@@ -349,7 +344,7 @@ def test_no_row_at_a_time_udfs():
             row_udfs.append(str(p))
         pandas_udfs += [str(p.relative_to(PKG))] * text.count("pandas_udf(")
     assert not row_udfs, f"row-at-a-time UDFs found: {row_udfs}"
-    assert sorted(pandas_udfs) == ["operators/geo.py"], pandas_udfs
+    assert pandas_udfs == [], pandas_udfs
 
 
 def test_forced_broadcast_inventory_is_pinned():
@@ -397,7 +392,6 @@ WINDOW_ORDER_INVENTORY: dict[tuple[str, str], int] = {
     # map-only array_min/array_sort form in r18 — no window remains
     ("operators/similarity.py", "ivf_topk"): 1,
     ("operators/similarity.py", "ivf_topk_nprobe"): 1,
-    ("operators/similarity.py", "signlsh_topk"): 2,
     ("operators/windows.py", "global_rank"): 1,
     ("operators/windows.py", "grouped_prefix_sum"): 1,
     # stitched_adjacency_flag's bucket-order window: one row per bucket
@@ -414,7 +408,7 @@ WINDOW_ORDER_INVENTORY: dict[tuple[str, str], int] = {
     ("queries/joins.py", "i9_scd2_compaction"): 2,
     ("queries/joins.py", "j17_point_in_time_join"): 1,
     ("queries/multimodal.py", "mm10_voice_activity"): 1,
-    ("queries/multimodal.py", "st2_stateful_user_counts"): 2,
+    ("queries/multimodal.py", "st2_stateful_user_counts"): 1,
     ("queries/packing.py", "pk3_length_bucketed_batching"): 1,
     # p2_hab_alert left this inventory in r18: its per-taxon argmax is now
     # a struct-min aggregation (25 hot keys made the window a built-in
@@ -582,3 +576,20 @@ def test_window_starred_order_inventory_is_pinned():
         "contract at the new call site, then update "
         "WINDOW_ORDER_STARRED_INVENTORY."
     )
+
+
+# --- lint 7: one availableNow drain ------------------------------------------
+# Every stream the package runs goes through streaming/incremental.drain,
+# which raises on a failed or stalled query and always stops it.  A
+# second start/await/stop routine is how a swallowed streaming error
+# (a helper returning False, a caller falling back to a batch copy)
+# comes back.
+def test_streams_run_only_through_drain():
+    drain_site = {("streaming/incremental.py", "drain"): 1}
+    got = {a: _scan_calls(a) for a in ("trigger", "awaitTermination", "start")}
+    assert got == {
+        "trigger": drain_site,
+        "awaitTermination": drain_site,
+        # the one other .start() is graph.py's observe-metrics poll thread
+        "start": {**drain_site, ("operators/graph.py", "_observation_get"): 1},
+    }, "run stream writers through streaming/incremental.drain"

@@ -1857,8 +1857,8 @@ def test_sim10_matches_python_pq_replay(spark):
 
 
 def test_st1_matches_python_hour_buckets(spark):
-    """The streamed (or fallback-batch) hourly windows must equal a
-    plain Python dict count over epoch-aligned hour floors."""
+    """The streamed hourly windows must equal a plain Python dict count
+    over epoch-aligned hour floors."""
     from collections import Counter
 
     got = _run(spark, "st1_stream_windowed_counts")

@@ -5,10 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ifcb_data_pipeline_spark.operators.skew import (
-    salted_aggregate,
-    salted_broadcast_join,
-)
+from ifcb_data_pipeline_spark.operators.skew import salted_aggregate
 from ifcb_data_pipeline_spark.sources.tables import load_table
 
 
@@ -41,16 +38,6 @@ def test_salted_aggregate_matches_plain(spark, sf_dir):
         assert salted[k]["n"] == plain[k]["n"]
         assert salted[k]["total"] == pytest.approx(plain[k]["total"], rel=1e-12)
         assert salted[k]["mx"] == plain[k]["mx"]
-
-
-def test_salted_broadcast_join_matches_plain(spark, sf_dir):
-    lineitem = load_table(spark, sf_dir, "lineitem").limit(5000)
-    part = load_table(spark, sf_dir, "part").withColumnRenamed(
-        "p_partkey", "l_partkey"
-    )
-    plain = lineitem.join(F.broadcast(part), "l_partkey").count()
-    salted = salted_broadcast_join(lineitem, part, "l_partkey").count()
-    assert salted == plain
 
 
 def test_dd11_survivor_rule_under_planted_boilerplate(spark):

@@ -14,6 +14,7 @@ from ifcb_data_pipeline_spark.streaming.incremental import (
     new_work,
     run_incremental_batch,
 )
+from tests.conftest import SF_SMOKE
 
 
 def test_new_work_anti_join(spark):
@@ -185,49 +186,79 @@ def test_hab_alert_hysteresis_stream(spark):
     assert got == [(t, e, ts, p) for t, e, ts, p in expected]
 
 
-def test_drain_helper_returns_false_on_streaming_failure(spark, sf_dir):
-    """ADVICE r4: a streaming failure (not just a timeout) must leave the
-    batch fallback reachable.  An append-mode aggregate WITHOUT a
-    watermark is rejected by the engine at start() — the helper must
-    swallow that and return False instead of raising."""
-    from pyspark.sql import functions as F
+def test_drain_to_memory_raises_on_streaming_failure(spark, sf_dir):
+    """A streaming failure must surface, not turn into some other
+    result.  An append-mode aggregate WITHOUT a watermark is rejected
+    by the engine at start(); the drain raises that error."""
+    from pyspark.errors import AnalysisException
 
     from ifcb_data_pipeline_spark.queries.multimodal import _drain_to_memory
+    from ifcb_data_pipeline_spark.sources.tables import stream_table
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(
-            "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-            " value double, props string"
-        )
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "events")
     # no withWatermark → append mode on an aggregate is an AnalysisException
     bad = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    ok = _drain_to_memory(
-        bad.writeStream.format("memory").outputMode("append"),
-        "drain_helper_failure_probe",
+    with pytest.raises(AnalysisException, match="(?i)watermark"):
+        _drain_to_memory(bad, "append", "drain_failure_probe")
+    assert not spark.streams.active
+
+
+def test_drain_raises_timeout_and_stops_a_stalled_stream(spark, tmp_path, monkeypatch):
+    """A query still running when the drain's wait ends raises
+    TimeoutError naming it, and is stopped rather than left running."""
+    import time
+
+    from ifcb_data_pipeline_spark.streaming import incremental
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.csv").write_text("1\n")
+    monkeypatch.setattr(incremental, "DRAIN_TIMEOUT_S", 1)
+    stream = spark.readStream.schema("x int").csv(str(src))
+    writer = (
+        stream.writeStream.queryName("stalled_drain_probe")
+        .foreachBatch(lambda df, batch_id: time.sleep(5))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
     )
-    assert ok is False
+    with pytest.raises(TimeoutError, match="stalled_drain_probe"):
+        incremental.drain(writer)
+    assert not spark.streams.active
+
+
+STREAM_SINKS = {
+    "st1_stream_windowed_counts": "st1_windowed",
+    "st2_stateful_user_counts": "st2_stateful",
+    "st3_watermarked_append": "st3_watermarked",
+    "st4_stream_stream_join": "st4_attribution",
+    "st5_streaming_dedup": "st5_dedup",
+    "st6_sliding_window_rates": "st6_sliding",
+    "st7_stream_static_join": "st7_enriched",
+    "st8_streaming_sessions": "st8_sessions",
+}
+
+
+@pytest.mark.parametrize("name", sorted(STREAM_SINKS))
+def test_stream_query_reads_only_its_memory_sink(spark, name):
+    """Each streaming registry query drains its stream into a memory
+    sink and returns a frame over that sink: no file is read after the
+    drain, so the oracle checks pin the streaming path."""
+    from ifcb_data_pipeline_spark.queries import load_all
+
+    out = load_all()[name].fn(spark, SF_SMOKE)
+    assert any(t.name == STREAM_SINKS[name] for t in spark.catalog.listTables())
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "MemoryPlan" in plan and "Relation" not in plan, plan
 
 
 def test_st8_streaming_path_drains(spark, sf_dir):
-    """The session-window stream must actually drain (availableNow) —
-    st8's correctness row must pin the STREAMING path, not the batch
-    twin.  After the run the memory sink holds exactly the finalized
-    sessions: every emitted session_end <= max(ts) - 40 min."""
-    from pyspark.sql import functions as F
-
+    """After the run the memory sink holds exactly the finalized
+    sessions: every emitted session_end <= max(ts) - 40 min, and
+    sessions are per-user disjoint."""
     from ifcb_data_pipeline_spark.queries.multimodal import (
         st8_streaming_sessions,
     )
 
     out = st8_streaming_sessions(spark, sf_dir)
-    # the streaming drain registers a memory table; batch fallback doesn't
-    assert any(t.name == "st8_sessions" for t in spark.catalog.listTables()), (
-        "st8 fell back to the batch twin on a healthy stream"
-    )
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     mx = events.agg(F.max("ts")).collect()[0][0]
     rows = out.collect()

@@ -63,7 +63,7 @@ def test_stream_matches_batch_twin(spark, dirs):
         ("sal", _mins(13), 33.0, ""),
     ]
     _write_csv(os.path.join(inp, "f1.csv"), rows)
-    assert run_streaming_tick(spark, inp, out, ckpt)
+    run_streaming_tick(spark, inp, out, ckpt)
     got = _collect_out(spark, out)
     want = sorted(
         (r["window_start"], r["sensor"], r["n"], r["value_cents"])
@@ -78,10 +78,10 @@ def test_incremental_rerun_appends_exactly_once(spark, dirs):
         os.path.join(inp, "f1.csv"),
         [("sal", _mins(m), 30.0, "ok") for m in range(0, 60, 5)],
     )
-    assert run_streaming_tick(spark, inp, out, ckpt)
+    run_streaming_tick(spark, inp, out, ckpt)
     first = _collect_out(spark, out)
     # re-run with NO new data: nothing may be appended (exactly-once)
-    assert run_streaming_tick(spark, inp, out, ckpt)
+    run_streaming_tick(spark, inp, out, ckpt)
     assert _collect_out(spark, out) == first
     # new file advances the watermark -> strictly more finalized windows,
     # and the union must equal the batch twin over ALL files
@@ -89,7 +89,7 @@ def test_incremental_rerun_appends_exactly_once(spark, dirs):
         os.path.join(inp, "f2.csv"),
         [("sal", _mins(m), 31.0, "ok") for m in range(60, 150, 5)],
     )
-    assert run_streaming_tick(spark, inp, out, ckpt)
+    run_streaming_tick(spark, inp, out, ckpt)
     final = _collect_out(spark, out)
     assert len(final) > len(first)
     assert set(first) <= set(final), "finalized windows must never be re-emitted"
@@ -110,7 +110,7 @@ def test_late_data_is_dropped_after_finalization(spark, dirs):
         os.path.join(inp, "f1.csv"),
         [("sal", _mins(m), 30.0, "ok") for m in range(0, 120, 5)],
     )
-    assert run_streaming_tick(spark, inp, out, ckpt)
+    run_streaming_tick(spark, inp, out, ckpt)
     first = _collect_out(spark, out)
     assert first
     # a whole file of LATE rows: timestamps inside windows that the
@@ -119,7 +119,7 @@ def test_late_data_is_dropped_after_finalization(spark, dirs):
         os.path.join(inp, "late.csv"),
         [("sal", _mins(m), 99.0, "ok") for m in range(0, 30, 5)],
     )
-    assert run_streaming_tick(spark, inp, out, ckpt)
+    run_streaming_tick(spark, inp, out, ckpt)
     assert _collect_out(spark, out) == first, (
         "late rows must not mutate finalized windows"
     )

@@ -38,13 +38,21 @@ SF_DIR = "/root/testdata/sf0.001"
 
 # registered queries whose plans contain the NTZ→TIMESTAMP cast feeding
 # unix_micros (the session-tz-sensitive construction), plus session
-# windows and watermark-relative lateness for breadth
+# windows and watermark-relative lateness for breadth, plus the
+# event-time streams, which read ts as TIMESTAMP (``_util.streams``)
 TZ_SENSITIVE = [
     "a22_decayed_engagement",
     "a23_cohort_retention",
     "j4_asof_join",
     "w7_native_session_window",
     "i11_late_data_audit",
+    "st1_stream_windowed_counts",
+    "st3_watermarked_append",
+    "st4_stream_stream_join",
+    "st5_streaming_dedup",
+    "st6_sliding_window_rates",
+    "st7_stream_static_join",
+    "st8_streaming_sessions",
 ]
 
 
