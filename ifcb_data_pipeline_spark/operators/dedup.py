@@ -15,7 +15,7 @@ family a 100 TB text corpus needs:
 * :func:`ngram_jaccard_pairs` — exact Jaccard via an inverted-index
   self-join (pairs sharing ≥1 shingle), the verification stage after LSH.
 
-All hashing is md5-based (:func:`..queries._util.hash32`) so results are
+All hashing is md5-based (:func:`hash32`) so results are
 reproducible across engines and runs — no JVM-specific hash functions.
 """
 
@@ -27,7 +27,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _hash32(col: Column) -> Column:
+def hash32(col: Column) -> Column:
+    """Deterministic 32-bit integer hash shared with the oracles: the
+    first 8 hex chars of md5 as BIGINT (DuckDB twin:
+    ``queries/_util.HASH32_SQL``)."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
@@ -54,7 +57,7 @@ def _plane_literal_columns(dim: int, n_planes: int) -> list[Column]:
     round trips (measured r17, 64×64), paid on EVERY
     ``embedding_lsh_pairs`` call without this cache.  Column objects are
     unresolved expression trees — reusable across queries and sessions
-    within a process (and client-side protos under Connect)."""
+    within a process."""
     key = (dim, n_planes)
     if key not in _PLANE_COL_CACHE:
         _PLANE_COL_CACHE[key] = [
@@ -343,7 +346,7 @@ def simhash(shingles: DataFrame, bits: int = 32) -> DataFrame:
     never by exploding ``bits`` rows per shingle, which would multiply the
     pre-shuffle row count by ``bits``.  Shuffle rows = |docs|, map-side
     combine does the rest."""
-    hashed = shingles.withColumn("h", _hash32(F.col("shingle")))
+    hashed = shingles.withColumn("h", hash32(F.col("shingle")))
     aggs = [
         F.sum(
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)

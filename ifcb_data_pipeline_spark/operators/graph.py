@@ -19,6 +19,11 @@ advisory-sized partition, a single task finishes the contraction.
 link analysis — the crawl-side quality signal) shares the same iterative
 discipline: per-iteration key-partitioned joins with localCheckpoint-ed
 O(1) lineage.
+
+The counts the iterations size themselves from (the convergence
+fingerprint, pagerank's edge count) are ``DataFrame.observe`` metrics of
+the localCheckpoint job that runs anyway, read with ``Observation.get``
+once that job has finished: no count runs as a job of its own.
 """
 
 from __future__ import annotations
@@ -27,63 +32,6 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .skew import _parse_bytes
-
-# Flipped (permanently, per session) the first time an Observation fails
-# to deliver within the timeout — e.g. a runtime where the eager
-# localCheckpoint action does not fire QueryExecutionListener metrics
-# (Spark Connect).  After that every fingerprint uses the explicit-agg
-# fallback: one extra job per round beats an indefinite obs.get hang
-# (ADVICE r16).
-_OBSERVE_UNAVAILABLE = False
-_OBSERVE_TIMEOUT_S = 120.0
-
-
-def _observation_get(obs: Observation, timeout_s: float = _OBSERVE_TIMEOUT_S):
-    """``Observation.get`` with a timeout: get blocks forever when the
-    metrics never fire, so poll it from a daemon thread and raise
-    TimeoutError instead of hanging the driver.
-
-    The blocking get runs on a bare ``threading.Thread(daemon=True)``
-    rather than a ThreadPoolExecutor worker: CPython joins executor
-    threads at interpreter exit (even after ``shutdown(wait=False)``),
-    so a get that never returns — the exact scenario this timeout
-    exists for — would otherwise hang process shutdown (ADVICE r17)."""
-    import queue
-    import threading
-
-    box: queue.Queue = queue.Queue(maxsize=1)
-
-    def _poll() -> None:
-        try:
-            box.put((True, obs.get))
-        except BaseException as exc:  # surface get()'s own failure
-            box.put((False, exc))
-
-    threading.Thread(target=_poll, daemon=True, name="obs-get").start()
-    try:
-        ok, payload = box.get(timeout=timeout_s)
-    except queue.Empty:
-        raise TimeoutError(
-            f"Observation metrics not delivered within {timeout_s}s"
-        ) from None
-    if not ok:
-        raise payload
-    return payload
-
-
-def _observed_or(obs: Observation, fallback):
-    """The metrics of ``obs``, or ``fallback()`` when the runtime does not
-    deliver them.  The first timeout sets the session-wide
-    ``_OBSERVE_UNAVAILABLE`` latch, so later calls go straight to the
-    fallback instead of waiting out the timeout again."""
-    global _OBSERVE_UNAVAILABLE
-    if not _OBSERVE_UNAVAILABLE:
-        try:
-            return _observation_get(obs)
-        except TimeoutError:
-            _OBSERVE_UNAVAILABLE = True
-    return fallback()
-
 
 # Round cap of :func:`connected_components`: O(log n) star rounds label
 # any graph this engine builds long before it.
@@ -211,8 +159,9 @@ def connected_components(
     the *current* edge set (window-min, not groupBy + join back), the
     edge set is deduplicated once per star pair and
     ``localCheckpoint``-ed every two pairs, and the convergence
-    fingerprint rides that checkpoint job as an ``observe`` metric — so
-    each two-pair round costs exactly ONE Spark job.  Convergence is
+    fingerprint rides that checkpoint job as an ``observe`` metric, read
+    with ``Observation.get`` after the job — so each two-pair round costs
+    exactly ONE Spark job.  Convergence is
     detected by the (count, bit_xor-of-xxhash64) fingerprint and then
     *proven* with an exact anti-join before exiting, so a
     fingerprint collision can never return early with a wrong labeling.
@@ -223,21 +172,14 @@ def connected_components(
         ``observe`` metric instead of a second collect job.  bit_xor, not
         sum: ANSI mode makes a 64-bit hash sum overflow; xor is
         order-insensitive and closed over long.  The edge set is
-        distinct, so xor's pair-cancellation blindness never triggers.
-        If the runtime never delivers the observe metrics (ADVICE r16:
-        obs.get blocks forever there), fall back — once, then
-        permanently for the session — to an explicit two-column agg on
-        the checkpointed frame (one extra job per round)."""
-        fp_cols = (
+        distinct, so xor's pair-cancellation blindness never triggers."""
+        obs = Observation()
+        ck = df.observe(
+            obs,
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-        )
-        obs = Observation()
-        if _OBSERVE_UNAVAILABLE:
-            ck = df.localCheckpoint()
-        else:
-            ck = df.observe(obs, *fp_cols).localCheckpoint()  # eager job
-        got = _observed_or(obs, lambda: ck.agg(*fp_cols).collect()[0])
+        ).localCheckpoint()  # eager job
+        got = obs.get
         return ck, (got["n"], got["h"])
 
     e, fp = checkpoint_with_fingerprint(
@@ -373,7 +315,7 @@ def pagerank(
         .observe(obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    n_edges = int(_observed_or(obs, lambda: {"n": e_deg.count()})["n"])
+    n_edges = int(obs.get["n"])
 
     # Scale-adaptive iteration parallelism (round 18, guide §2.2) — the
     # same sizing rule as connected_components: every iteration's

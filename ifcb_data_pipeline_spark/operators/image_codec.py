@@ -114,19 +114,6 @@ def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     return img[yi][:, xi]
 
 
-def letterbox(img: np.ndarray, out_h: int, out_w: int, fill: int = 0) -> np.ndarray:
-    """Aspect-preserving resize onto a ``fill``-padded canvas (the usual
-    pre-batching normalization for vision models)."""
-    h, w = img.shape[:2]
-    scale = min(out_h / h, out_w / w)
-    nh, nw = max(1, int(h * scale)), max(1, int(w * scale))
-    resized = resize_nearest(img, nh, nw)
-    canvas = np.full((out_h, out_w), fill, dtype=img.dtype)
-    y0, x0 = (out_h - nh) // 2, (out_w - nw) // 2
-    canvas[y0 : y0 + nh, x0 : x0 + nw] = resized
-    return canvas
-
-
 def decode_image(
     raw: bytes, width: int | None = None, height: int | None = None
 ) -> np.ndarray:

@@ -159,38 +159,6 @@ def extract_features(rois: DataFrame) -> DataFrame:
     return rois.mapInPandas(features, schema=FEATURE_SCHEMA)
 
 
-def resize_rois(
-    rois: DataFrame, out_h: int, out_w: int, mode: str = "nearest"
-) -> DataFrame:
-    """Batch image normalization (the resize step of a vision-model
-    ingest): decode → nearest/letterbox resize → re-encode PGM, width/
-    height metadata updated.  Same schema in as out, so resizes compose
-    with every other ROI operator."""
-    from .image_codec import encode_pgm, letterbox, resize_nearest
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            images = []
-            for blob, w, h in zip(pdf["image"], pdf["width"], pdf["height"]):
-                img = decode_image(bytes(blob), w, h)
-                if mode == "letterbox":
-                    out = letterbox(img, out_h, out_w)
-                else:
-                    out = resize_nearest(img, out_h, out_w)
-                images.append(encode_pgm(out))
-            yield pd.DataFrame(
-                {
-                    "sample": pdf["sample"],
-                    "roi_number": pdf["roi_number"],
-                    "image": images,
-                    "width": out_w,
-                    "height": out_h,
-                }
-            )
-
-    return rois.mapInPandas(kernel, schema=ROI_SCHEMA)
-
-
 VIDEO_SCHEMA = T.StructType(
     [
         T.StructField("video_id", T.StringType(), False),
@@ -218,8 +186,8 @@ def sample_video_frames(videos: DataFrame, every_k: int) -> DataFrame:
 
     The ``payload`` column is a raw frame slab (``n_frames`` × w×h bytes,
     row-major — the layout a demuxer produces); each sampled frame is
-    byte-sliced out and re-wrapped as PGM so frames flow into the image
-    operators (``resize_rois``, ``extract_features``).  Container demux
+    byte-sliced out and re-wrapped as PGM, so a frame decodes with
+    :func:`decode_image` like any ROI image.  Container demux
     (mp4/mkv) is an external-library boundary, same policy as PNG/JPEG in
     :mod:`.image_codec`."""
     from .image_codec import encode_pgm

@@ -167,39 +167,6 @@ def ivf_assign(
     )
 
 
-def ivf_topk(
-    assigned: DataFrame,
-    queries_filter,
-    k: int = 3,
-) -> DataFrame:
-    """nprobe=1 IVF search: each query scans ONLY its own cell.  Input
-    is :func:`ivf_assign` output; ``queries_filter`` is a Column
-    predicate selecting the query ids."""
-    q = assigned.where(queries_filter).select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"), "cell"
-    )
-    c = assigned.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv_"), "cell"
-    )
-    scored = (
-        q.join(c, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qv"), F.col("cv_")).alias("cos_raw"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_raw")
-    )
-
-
 def ivf_assign_probes(
     vectors: DataFrame,
     centroid_arrays: DataFrame,
@@ -239,9 +206,11 @@ def ivf_topk_nprobe(
     queries_filter,
     k: int = 3,
 ) -> DataFrame:
-    """IVF search with multi-cell probing: queries scan all their probed
-    cells, the corpus is indexed under its primary cell only (so no
-    neighbor appears twice).  Input is :func:`ivf_assign_probes`."""
+    """IVF search: queries scan all their probed cells, the corpus is
+    indexed under its primary cell only (so no neighbor appears twice).
+    Input is :func:`ivf_assign_probes`; at ``nprobe=1`` each query scans
+    only its own cell (the first element of the lexicographic
+    ``(d2, cell)`` sort is :func:`ivf_assign`'s ``array_min``)."""
     q = probes.where(queries_filter).select(
         F.col("id").alias("query_id"), F.col("v").alias("qv"), "cell"
     )

@@ -67,21 +67,12 @@ def _parse_bytes(v: str) -> int:
     return int(float(s) * mult)
 
 
-def _session_parallelism(sess) -> int:
-    """defaultParallelism in classic mode; under Spark Connect (no
-    sparkContext) fall back to the shuffle-partition conf."""
-    try:
-        return sess.sparkContext.defaultParallelism
-    except Exception:
-        return int(sess.conf.get("spark.sql.shuffle.partitions", "200"))
-
-
 def _estimate_scan_partitions(df: DataFrame) -> int | None:
     """Estimate the scan's split count from ``inputFiles()`` + the file
     source confs — the same arithmetic as Spark's
     ``FilePartition.maxSplitBytes`` + first-fit packing — WITHOUT
-    touching ``df.rdd`` (which breaks under Spark Connect, silently
-    converts the frame, and forces physical planning per call).
+    touching ``df.rdd`` (which converts the frame and forces physical
+    planning per call).
 
     Returns None when the files cannot be stat'ed (non-local scheme, or
     an in-memory frame with no files) — the caller treats that as
@@ -114,7 +105,7 @@ def _estimate_scan_partitions(df: DataFrame) -> int | None:
     try:
         min_part_num = int(conf.get("spark.sql.files.minPartitionNum"))
     except Exception:
-        min_part_num = _session_parallelism(df.sparkSession)
+        min_part_num = df.sparkSession.sparkContext.defaultParallelism
     total = sum(sizes) + open_cost * len(sizes)
     bytes_per_core = total / max(1, min_part_num)
     max_split = int(min(max_pb, max(open_cost, bytes_per_core)))
@@ -161,14 +152,14 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     MUST be applied on scan-adjacent DataFrames (all call sites comply):
     the split estimate reads the frame's ``inputFiles()``, so it speaks
     for the scan, not for any shuffle in between.  The estimate is
-    logical-plan-only and Connect-safe — no ``df.rdd`` probe (which
-    would force physical planning per call, report pre-AQE counts
-    downstream of a shuffle, and break under Spark Connect).  When the
+    logical-plan-only — no ``df.rdd`` probe (which would force physical
+    planning per call and report pre-AQE counts downstream of a
+    shuffle).  When the
     input files cannot be stat'ed (object store, in-memory frame) the
     scan is assumed un-starved and the call is a no-op — pass an
     explicit ``min_parts`` to force a target in that case.
     """
-    target = min_parts or _session_parallelism(df.sparkSession)
+    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
     est = _estimate_scan_partitions(df)
     if est is None and min_parts is None:
         return df

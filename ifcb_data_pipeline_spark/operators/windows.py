@@ -215,12 +215,8 @@ def _pin_boundary_sample(pre: DataFrame, reliable: bool) -> DataFrame:
     identical (tests/test_rank_combinators.py exercises both)."""
     if reliable:
         # Early-validate that a checkpoint dir is configured so the
-        # error names the fix; _jsc is a private py4j handle absent
-        # under Spark Connect, so when it isn't there fall through and
-        # let checkpoint() itself raise (same failure, later message).
-        sc = pre.sparkSession.sparkContext
-        jsc = getattr(sc, "_jsc", None)
-        if jsc is not None and jsc.sc().getCheckpointDir().isEmpty():
+        # error names the fix.
+        if pre.sparkSession.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
             raise RuntimeError(
                 "reliable=True requires spark.sparkContext.setCheckpointDir "
                 "(reliable storage: HDFS/S3 on a cluster)"

@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.graph import _observed_or
 from ..operators.kernels import features_from_images
 from ..operators.multimodal import explode_bins_to_rois
 from ..operators.psd import PROFILE_INGEST, psd_flag, psd_powerlaw_fit, size_histogram
@@ -37,8 +36,7 @@ def write_psd(features: DataFrame, path: str) -> int:
     )
     obs = Observation()
     psd.observe(obs, F.count("flag").alias("flagged")).write.mode("append").parquet(path)
-    flagged = psd.where(F.col("flag").isNotNull())
-    return int(_observed_or(obs, lambda: {"flagged": flagged.count()})["flagged"])
+    return int(obs.get["flagged"])
 
 
 def ingest_tick(

@@ -38,11 +38,10 @@ def streams(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [stream_table(spark, sf_dir, n) for n in names]
 
 
-# Canonical implementation lives with the other physical-layout
-# combinators in operators/skew.py (operators never import from
-# queries/, so the shared-operator call sites — shingle_sets,
-# explode_bins_to_rois — need it at that layer); re-exported here so
-# query modules keep their one-stop `_util` import.
+# fan_out and hash32 live in operators/ (operators never import from
+# queries/, and shingle_sets / simhash call them there);
+# re-exported here so query modules keep their one-stop `_util` import.
+from ..operators.dedup import hash32  # noqa: E402,F401
 from ..operators.skew import fan_out  # noqa: E402,F401
 
 
@@ -74,11 +73,6 @@ def dround_sql(expr: str, d: int) -> str:
     """DuckDB twin of :func:`dround`."""
     f = float(10.0**d)
     return f"(floor(({expr}) * {f!r} + 0.5) / {f!r})"
-
-
-def hash32(col: Column) -> Column:
-    """Deterministic 32-bit integer hash shared with the oracle."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 HASH32_SQL = "(('0x' || substr(md5({x}), 1, 8))::BIGINT)"

@@ -441,13 +441,13 @@ def mm3_resize_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from collections.abc import Iterator
 
-    # resize + mean FUSED into one mapInPandas (guide §4: the separate
-    # resize_rois stage was a JVM↔Python round trip plus a PGM
-    # re-encode/re-decode whose only purpose was carrying pixels to this
+    # resize + mean FUSED into one mapInPandas (guide §4: a separate
+    # resize stage would be a JVM↔Python round trip plus a PGM
+    # re-encode/re-decode whose only purpose is carrying pixels to this
     # stage; see mm8 for the measured full-width worker-stampede cost of
-    # the 3-node chain).  PGM is lossless and resize_nearest
-    # deterministic, so decode→resize→mean in one pass is value-identical
-    # to the old resize_rois→decode chain — oracle-verified at all 3 SFs.
+    # a 3-node chain).  PGM is lossless and resize_nearest
+    # deterministic, so decode→resize→mean in one pass gives the values
+    # a staged chain would.
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..operators.image_codec import resize_nearest
         from ..operators.multimodal import decode_image
@@ -1095,8 +1095,7 @@ def mm8_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two stages; r18 measured the 3-node chain's full-width worker
     # stampede at 2-15 s/pass on 38 rows).  PGM is lossless and
     # resize_nearest deterministic, so decode→resize→patch-sum in one
-    # pass is value-identical to the old resize_rois→decode chain —
-    # oracle-verified at all 3 SFs.
+    # pass gives the values a staged chain would.
     def patchify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 

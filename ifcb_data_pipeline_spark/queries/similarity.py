@@ -240,7 +240,7 @@ SELECT query_id, neighbor_id, rank, cos_sim FROM ranked WHERE rank <= 3
 
 @register("sim4_ivf_search", SIM4_SQL, survey_ref="north-star ANN: IVF nprobe=1 search over sim3 cells")
 def sim4_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import ivf_assign, ivf_topk
+    from ..operators.similarity import ivf_assign_probes, ivf_topk_nprobe
 
     (embeddings,) = tables(spark, sf_dir, "embeddings")
     e = embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
@@ -259,8 +259,8 @@ def sim4_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cv")
         )
     )
-    assigned = ivf_assign(e, cent_arr)
-    out = ivf_topk(assigned, F.col("id") < 10, k=3)
+    probes = ivf_assign_probes(e, cent_arr, nprobe=1)
+    out = ivf_topk_nprobe(probes, F.col("id") < 10, k=3)
     return out.select(
         "query_id",
         "neighbor_id",

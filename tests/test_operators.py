@@ -292,13 +292,10 @@ def test_image_codec_raw_and_unsupported():
         decode_image(b"\x89PNG\r\n\x1a\n....", 4, 3)  # looks raw but too short
 
 
-def test_resize_and_letterbox():
+def test_resize_nearest_floor_mapping():
     import numpy as np
 
-    from ifcb_data_pipeline_spark.operators.image_codec import (
-        letterbox,
-        resize_nearest,
-    )
+    from ifcb_data_pipeline_spark.operators.image_codec import resize_nearest
 
     img = np.arange(12, dtype=np.uint8).reshape(3, 4)
     up = resize_nearest(img, 6, 8)
@@ -307,10 +304,6 @@ def test_resize_and_letterbox():
     np.testing.assert_array_equal(up[0], img[0][(np.arange(8) * 4) // 8])
     down = resize_nearest(img, 1, 2)
     np.testing.assert_array_equal(down, [[img[0, 0], img[0, 2]]])
-    lb = letterbox(img, 8, 8, fill=7)
-    assert lb.shape == (8, 8)
-    assert lb[0, 0] == 7 and lb[7, 7] == 7  # padding rows top/bottom
-    assert (lb == 7).sum() < 64  # content present
 
 
 def test_sample_video_frames_slicing(spark):

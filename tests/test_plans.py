@@ -128,25 +128,3 @@ def test_write_psd_counts_flagged_samples(spark):
     assert set(got) == {clean, poor}
     assert got[clean]["flag"] is None and got[clean]["r_sqr"] > 0.9
     assert got[poor]["flag"] == "Poor fit"
-
-
-def test_write_psd_falls_back_once_when_metrics_never_arrive(spark, monkeypatch):
-    """On a runtime whose observe metrics never fire, write_psd counts the
-    flagged rows itself, and the first timeout latches the session-wide
-    fallback: later writes do not wait for the metrics again."""
-    from ifcb_data_pipeline_spark.operators import graph
-
-    waits = []
-
-    def never_delivered(obs, timeout_s=None):
-        waits.append(obs)
-        raise TimeoutError("metrics not delivered")
-
-    monkeypatch.setattr(graph, "_observation_get", never_delivered)
-    monkeypatch.setattr(graph, "_OBSERVE_UNAVAILABLE", False)
-    _, _, features = _psd_panel(spark)
-    with tempfile.TemporaryDirectory() as tmp:
-        assert write_psd(features, f"{tmp}/a") == 1
-        assert len(waits) == 1 and graph._OBSERVE_UNAVAILABLE
-        assert write_psd(features, f"{tmp}/b") == 1
-        assert len(waits) == 1

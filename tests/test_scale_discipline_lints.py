@@ -150,11 +150,6 @@ def _scan() -> dict[tuple[str, str], int]:
 # the bound is argued.
 ACTION_INVENTORY: dict[tuple[str, str, str], int] = {
     ("operators/aggregates.py", "taxon_rollup", "first"): 1,
-    # graph.py's convergence fingerprint rides the localCheckpoint job
-    # as an observe metric; the ONE collect below is the 1-row agg
-    # fallback taken only when the runtime never delivers observe
-    # metrics (obs.get would hang — ADVICE r16)
-    ("operators/graph.py", "checkpoint_with_fingerprint", "collect"): 1,
     # 1-row (count, sum) agg over the PRE-explosion bins frame, sizing
     # the expansion width from measured ROIs (guide §2.2) — bounded by
     # construction (aggregation output, never ROI-scaled rows)
@@ -390,7 +385,6 @@ WINDOW_ORDER_INVENTORY: dict[tuple[str, str], int] = {
     ("operators/similarity.py", "cosine_topk"): 2,
     # ivf_assign / ivf_assign_probes: window argmin replaced by the
     # map-only array_min/array_sort form in r18 — no window remains
-    ("operators/similarity.py", "ivf_topk"): 1,
     ("operators/similarity.py", "ivf_topk_nprobe"): 1,
     ("operators/windows.py", "global_rank"): 1,
     ("operators/windows.py", "grouped_prefix_sum"): 1,
@@ -590,6 +584,5 @@ def test_streams_run_only_through_drain():
     assert got == {
         "trigger": drain_site,
         "awaitTermination": drain_site,
-        # the one other .start() is graph.py's observe-metrics poll thread
-        "start": {**drain_site, ("operators/graph.py", "_observation_get"): 1},
+        "start": drain_site,
     }, "run stream writers through streaming/incremental.drain"
