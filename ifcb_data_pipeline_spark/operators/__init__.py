@@ -22,7 +22,7 @@ from .joins import (
 )
 from .similarity import cosine, cosine_topk, dot, label_centroids
 from .skew import salted_aggregate
-from .windows import adjacency_flag_filter, gap_fill, global_rank
+from .windows import adjacency_flag_filter, gap_fill, grouped_prefix_sum
 
 __all__ = [
     "adjacency_flag_filter",
@@ -36,7 +36,7 @@ __all__ = [
     "embedding_lsh_pairs",
     "exact_dedup",
     "gap_fill",
-    "global_rank",
+    "grouped_prefix_sum",
     "grouped_top_k",
     "interval_join",
     "label_centroids",

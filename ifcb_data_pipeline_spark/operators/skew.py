@@ -135,7 +135,7 @@ def _estimate_scan_partitions(df: DataFrame) -> int | None:
     return max(1, parts)
 
 
-def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Raise map-side parallelism when the SOURCE's split count caps it.
 
     A parquet file is splittable only at row-group boundaries; the local
@@ -154,15 +154,12 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     for the scan, not for any shuffle in between.  The estimate is
     logical-plan-only — no ``df.rdd`` probe (which would force physical
     planning per call and report pre-AQE counts downstream of a
-    shuffle).  When the
-    input files cannot be stat'ed (object store, in-memory frame) the
-    scan is assumed un-starved and the call is a no-op — pass an
-    explicit ``min_parts`` to force a target in that case.
+    shuffle).  When the input files cannot be stat'ed (object store,
+    in-memory frame) the scan is assumed un-starved and the call is a
+    no-op.
     """
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     est = _estimate_scan_partitions(df)
-    if est is None and min_parts is None:
-        return df
-    if est is not None and est >= target:
+    if est is None or est >= target:
         return df
     return df.repartition(target)

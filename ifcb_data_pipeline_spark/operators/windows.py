@@ -169,148 +169,59 @@ def gap_fill(
     return out
 
 
-# Test-introspection hook (ADVICE r7): the eager localCheckpoint hides the
-# range exchange from downstream plans, so the combinators record the
-# pre-checkpoint frame they ACTUALLY consumed here (keyed by combinator
-# name, overwritten per call) for tests/test_physical_plans.py to pin the
-# rangepartitioning exchange on directly — per query, not just on the bare
-# helper.  Recording is gated OFF in production (ADVICE r8): a module
-# global retaining DataFrame/plan references after every call would pin
-# lineage indefinitely and is racy under concurrent query construction —
-# the plan tests flip RECORD_PRE_CHECKPOINT on around the construction
-# they inspect, so production constructions pay and hold nothing.
-RECORD_PRE_CHECKPOINT: bool = False
-LAST_PRE_CHECKPOINT: dict[str, DataFrame] = {}
-
-
-def _record_pre(name: str, pre: DataFrame) -> None:
-    if RECORD_PRE_CHECKPOINT:
-        LAST_PRE_CHECKPOINT[name] = pre
-
-
 def pid_stamped_range(df: DataFrame, cols: list) -> DataFrame:
     """Range-partition ``df`` on ``cols`` and stamp each row with its
-    partition id — the shared first stage of :func:`global_rank` and
-    :func:`grouped_prefix_sum`, exposed un-checkpointed so the plan tests
-    can pin the ``rangepartitioning`` exchange that the eager
-    ``localCheckpoint`` in the combinators hides from downstream plans."""
+    partition id — the first stage of :func:`grouped_prefix_sum`,
+    exposed un-checkpointed so the plan tests can pin the
+    ``rangepartitioning`` exchange that the combinator's eager
+    ``localCheckpoint`` hides from downstream plans."""
     n_part = df.sparkSession.sparkContext.defaultParallelism
     return df.repartitionByRange(n_part, *cols).withColumn(
         "__pid", F.spark_partition_id()
     )
 
 
-def _pin_boundary_sample(pre: DataFrame, reliable: bool) -> DataFrame:
-    """Materialize the pid-stamped range frame ONCE so both consuming
-    plan branches see the same sampled range boundaries.
-
-    ``reliable=False`` (the local[32] default): ``localCheckpoint()`` —
-    eager, executor-local storage.  On a real cluster an executor loss
-    after this point fails the query instead of recomputing, so at
-    100× scale pass ``reliable=True``: ``checkpoint(eager=True)`` writes
-    the materialized partitions to the RELIABLE checkpoint directory
-    (``spark.sparkContext.setCheckpointDir(...)`` — HDFS/S3 on a
-    cluster), one extra write that survives executor loss.  Both paths
-    truncate lineage and pin a single boundary sample; results are
-    identical (tests/test_rank_combinators.py exercises both)."""
-    if reliable:
-        # Early-validate that a checkpoint dir is configured so the
-        # error names the fix.
-        if pre.sparkSession.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-            raise RuntimeError(
-                "reliable=True requires spark.sparkContext.setCheckpointDir "
-                "(reliable storage: HDFS/S3 on a cluster)"
-            )
-        return pre.checkpoint(eager=True)
-    return pre.localCheckpoint()
-
-
-def global_rank(
-    df: DataFrame, *keys, rank_col: str = "rank", reliable: bool = False
-) -> DataFrame:
-    """Distributed total-order rank — the o1/dp8/sp6 machinery as a
-    reusable combinator: ONE range-partitioning exchange gives a total
-    order across partitions, ``spark_partition_id()`` is then monotone
-    in it, so global rank = within-partition row_number + a broadcast
-    per-partition offset cumsum.  The only unsplittable frame is the
-    ≤ |partitions|-row counts table (the bounded-window exception);
-    the fact side is never windowed on a single partition.
-
-    Caller contract (the w13/w14 NULL-ordering class — the static lint
-    cannot see through the starred ``*keys``): every key must be
-    structurally non-null (PK, hash, pid) OR carry an explicit
-    ``asc_nulls_last``/``desc_nulls_last`` matched by ``NULLS LAST`` in
-    the oracle — Spark defaults NULLS FIRST, DuckDB NULLS LAST."""
-    # Checkpoint: the pid-stamped frame is consumed by TWO plan
-    # branches (offsets aggregate + within-partition window, joined on
-    # __pid).  Range boundaries are SAMPLED per exchange, so if the two
-    # exchanges are not de-duplicated (AQE re-planning / column pruning
-    # can change their canonical forms), each branch sees different
-    # boundaries and __pid disagrees between them — silently wrong ranks.
-    # Materializing once pins a single boundary sample for both branches.
-    # Trade-offs (ADVICE r7): the materialization is EAGER — the range
-    # exchange runs NOW, at construction time — and the default
-    # localCheckpoint's executor-local storage is non-reliable; at 100×
-    # scale pass reliable=True for the setCheckpointDir-backed path
-    # (see _pin_boundary_sample and SCALE.md "global_rank combinator").
-    pre = pid_stamped_range(df, list(keys))
-    _record_pre("global_rank", pre)
-    ranged = _pin_boundary_sample(pre, reliable)
-    counts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    offsets = counts.select(
-        "__pid",
-        F.coalesce(
-            F.sum("__n").over(
-                Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("__offset"),
-    )
-    within = Window.partitionBy("__pid").orderBy(*keys)
-    return (
-        ranged.withColumn("__rn", F.row_number().over(within))
-        .join(F.broadcast(offsets), "__pid")
-        .withColumn(rank_col, (F.col("__rn") + F.col("__offset")).cast("long"))
-        .drop("__pid", "__rn", "__offset")
-    )
-
-
 def grouped_prefix_sum(
     df: DataFrame,
     group_cols: list[str],
-    order_cols: list[str],
+    order_cols: list[str | Column],
     value_col: str,
     out_col: str = "cum",
-    reliable: bool = False,
 ) -> DataFrame:
     """Inclusive per-group running sum of ``value_col`` in ``order_cols``
     order — WITHOUT a group-fat window.
 
     The naive ``sum().over(Window.partitionBy(group).orderBy(order))``
     funnels each group through one task; a hot group (one domain holding
-    half the corpus) serializes.  This is the o1/dp8 two-level form
-    applied per group: range-partition by (group, order) so each task
-    holds a contiguous slice, per-(group, partition) subtotals feed a
-    broadcast offset cumsum over the bounded |groups|×|partitions|
-    frame, and the within-partition window runs partitioned by
-    (partition, group).  Every stage is balanced regardless of group
-    skew.
+    half the corpus) serializes.  Instead: range-partition by (group,
+    order) so each task holds a contiguous slice, per-(group, partition)
+    subtotals feed a broadcast offset cumsum over the bounded
+    |groups|×|partitions| frame, and the within-partition window runs
+    partitioned by (partition, group).  Every stage is balanced
+    regardless of group skew.
 
-    Caller contract: ``order_cols`` must be structurally non-null or
-    explicitly null-pinned in both engines (see ``global_rank``)."""
-    # Same dual-consumption hazard as global_rank: __pid must come from
-    # ONE materialized range exchange, or the offsets side and the window
-    # side can sample different range boundaries and disagree on __pid.
-    # _pin_boundary_sample pins a single boundary sample for both
-    # branches (localCheckpoint by default; reliable=True for the
-    # setCheckpointDir-backed cluster path — same trade-offs as
-    # global_rank).  Attribution note (round 8): the r6/r7 sp6 driver
-    # reds were oracle HUGEINT typing, not this hazard — the checkpoint
-    # stays as hardening against a real but never-observed-firing
-    # latent bug.
-    pre = pid_stamped_range(df, [F.col(c) for c in group_cols + order_cols])
-    _record_pre("grouped_prefix_sum", pre)
-    ranged = _pin_boundary_sample(pre, reliable)
+    This is also the package's distributed total-order rank: with no
+    group columns and a column of ones as ``value_col``, ``out_col`` is
+    the 1-based row rank in ``order_cols`` order (the running frame is
+    ROWS, so ties get distinct consecutive ranks, as ``row_number``
+    does).  The only unsplittable frame is then the ≤ |partitions|-row
+    offsets table; the fact side is never windowed on one partition.
+
+    ``order_cols`` are column names or Columns (``desc()`` keys
+    included).  Caller contract (the w13/w14 NULL-ordering class): every
+    order key must be structurally non-null (PK, hash, pid) OR carry an
+    explicit ``asc_nulls_last``/``desc_nulls_last`` matched by ``NULLS
+    LAST`` in the oracle — Spark defaults NULLS FIRST, DuckDB NULLS
+    LAST."""
+    # The pid-stamped frame is consumed by TWO plan branches (offsets
+    # aggregate + within-partition window, joined on __pid).  Range
+    # boundaries are SAMPLED per exchange, so if the two exchanges are
+    # not de-duplicated (AQE re-planning / column pruning can change
+    # their canonical forms), each branch sees different boundaries and
+    # __pid disagrees between them — silently wrong sums.  One eager
+    # localCheckpoint pins a single boundary sample for both branches;
+    # the range exchange runs at construction time.
+    ranged = pid_stamped_range(df, [*group_cols, *order_cols]).localCheckpoint()
     part_sums = ranged.groupBy(*group_cols, "__pid").agg(
         F.sum(value_col).alias("__sum")
     )

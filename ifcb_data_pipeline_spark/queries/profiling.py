@@ -635,9 +635,8 @@ def dp8_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to (cents, cnt) with a hash aggregation (map-side partial combine)
     # BEFORE any ordering machinery.  The range exchange + prefix sum
     # then operate on |distinct cents| rows — bounded by the VALUE DOMAIN
-    # (part price × quantity), not the row count — and, unlike the
-    # previous global_rank form, nothing fact-sized is ever
-    # localCheckpoint-ed.  A probe at global rank k selects the distinct
+    # (part price × quantity), not the row count — and nothing
+    # fact-sized is ever localCheckpoint-ed.  A probe at global rank k selects the distinct
     # value whose cumulative count first reaches k (cum − cnt < k ≤ cum),
     # which is exactly the row rank-k machinery would have selected:
     # equal cents are interchangeable under any tie order, so the result

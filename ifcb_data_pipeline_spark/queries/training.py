@@ -389,8 +389,8 @@ def tp3_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # globally by (length, hash, id) — short/easy first — with a phase
 # label and a shard assignment derived from the rank, so the data
 # loader can stream phase 0 → 1 → 2 in a reproducible order.  The
-# global rank is the factored o1/dp8/sp6 machinery
-# (operators/windows.global_rank): one range exchange + broadcast
+# global rank is a prefix sum of ones (operators/windows.
+# grouped_prefix_sum, no group columns): one range exchange + broadcast
 # offsets, never a single-partition window.  Every ordering key is an
 # integer (token count, md5 hash, id) — no float enters the sort.
 TP4_SQL = f"""
@@ -416,17 +416,17 @@ FROM ranked
 @register("tp4_curriculum_order", TP4_SQL, survey_ref="beyond reference: curriculum training order (length-staged, distributed global rank)")
 def tp4_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import token_count_ws
-    from ..operators.windows import global_rank
+    from ..operators.windows import grouped_prefix_sum
 
     (documents,) = tables(spark, sf_dir, "documents")
     keyed = documents.select(
         "doc_id",
         token_count_ws(F.col("text")).cast("long").alias("n_tok"),
         hash32(F.concat(F.lit("cur-"), F.col("doc_id").cast("string"))).alias("h"),
+        F.lit(1).alias("__one"),
     )
-    ranked = global_rank(
-        keyed, F.col("n_tok"), F.col("h"), F.col("doc_id"),
-        rank_col="curriculum_rank",
+    ranked = grouped_prefix_sum(
+        keyed, [], ["n_tok", "h", "doc_id"], "__one", "curriculum_rank"
     )
     return ranked.select(
         "doc_id",

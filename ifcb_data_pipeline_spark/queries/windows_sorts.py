@@ -107,11 +107,14 @@ def w4_newest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale (VERDICT r3 item 4): a global Window.orderBy + row_number is the
 # textbook single-partition WindowExec killer.  The rank is total-order
 # by construction (the key tuple is unique), so compute it distributed:
-# range-partition on the sort keys (the same sampled-boundary exchange a
-# distributed orderBy uses), row_number WITHIN each range partition,
-# then add each partition's global offset — a cumsum over the tiny
-# per-partition counts frame (≤ parallelism rows), broadcast back.  The
-# only unpartitioned window runs over that counts frame, never the fact.
+# the rank is the prefix sum of a ones column over the sort keys
+# (operators/windows.grouped_prefix_sum, no group columns): range-
+# partition on the keys (the same sampled-boundary exchange a
+# distributed orderBy uses), a running count WITHIN each range
+# partition, then add each partition's global offset — a cumsum over the
+# tiny per-partition counts frame (≤ parallelism rows), broadcast back.
+# The only unpartitioned window runs over that counts frame, never the
+# fact.
 # tests/test_physical_plans.py::test_o1_rank_is_distributed pins this.
 O1_SQL = """
 SELECT o_orderkey, o_orderpriority, o_totalprice,
@@ -134,16 +137,11 @@ def o1_multi_key_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered = orders.where(F.col("o_totalprice") > 400000).select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    # Factored rank combinator: one CHECKPOINTED range exchange gives a
-    # total order (spark_partition_id monotone in it), global rank =
-    # within-partition row_number + broadcast per-partition offsets.
-    # The checkpoint pins a single range-boundary sample for both plan
-    # branches (the round-6 sp6 dual-sampling hazard).
-    from ifcb_data_pipeline_spark.operators.windows import global_rank
+    from ifcb_data_pipeline_spark.operators.windows import grouped_prefix_sum
 
-    return global_rank(filtered, *keys).select(
-        "o_orderkey", "o_orderpriority", "o_totalprice", "rank"
-    )
+    return grouped_prefix_sum(
+        filtered.withColumn("__one", F.lit(1)), [], keys, "__one", "rank"
+    ).select("o_orderkey", "o_orderpriority", "o_totalprice", "rank")
 
 
 # --- O3: union by name with schema reconciliation --------------------------
@@ -1155,9 +1153,9 @@ def w14_spearman_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- O10: zone-map file-skipping effectiveness --------------------------------
 # Scale shape: per-file stats are one hash agg over (layout, file_id);
-# the clustered layout's rank comes from the factored global_rank
-# combinator (range exchange + __pid window — never a single-partition
-# window over the fact); the threshold grid is a 4-element explode over
+# the clustered layout's rank is grouped_prefix_sum of ones (range
+# exchange + __pid window — never a single-partition window over the
+# fact); the threshold grid is a 4-element explode over
 # the |files|-row stats frame; exact matched counts are one conditional
 # agg pass.  The law the replay asserts is the point of clustering:
 # under the n_chars-sorted layout the matching rows are a contiguous
@@ -1233,7 +1231,7 @@ FROM per p JOIN mt m ON p.threshold = m.threshold
     "row-group skip arithmetic, quantified per predicate",
 )
 def o10_file_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.windows import global_rank
+    from ..operators.windows import grouped_prefix_sum
 
     (documents,) = tables(spark, sf_dir, "documents")
     docs = documents.select("doc_id", "n_chars")
@@ -1242,7 +1240,9 @@ def o10_file_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"doc_id div {_O10_FILE_DOCS}").cast("long").alias("file_id"),
         "n_chars",
     )
-    ranked = global_rank(docs, "n_chars", "doc_id", rank_col="rnk")
+    ranked = grouped_prefix_sum(
+        docs.withColumn("__one", F.lit(1)), [], ["n_chars", "doc_id"], "__one", "rnk"
+    )
     clu = ranked.select(
         F.lit("clustered").alias("layout"),
         F.expr(f"(rnk - 1) div {_O10_FILE_DOCS}").cast("long").alias("file_id"),

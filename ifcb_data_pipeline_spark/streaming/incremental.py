@@ -133,23 +133,3 @@ def suppress_duplicate_comments(
         existing.select(*keys).dropDuplicates(), list(keys), "left_anti"
     )
 
-
-def run_incremental_batch(
-    spark: SparkSession,
-    candidates: DataFrame,
-    key: str,
-    transform,
-    checkpoint_dir: str,
-    output_dir: str,
-) -> int:
-    """One incremental tick: derive pending work, transform it, append
-    output + ledger.  Returns number of newly processed keys."""
-    job = CheckpointedJob(spark, checkpoint_dir, key)
-    todo = job.pending(candidates)
-    n = todo.count()
-    if n == 0:
-        return 0
-    result = transform(todo)
-    result.write.mode("append").parquet(output_dir)
-    job.mark_done(todo.select(key))
-    return n

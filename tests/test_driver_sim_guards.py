@@ -58,3 +58,33 @@ def test_date_object_vs_datetime64_normalizes():
     d = pd.DataFrame({"d": pd.to_datetime(["2024-01-01", "2024-01-02"])})
     ok, msg = frames_match(s, d)
     assert ok, msg
+
+
+def test_cli_usage_errors_exit_before_any_run(tmp_path):
+    """``--help`` prints usage and exits 0; an unknown flag or an unknown
+    ``--only`` name exits 1 without checking any query.  Run from a
+    directory outside the repo, so the tool must find the package and
+    the test helpers from its own path."""
+    import subprocess
+    import sys
+
+    def run(*args):
+        return subprocess.run(
+            [sys.executable, str(_tool), *args],
+            cwd=tmp_path,
+            capture_output=True,
+            text=True,
+            timeout=300,
+        )
+
+    helped = run("--help")
+    assert helped.returncode == 0, helped.stderr
+    assert "usage:" in helped.stdout
+    for args, named in (
+        (("--bogus",), "--bogus"),
+        (("--only=a1_biovolume_rollup,no_such_query",), "no_such_query"),
+    ):
+        bad = run(*args)
+        assert bad.returncode == 1, bad.stdout + bad.stderr
+        assert named in bad.stderr
+        assert "driver-sim:" not in bad.stdout

@@ -2,7 +2,7 @@
 
 Two claims these optimizations rest on, pinned so they can't silently rot:
 
-1. ``fan_out`` is a structural NO-OP whenever the input already has at
+1. ``fan_out`` is a structural NO-OP whenever the scan already has at
    least the session parallelism — the at-scale case (splits >> cores).
    If this law broke, every call site would inject a gratuitous
    exchange into at-scale plans.
@@ -45,23 +45,33 @@ def test_fan_out_estimate_matches_spark_bin_packing(spark, tmp_path):
     assert _estimate_scan_partitions(df) == actual
     # Real Spark bin-packs tiny files BELOW core count here (open cost
     # dominates), so this layout is genuinely starved and fan_out
-    # correctly raises it; the no-op law is exercised via min_parts.
-    assert fan_out(df, min_parts=max(1, actual - 1)) is df
+    # correctly raises it.
     raised = fan_out(df)
     if actual < cores:
         assert raised is not df
         assert raised.rdd.getNumPartitions() == cores
 
+    # No-op law: a split size small enough that the same files yield at
+    # least one split per core makes the scan un-starved, and fan_out
+    # returns the frame itself.
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        df = spark.read.parquet(path)
+        actual = df.rdd.getNumPartitions()
+        assert actual >= cores
+        assert _estimate_scan_partitions(df) == actual
+        assert fan_out(df) is df
+    finally:
+        spark.conf.set(key, old)
+
 
 def test_fan_out_noop_on_in_memory_frames(spark):
     """No inputFiles -> the scan-split estimate is unknown -> fan_out
-    assumes an un-starved source (the at-scale truth) and no-ops; an
-    explicit min_parts overrides."""
+    assumes an un-starved source (the at-scale truth) and no-ops."""
     df = spark.range(0, 1_000, numPartitions=1)
     assert fan_out(df) is df
-    forced = fan_out(df, min_parts=8)
-    assert forced is not df
-    assert forced.rdd.getNumPartitions() == 8
 
 
 def test_fan_out_raises_starved_scan_to_parallelism(spark, tmp_path):

@@ -62,10 +62,7 @@ BUILD_JOBS = {
 
 
 # name -> jobs started while the warmed built frame is written to the
-# noop sink, at sf0.001.  p1_shark_export is left out: at a fixed core
-# count it runs 10 jobs in most runs and 11 in about one of eight (one
-# extra trailing 3-stage job), so its count varies with AQE's stage
-# timing, not with the plan.
+# noop sink, at sf0.001.
 EXEC_JOBS = {
     "a1_biovolume_rollup": 4,
     "a4_monthly_stats": 4,
@@ -98,6 +95,20 @@ EXEC_JOBS = {
     "tx2_quality_score": 1,
     "w1_adjacency_removal": 2,
 }
+# p1_shark_export runs 10 jobs in most runs and 11 in about one of eight
+# at a fixed core count.  The race is in its last join,
+# ``rolled.join(hdr_geo, "sample")`` (plans/shark_export.py), planned as
+# a shuffled join with a hashpartitioning(sample) exchange on each side.
+# At sf0.001 the ``rolled`` aggregate is small, so once its shuffle
+# stage finishes AQE re-plans the join as a broadcast of ``rolled`` and
+# drops the ``hdr_geo`` exchange, which the final stage then pipelines:
+# 10 jobs.  When ``hdr_geo``'s inputs (the date-window shuffle and the
+# patch/geo broadcasts) finish first, AQE has already submitted that
+# exchange as a shuffle stage and keeps it: one extra job (a skipped
+# stage + the exchange's map stage), and the final save job reads it
+# (3 stages, one task each).  Which side finishes first is stage
+# timing, not the plan; a broadcast hint on ``rolled`` would fix the
+# count but broadcast a fact-scale frame at scale.
 UNPINNED_EXEC = {"p1_shark_export"}
 
 

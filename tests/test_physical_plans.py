@@ -106,9 +106,9 @@ def test_no_hint_on_raw_fact_scan(spark, sf_dir, name):
 
 
 def test_pid_stamp_is_range_partitioned(spark, sf_dir):
-    """The shared first stage of global_rank/grouped_prefix_sum is ONE
-    range-partitioning exchange (total order across partitions, so
-    spark_partition_id is monotone).  The combinators localCheckpoint it
+    """The first stage of grouped_prefix_sum is ONE range-partitioning
+    exchange (total order across partitions, so spark_partition_id is
+    monotone).  The combinator localCheckpoints it
     — which hides the exchange from downstream query plans — so the
     exchange is pinned here on the un-checkpointed helper directly."""
     from ifcb_data_pipeline_spark.operators.windows import pid_stamped_range
@@ -126,8 +126,8 @@ def test_pid_stamp_is_range_partitioned(spark, sf_dir):
 
 def test_o1_rank_is_distributed(spark, sf_dir):
     """o1's total-order rank must never run an unpartitioned Window over
-    the fact table: the fact-side row_number is partitioned by the range
-    partition id (from the ONE checkpointed range exchange — the
+    the fact table: the fact-side running count is partitioned by the
+    range partition id (from the ONE checkpointed range exchange — the
     `Scan ExistingRDD` leaf), and the only SinglePartition exchange
     allowed is the cumsum over the tiny per-partition counts frame
     (≤ parallelism rows)."""
@@ -147,56 +147,51 @@ def test_o1_rank_is_distributed(spark, sf_dir):
         "tp4_curriculum_order",
         "o9_compaction_plan",
         "sp6_domain_token_cap",
+        "o10_file_skipping_stats",
     ],
 )
-def test_rank_machinery_checkpoint_provenance(spark, sf_dir, name):
-    """Close the ADVICE r7 pin gap: `Scan ExistingRDD` alone is satisfied
-    by ANY localCheckpointed frame, so a query that checkpoints something
-    else while losing its range exchange would still pass the pin above.
-    Two additions per rank-machinery query:
+def test_rank_machinery_checkpoint_provenance(spark, sf_dir, name, monkeypatch):
+    """`Scan ExistingRDD` alone is satisfied by ANY localCheckpointed
+    frame, so a query that checkpoints something else while losing its
+    range exchange would still pass the pins above.  Two assertions per
+    rank-machinery query:
 
     1. The final plan must contain NO visible ``rangepartitioning`` — if
-       a combinator's localCheckpoint is ever removed, its range exchange
-       reappears in the downstream plan (these queries have no other
-       range exchange: no final orderBy survives to the physical plan).
-    2. The combinator records the pre-checkpoint frame it ACTUALLY
-       consumed (operators.windows.LAST_PRE_CHECKPOINT); that frame's
-       own plan must carry the ``rangepartitioning`` exchange stamping
-       ``__pid`` — the range ordering the rank math depends on, pinned
-       per query rather than only on the bare helper.
-
-    Recording is production-off (ADVICE r8: no retained plan refs / race
-    in normal construction), so this test flips RECORD_PRE_CHECKPOINT on
-    around the construction it inspects and clears both afterwards."""
+       the combinator's localCheckpoint is ever removed, its range
+       exchange reappears in the downstream plan (these queries have no
+       other range exchange: no final orderBy survives to the physical
+       plan).
+    2. Every pid-stamped range frame the query builds (spied on through
+       ``windows.pid_stamped_range``) must carry the ``rangepartitioning``
+       exchange stamping ``__pid`` — the range ordering the prefix-sum
+       math depends on, pinned per query rather than only on the bare
+       helper."""
     from ifcb_data_pipeline_spark.operators import windows
-    from ifcb_data_pipeline_spark.operators.windows import LAST_PRE_CHECKPOINT
 
-    LAST_PRE_CHECKPOINT.clear()
-    windows.RECORD_PRE_CHECKPOINT = True
-    try:
-        plan = plan_of(spark, name, sf_dir)
-        assert "rangepartitioning(" not in plan, (
-            f"{name}: visible range exchange — the combinator's localCheckpoint "
-            "was lost (dual-boundary-sampling hazard is back)"
+    stamped = []
+    real = windows.pid_stamped_range
+
+    def spy(df, cols):
+        out = real(df, cols)
+        stamped.append(out)
+        return out
+
+    monkeypatch.setattr(windows, "pid_stamped_range", spy)
+    plan = plan_of(spark, name, sf_dir)
+    assert "rangepartitioning(" not in plan, (
+        f"{name}: visible range exchange — the combinator's localCheckpoint "
+        "was lost (dual-boundary-sampling hazard is back)"
+    )
+    assert "Scan ExistingRDD" in plan and "hashpartitioning(__pid" in plan
+    assert stamped, f"{name} did not go through the prefix-sum combinator"
+    for pre in stamped:
+        pre_plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
+            pre._jdf.queryExecution(), "formatted"
         )
-        assert "Scan ExistingRDD" in plan and "hashpartitioning(__pid" in plan
-        assert LAST_PRE_CHECKPOINT, f"{name} did not go through a rank combinator"
-        pre_plans = {
-            combinator: spark.sparkContext._jvm.PythonSQLUtils.explainString(
-                pre._jdf.queryExecution(), "formatted"
-            )
-            for combinator, pre in LAST_PRE_CHECKPOINT.items()
-        }
-    finally:
-        windows.RECORD_PRE_CHECKPOINT = False
-        LAST_PRE_CHECKPOINT.clear()
-    for combinator, pre_plan in pre_plans.items():
         assert "rangepartitioning(" in pre_plan, (
-            f"{name}: {combinator} pre-checkpoint frame lost its range exchange"
+            f"{name}: pid-stamped frame lost its range exchange"
         )
-        assert "__pid" in pre_plan, (
-            f"{name}: {combinator} pre-checkpoint frame lost the __pid stamp"
-        )
+        assert "__pid" in pre_plan, f"{name}: pid-stamped frame lost the __pid stamp"
 
 
 def test_tx5_topk_before_rank(spark, sf_dir):
@@ -615,9 +610,9 @@ def test_sp8_broadcasts_only_bucket_model(spark, sf_dir):
 
 
 def test_tp4_rank_is_distributed(spark, sf_dir):
-    """tp4 uses the factored global_rank combinator: range exchange +
-    __pid-partitioned window; the only SinglePartition subtree is the
-    bounded counts cumsum."""
+    """tp4 ranks as a prefix sum of ones (grouped_prefix_sum): range
+    exchange + __pid-partitioned window; the only SinglePartition
+    subtree is the bounded offsets cumsum."""
     plan = plan_of(spark, "tp4_curriculum_order", sf_dir)
     assert "Scan ExistingRDD" in plan, (
         "tp4 lost the checkpointed range exchange (dual-sampling hazard back)"
@@ -991,7 +986,7 @@ _SINGLEPART_OK = {
     "sp8_importance_resampling", "tp4_curriculum_order", "tp5_funnel_report",
     "tx10_tfidf_top_terms", "tx13_bm25_topk", "tx6_trigram_logprob",
     "w10_cumulative_distinct",
-    # 1-row total aggs, global_rank's bounded offsets cumsum, w15's
+    # 1-row total aggs, grouped_prefix_sum's bounded offsets cumsum, w15's
     # domain-bounded CDF window
     "a29_cms_heavy_hitters", "sim13_int8_quant_error",
     "sp12_grouped_split_balance", "o10_file_skipping_stats",

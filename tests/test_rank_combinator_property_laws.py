@@ -1,15 +1,16 @@
 """Hypothesis property laws for the rank combinators.
 
-`tests/test_rank_combinators.py` pins both checkpoint paths on fixed
-frames; these laws add randomized SHAPES — heavy ties, constant keys,
-singletons, hot groups — under randomized input partitioning, the axis
-the combinators exist to survive (`operators/windows.py:186-260`: the
-range exchange must yield the same total order however the input was
-partitioned).  Ground truth is pandas computed in one process:
+`tests/test_rank_combinators.py` pins the combinator on fixed frames
+under exchange-planning confs; these laws add randomized SHAPES — heavy
+ties, constant keys, singletons, hot groups — under randomized input
+partitioning, the axis the combinator exists to survive
+(`operators/windows.grouped_prefix_sum`: the range exchange must yield
+the same total order however the input was partitioned).  Ground truth is pandas computed in one process:
 
-* ``global_rank(df, ord, id)`` assigns exactly the permutation rank of
-  lexicographic ``(ord, id)`` order — a bijection onto 1..n — for any
-  multiset of ``ord`` values and any input partitioning.
+* the global rank — ``grouped_prefix_sum`` of a ones column over
+  ``(ord, id)`` with no group columns — assigns exactly the permutation
+  rank of lexicographic ``(ord, id)`` order — a bijection onto 1..n —
+  for any multiset of ``ord`` values and any input partitioning.
 * ``grouped_prefix_sum`` equals the per-group running sum of the
   pandas groupby-cumsum, for any group skew (including one group
   holding nearly every row) and any input partitioning.
@@ -26,8 +27,9 @@ from __future__ import annotations
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from ifcb_data_pipeline_spark.operators.windows import global_rank, grouped_prefix_sum
+from ifcb_data_pipeline_spark.operators.windows import grouped_prefix_sum
 
 # few distinct ord values -> heavy ties; ids unique by construction
 _rows = st.lists(
@@ -43,7 +45,11 @@ def test_global_rank_is_the_lexicographic_permutation_rank(spark, ords, parts):
     df = spark.createDataFrame(pdf).repartition(parts)
     got = {
         r["id"]: r["rank"]
-        for r in global_rank(df, "ord", "id").select("id", "rank").collect()
+        for r in grouped_prefix_sum(
+            df.withColumn("one", F.lit(1)), [], ["ord", "id"], "one", "rank"
+        )
+        .select("id", "rank")
+        .collect()
     }
     expected = {
         row.id: i + 1

@@ -1,6 +1,7 @@
-"""Direct regression coverage for the distributed rank/prefix-sum
-combinators (``operators/windows.py``) — the machinery behind
-o1/dp8/tp4/sp6/o9.
+"""Direct regression coverage for the distributed prefix-sum combinator
+(``operators/windows.grouped_prefix_sum``) — the machinery behind
+o1/o9/o10/dp8/dp12/tp4/sp6/sp11 — and the global rank it gives as a
+prefix sum of ones.
 
 Round-6 incident: the pid-stamped range frame was consumed by two plan
 branches; when the two range exchanges were not deduplicated, each
@@ -19,10 +20,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ifcb_data_pipeline_spark.operators.windows import (
-    global_rank,
-    grouped_prefix_sum,
-)
+from ifcb_data_pipeline_spark.operators.windows import grouped_prefix_sum
 
 # Skewed, duplicate-free key set: one hot group holding half the rows
 # plus many cold groups — the shape the two-level forms exist for.
@@ -52,6 +50,14 @@ CONFIGS = [
 ]
 
 
+def _global_rank(df):
+    """Rank over (ord, id) the way o1/o10/tp4 take it: the prefix sum of
+    a ones column with no group columns."""
+    return grouped_prefix_sum(
+        df.withColumn("one", F.lit(1)), [], [F.col("ord"), F.col("id")], "one", "rank"
+    )
+
+
 def _with_confs(spark, confs):
     old = {k: spark.conf.get(k) for k in confs}
     for k, v in confs.items():
@@ -66,7 +72,7 @@ def test_global_rank_matches_window_oracle(spark, confs):
         df = _synthetic(spark)
         got = {
             r["id"]: r["rank"]
-            for r in global_rank(df, F.col("ord"), F.col("id")).collect()
+            for r in _global_rank(df).collect()
         }
         want = {
             r["id"]: r["rank"]
@@ -113,60 +119,9 @@ def test_global_rank_is_repeatable(spark):
         tuple(
             sorted(
                 (r["id"], r["rank"])
-                for r in global_rank(df, F.col("ord"), F.col("id")).collect()
+                for r in _global_rank(df).collect()
             )
         )
         for _ in range(5)
     ]
     assert all(run == runs[0] for run in runs)
-
-
-def test_reliable_checkpoint_paths_match_default(spark, tmp_path):
-    """VERDICT r13 item 7: the setCheckpointDir-backed reliable path is
-    one flag, not a rewrite — both combinators produce bit-identical
-    results under reliable=True, and the flag fails loudly when no
-    checkpoint dir is configured."""
-    df = _synthetic(spark)
-    sc = spark.sparkContext
-
-    # without a checkpoint dir the reliable path must refuse, not hang
-    assert sc._jsc.sc().getCheckpointDir().isEmpty()
-    with pytest.raises(RuntimeError, match="setCheckpointDir"):
-        global_rank(df, F.col("ord"), F.col("id"), reliable=True)
-
-    sc.setCheckpointDir(str(tmp_path / "reliable_ckpt"))
-    try:
-        base_rank = sorted(
-            (r["id"], r["rank"])
-            for r in global_rank(df, F.col("ord"), F.col("id")).collect()
-        )
-        rel_rank = sorted(
-            (r["id"], r["rank"])
-            for r in global_rank(
-                df, F.col("ord"), F.col("id"), reliable=True
-            ).collect()
-        )
-        assert rel_rank == base_rank
-
-        base_cum = sorted(
-            (r["grp"], r["id"], r["cum"])
-            for r in grouped_prefix_sum(
-                df, ["grp"], ["ord", "id"], "val", out_col="cum"
-            ).collect()
-        )
-        rel_cum = sorted(
-            (r["grp"], r["id"], r["cum"])
-            for r in grouped_prefix_sum(
-                df, ["grp"], ["ord", "id"], "val", out_col="cum", reliable=True
-            ).collect()
-        )
-        assert rel_cum == base_cum
-    finally:
-        # Leave the shared session as we found it for later tests.
-        # LOCAL-MODE ASSUMPTION (ADVICE r14): passing None through the
-        # py4j gateway only works because local mode short-circuits the
-        # non-local path-validation branch in SparkContext.setCheckpointDir;
-        # if this suite ever runs non-local, give this test its own
-        # SparkContext fixture instead.  tmp_path itself is pytest-managed,
-        # so the checkpoint files written above are reclaimed with it.
-        sc._jsc.sc().setCheckpointDir(None)

@@ -37,7 +37,7 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "ifcb_data_pipeline_spark
 # (nation/region/classlists), 1-row/per-group-collapsed aggregates,
 # fixed-size hashed models or codebooks (2^20/2^22 bucket spaces, PQ/IVF
 # centroids), query-pruned probe sets, or per-partition offset frames
-# (≤ parallelism rows) from the global_rank/prefix-sum combinators.
+# (≤ parallelism rows) from the grouped_prefix_sum combinator.
 BROADCAST_INVENTORY: dict[tuple[str, str], int] = {
     ("operators/aggregates.py", "biovolume_rollup"): 1,
     ("operators/joins.py", "interval_join"): 1,
@@ -45,7 +45,6 @@ BROADCAST_INVENTORY: dict[tuple[str, str], int] = {
     ("operators/similarity.py", "cosine_topk"): 1,
     ("operators/similarity.py", "ivf_assign"): 1,
     ("operators/similarity.py", "ivf_assign_probes"): 1,
-    ("operators/windows.py", "global_rank"): 1,
     ("operators/windows.py", "grouped_prefix_sum"): 1,
     ("operators/windows.py", "stitched_adjacency_flag"): 1,
     ("plans/shark_export.py", "shark_export"): 2,
@@ -386,7 +385,6 @@ WINDOW_ORDER_INVENTORY: dict[tuple[str, str], int] = {
     # ivf_assign / ivf_assign_probes: window argmin replaced by the
     # map-only array_min/array_sort form in r18 — no window remains
     ("operators/similarity.py", "ivf_topk_nprobe"): 1,
-    ("operators/windows.py", "global_rank"): 1,
     ("operators/windows.py", "grouped_prefix_sum"): 1,
     # stitched_adjacency_flag's bucket-order window: one row per bucket
     # (bounded domain), ordered by the structurally non-null bucket key.
@@ -446,7 +444,6 @@ WINDOW_ORDER_STARRED_INVENTORY: dict[tuple[str, str], int] = {
     ("operators/joins.py", "asof_join"): 1,
     ("operators/windows.py", "adjacency_flag_filter"): 1,
     ("operators/windows.py", "gap_fill"): 2,
-    ("operators/windows.py", "global_rank"): 1,
     ("operators/windows.py", "grouped_prefix_sum"): 1,
     ("operators/windows.py", "stitched_adjacency_flag"): 1,
 }

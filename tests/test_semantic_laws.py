@@ -2876,7 +2876,7 @@ def test_sim12_knn_graph_bucket_replay(spark):
 #
 # All four re-derive order statistics or integer-exact rollups from the
 # raw parquet with numpy/pandas — independent of both the distributed
-# rank machinery (operators/windows.global_rank, operators/skew) and
+# rank machinery (operators/windows.grouped_prefix_sum, operators/skew) and
 # the DuckDB quantile_cont implementation.
 
 

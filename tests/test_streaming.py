@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from ifcb_data_pipeline_spark.streaming.incremental import (
     CheckpointedJob,
     new_work,
-    run_incremental_batch,
 )
 from tests.conftest import SF_SMOKE
 
@@ -22,26 +21,6 @@ def test_new_work_anti_join(spark):
     ledger = spark.createDataFrame([("b",)], ["key"])
     got = sorted(r["key"] for r in new_work(cand, ledger, "key").collect())
     assert got == ["a", "c"]
-
-
-def test_incremental_batch_idempotent(spark):
-    with tempfile.TemporaryDirectory() as tmp:
-        ckpt, out = f"{tmp}/ckpt", f"{tmp}/out"
-        cand = spark.createDataFrame([(str(i),) for i in range(10)], ["key"])
-        transform = lambda df: df.withColumn("processed", F.lit(True))
-
-        n1 = run_incremental_batch(spark, cand, "key", transform, ckpt, out)
-        assert n1 == 10
-        # Re-run: nothing new to do.
-        n2 = run_incremental_batch(spark, cand, "key", transform, ckpt, out)
-        assert n2 == 0
-        # New keys arrive: only they get processed.
-        cand2 = spark.createDataFrame([(str(i),) for i in range(12)], ["key"])
-        n3 = run_incremental_batch(spark, cand2, "key", transform, ckpt, out)
-        assert n3 == 2
-        assert spark.read.parquet(out).count() == 12
-        # Output keys unique — exactly-once per key.
-        assert spark.read.parquet(out).select("key").distinct().count() == 12
 
 
 def test_checkpointed_job_empty_ledger(spark):

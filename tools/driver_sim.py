@@ -15,11 +15,18 @@ the element values (bit-exact for floats).  Runs the whole registry,
 or only the named queries:
 
     python tools/driver_sim.py [sf_dir] [--only=q1,q2]
+
+from any working directory; ``sf_dir`` defaults to the test suite's
+table directory.  An unknown flag or query name exits 1 before any
+Spark session starts.
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import sys
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -111,20 +118,34 @@ def _date_like(a: pd.Series, b: pd.Series) -> bool:
 
 
 def main() -> int:
-    sys.path.insert(0, ".")
-    sys.path.insert(0, "tests")
-    from oracle_harness import duckdb_connection
+    parser = argparse.ArgumentParser(
+        description="Compare registry queries with their DuckDB oracles "
+        "through pandas: columns, row count, dtypes and bit-level values."
+    )
+    parser.add_argument(
+        "sf_dir", nargs="?", help="table directory (default: the test suite's)"
+    )
+    parser.add_argument("--only", help="comma-separated query names to check")
+    args, unknown = parser.parse_known_args()
+    if unknown:
+        parser.exit(1, f"driver_sim: unknown arguments: {' '.join(unknown)}\n")
 
+    # Resolve the package and the test helpers from this file, not from
+    # the working directory.
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from ifcb_data_pipeline_spark.queries import load_all
     from ifcb_data_pipeline_spark.session import get_spark
+    from tests.conftest import SF_DIR
+    from tests.oracle_harness import duckdb_connection
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01"
+    sf_dir = args.sf_dir or SF_DIR
     reg = load_all()
     names = list(reg)
-    for a in sys.argv:  # --only=q1,q2 — targeted re-verify (r19)
-        if a.startswith("--only="):
-            names = [n.strip() for n in a[len("--only="):].split(",") if n.strip()]
-    import os
+    if args.only is not None:
+        names = [n.strip() for n in args.only.split(",") if n.strip()]
+        missing = [n for n in names if n not in reg]
+        if missing:
+            parser.exit(1, f"driver_sim: unknown queries: {', '.join(missing)}\n")
 
     spark = get_spark("driver-sim", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     spark.sparkContext.setLogLevel("ERROR")
