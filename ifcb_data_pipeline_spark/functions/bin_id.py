@@ -19,6 +19,21 @@ from pyspark.sql import functions as F
 BIN_ID_PATTERN = r"^D(\d{8})T(\d{6})_IFCB(\d+)$"
 
 
+def _bin_id_struct(ts: Column, valid: Column, instr: Column) -> Column:
+    """The parsed-id struct both id formats share, from the sample
+    timestamp, the validity flag and the instrument digits."""
+    return F.struct(
+        ts.alias("timestamp"),
+        F.to_date(ts).alias("date"),
+        F.year(ts).alias("year"),
+        F.month(ts).alias("month"),
+        F.dayofmonth(ts).alias("day"),
+        F.when(valid, F.date_format(ts, "HH:mm:ss")).alias("time"),
+        F.when(valid, F.concat(F.lit("IFCB"), instr)).alias("ifcb_number"),
+        valid.alias("valid"),
+    )
+
+
 def parse_bin_id(pid: Column | str) -> Column:
     """``D20240423T115846_IFCB127`` → struct<timestamp, date, year, month,
     day, time, ifcb_number, valid>.
@@ -32,16 +47,7 @@ def parse_bin_id(pid: Column | str) -> Column:
     instr = F.regexp_extract(pid, BIN_ID_PATTERN, 3)
     valid = date_part != ""
     ts = F.when(valid, F.to_timestamp(F.concat(date_part, time_part), "yyyyMMddHHmmss"))
-    return F.struct(
-        ts.alias("timestamp"),
-        F.to_date(ts).alias("date"),
-        F.year(ts).alias("year"),
-        F.month(ts).alias("month"),
-        F.dayofmonth(ts).alias("day"),
-        F.when(valid, F.date_format(ts, "HH:mm:ss")).alias("time"),
-        F.when(valid, F.concat(F.lit("IFCB"), instr)).alias("ifcb_number"),
-        valid.alias("valid"),
-    )
+    return _bin_id_struct(ts, valid, instr)
 
 
 def make_bin_id(ts: Column, ifcb_number: Column | int) -> Column:
@@ -81,16 +87,7 @@ def parse_legacy_bin_id(pid: Column | str) -> Column:
             F.concat(F.date_format(date, "yyyyMMdd"), hms), "yyyyMMddHHmmss"
         ),
     )
-    return F.struct(
-        ts.alias("timestamp"),
-        F.to_date(ts).alias("date"),
-        F.year(ts).alias("year"),
-        F.month(ts).alias("month"),
-        F.dayofmonth(ts).alias("day"),
-        F.when(valid, F.date_format(ts, "HH:mm:ss")).alias("time"),
-        F.when(valid, F.concat(F.lit("IFCB"), instr)).alias("ifcb_number"),
-        valid.alias("valid"),
-    )
+    return _bin_id_struct(ts, valid, instr)
 
 
 def strip_instrument(pid: Column | str) -> Column:

@@ -12,18 +12,20 @@ Components in MapReduce and Beyond*, ACM SoCC'14).  Each round is two
 window-min stages over the current edge set, and the edge set contracts
 to a star forest rooted at component minima in **O(log n)** rounds
 regardless of diameter — a 1M-node chain needs ~20 rounds here versus
-~1M for min-label propagation.  Once the edge set fits one
-advisory-sized partition, a single task finishes the contraction.
+~1M for min-label propagation.  Once the edge set fits one 64 MB
+partition (:data:`_LOCAL_FINISH_EDGES`), a single task finishes the
+contraction.  Every exchange is partitioned by the session and AQE, as
+everywhere else in the package.
 
 :func:`pagerank` (fixed-iteration
 link analysis — the crawl-side quality signal) shares the same iterative
 discipline: per-iteration key-partitioned joins with localCheckpoint-ed
 O(1) lineage.
 
-The counts the iterations size themselves from (the convergence
-fingerprint, pagerank's edge count) are ``DataFrame.observe`` metrics of
-the localCheckpoint job that runs anyway, read with ``Observation.get``
-once that job has finished: no count runs as a job of its own.
+The counts the operators read (the convergence fingerprint, pagerank's
+node count) are ``DataFrame.observe`` metrics of the localCheckpoint job
+that runs anyway, read with ``Observation.get`` once that job has
+finished: no count runs as a job of its own.
 """
 
 from __future__ import annotations
@@ -31,21 +33,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from .skew import _parse_bytes
-
 # Round cap of :func:`connected_components`: O(log n) star rounds label
 # any graph this engine builds long before it.
 _MAX_ROUNDS = 25
 
-
-def _advisory_bytes(spark) -> int:
-    """The AQE advisory partition size in bytes (64 MB when unset or
-    unparseable) — the sizing input of the iteration exchanges."""
-    try:
-        return _parse_bytes(spark.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
-    except Exception:
-        return 64 << 20
+# Edge count at or below which :func:`connected_components` hands the
+# contraction to one task: a 64 MB partition at ~48 B per edge row
+# (1,398,101 edges, a few tens of MB in Arrow — far below task memory).
+_LOCAL_FINISH_EDGES = (64 << 20) // 48
 
 
 def _canonical(e: DataFrame) -> DataFrame:
@@ -99,10 +94,10 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 def _local_components(e: DataFrame) -> DataFrame:
     """Single-stage contraction endgame (round 19, guide §1.2/§2.4):
-    once the (checkpointed, exactly-counted) edge set fits ONE
-    advisory-sized shuffle partition, further star rounds are pure
-    overhead — every round still pays 4 window exchanges + 2 dedups +
-    a checkpoint job over data a single task holds comfortably.
+    once the (checkpointed, exactly-counted) edge set fits ONE 64 MB
+    partition, further star rounds are pure overhead — every round still
+    pays 4 window exchanges + 2 dedups + a checkpoint job over data a
+    single task holds comfortably.
     Finish the contraction in one Arrow ``mapInPandas`` task instead:
     vectorized min-label propagation with pointer-jumping compression
     (O(log n) numpy passes, each a full-array op), which converges to
@@ -140,20 +135,15 @@ def _local_components(e: DataFrame) -> DataFrame:
     return e.coalesce(1).mapInPandas(finish, "node long, cluster long")
 
 
-def connected_components(
-    edges: DataFrame,
-    _round_counter: list | None = None,
-    local_finish_edges: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Label every non-isolated node with its component's minimum node id.
 
     ``edges`` is an undirected ``(src, dst)`` edge list (direction and
     duplicates are ignored).  Returns ``(node long, cluster long)`` for
     every node that appears in ``edges``; isolated nodes are the
     caller's to union in (they are singleton components by definition).
-    ``local_finish_edges`` overrides the edge count at or below which a
-    single task finishes the contraction (``0`` forces star rounds to
-    the fixpoint); ``_round_counter`` receives the star rounds run.
+    Once the edge count is at or below :data:`_LOCAL_FINISH_EDGES`, a
+    single task finishes the contraction (:func:`_local_components`).
 
     Scale design: each star is ONE key-partitioned window shuffle over
     the *current* edge set (window-min, not groupBy + join back), the
@@ -191,36 +181,6 @@ def connected_components(
         )
     )
 
-    # Scale-adaptive iteration parallelism (round 18, guide §2.2): every
-    # star round is 2 window shuffles + a dedup over the CURRENT edge
-    # set, whose size the convergence fingerprint just measured exactly.
-    # Partitioning those exchanges by the session default (sized for the
-    # whole corpus / core count) makes each of the ~log n rounds pay a
-    # full session-width stage of mostly-empty tasks; deriving the count
-    # from measured bytes (~48 B/edge row against the AQE advisory
-    # target) sizes the rounds to the data at ANY scale — 1 partition
-    # for a 5k-edge local graph, thousands for a 1e11-edge corpus graph
-    # (never capped by the session default: if the derived count exceeds
-    # it, the data genuinely needs more).  Restored in finally so only
-    # the iteration runs resized.
-    spark = edges.sparkSession
-    advisory = _advisory_bytes(spark)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-
-    def _iter_parts(n_edges: int) -> int:
-        return max(1, -(-int(n_edges) * 48 // max(advisory, 1 << 20)))
-
-    # Local-finish threshold (round 19): hand the endgame to ONE task as
-    # soon as the measured edge count fits a single advisory-sized
-    # partition — the same ~48 B/row estimate that sizes the iteration
-    # exchanges, so the trigger is scale-adaptive, not a local[32]
-    # constant.  At a 64 MB advisory that is ~1.4M edges (a few tens of
-    # MB in Arrow), far below task memory; a 100 TB corpus graph runs
-    # O(log n) star rounds until it contracts under the threshold, then
-    # finishes in one stage instead of ~3 more checkpointed rounds.
-    # ``local_finish_edges=0`` disables (tests force the star path).
-    if local_finish_edges is None:
-        local_finish_edges = max(advisory, 1 << 20) // 48
     # Two star-pair rounds per materialization: locally the cost is
     # action-count (checkpoint + fingerprint jobs), so batching halves the
     # job count at the price of at most one redundant (no-op) pair after
@@ -234,37 +194,22 @@ def connected_components(
     # the fixpoint still pay their two window shuffles.  Three-per-round
     # only wins when round-count mod 6 cooperates; two is the stable
     # choice.
-    rounds_done = 0
-    converged = False
-    try:
-        while rounds_done < _MAX_ROUNDS:
-            if fp[0] <= local_finish_edges:
-                if _round_counter is not None:
-                    _round_counter.append(rounds_done)
-                return _local_components(e)
-            spark.conf.set("spark.sql.shuffle.partitions", str(_iter_parts(fp[0])))
-            nxt = _canonical(_small_star(_large_star(e)))
-            nxt, nfp = checkpoint_with_fingerprint(
-                _canonical(_small_star(_large_star(nxt)))
-            )
-            rounds_done += 2
-            if nfp == fp:
-                # fingerprints agree — prove set equality before stopping,
-                # so a fingerprint collision can't end early.  Both frames
-                # are exact sets (dropDuplicates) whose cardinalities the
-                # fingerprints just matched, so equality ⟺ e \ nxt = ∅:
-                # ONE anti-join job instead of the two-way exceptAll union
-                # (round 19; halves the proof job's stages).
-                if e.join(nxt, ["u", "v"], "left_anti").isEmpty():
-                    if _round_counter is not None:
-                        _round_counter.append(rounds_done)
-                    converged = True
-                    break
-            e, fp = nxt, nfp
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if not converged:
+    for _ in range(0, _MAX_ROUNDS, 2):
+        if fp[0] <= _LOCAL_FINISH_EDGES:
+            return _local_components(e)
+        nxt = _canonical(_small_star(_large_star(e)))
+        nxt, nfp = checkpoint_with_fingerprint(
+            _canonical(_small_star(_large_star(nxt)))
+        )
+        # Fingerprints agree — prove set equality before stopping, so a
+        # fingerprint collision can't end early.  Both frames are exact
+        # sets (dropDuplicates) whose cardinalities the fingerprints just
+        # matched, so equality ⟺ e \ nxt = ∅: ONE anti-join job instead
+        # of the two-way exceptAll union (halves the proof job's stages).
+        if nfp == fp and e.join(nxt, ["u", "v"], "left_anti").isEmpty():
+            break
+        e, fp = nxt, nfp
+    else:
         raise RuntimeError(
             f"connected_components did not converge in {_MAX_ROUNDS} rounds"
         )
@@ -276,19 +221,15 @@ def connected_components(
 
 
 def pagerank(
-    edges: DataFrame,
-    iterations: int = 10,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
+    edges: DataFrame, iterations: int = 10, damping: float = 0.85
 ) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list.
+    """Fixed-iteration PageRank over a directed ``(src, dst)`` edge list.
 
     Returns ``(node long, rank double)`` for every node appearing as a
-    source or destination.  Simplified model (no dangling-mass
-    redistribution): r_{i+1}(v) = (1-d)/N + d·Σ_{u→v} r_i(u)/outdeg(u) —
-    deterministic for a fixed iteration count, so it admits an exact
-    unrolled SQL twin.
+    source or destination (no rows for an empty edge list).  Simplified
+    model (no dangling-mass redistribution):
+    r_{i+1}(v) = (1-d)/N + d·Σ_{u→v} r_i(u)/outdeg(u) — deterministic
+    for a fixed iteration count, so it admits an exact unrolled SQL twin.
 
     Scale design: out-degrees are joined onto the edge list ONCE and the
     combined frame is localCheckpoint-ed — each iteration is then one
@@ -296,61 +237,40 @@ def pagerank(
     join back onto the node set, all key-partitioned shuffles.  Ranks
     are checkpointed every other iteration to keep the lineage O(1).
     The rank vector is |nodes| rows — never broadcast; N rides along as
-    a literal (one count job up front).
+    a literal, observed on the node set's localCheckpoint job.
     """
     e = edges.select(
-        F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
+        F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
     ).dropDuplicates()
+    obs = Observation()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .dropDuplicates()
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
-    obs = Observation()
-    e_deg = (
-        e.join(deg, "src")
         .observe(obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    n_edges = int(obs.get["n"])
-
-    # Scale-adaptive iteration parallelism (round 18, guide §2.2) — the
-    # same sizing rule as connected_components: every iteration's
-    # shuffles move ~|edges| (contrib) / ~|nodes| (rank rebuild) rows
-    # whose count is now known exactly, so size the iteration exchanges
-    # to measured bytes instead of the session default.  Result-safe:
-    # rank sums are summation-order "irrational-ish" doubles rounded at
-    # 1e-6 on output (finite-decimal rule), and the adversarial
-    # partition-count sweeps pin exactly this axis.  Restored in
-    # finally; only the fixed-iteration loop runs resized.
-    spark = edges.sparkSession
-    advisory = _advisory_bytes(spark)
-    iter_parts = max(1, -(-max(n_edges, n) * 48 // max(advisory, 1 << 20)))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
+    n = obs.get["n"]
+    if n == 0:
+        return nodes.withColumn("rank", F.lit(0.0))
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
+    e_deg = e.join(deg, "src").localCheckpoint()
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(iter_parts))
-        for i in range(iterations):
-            contrib = (
-                e_deg.join(ranks, e_deg.src == ranks.node)
-                .select("dst", (F.col("rank") / F.col("odeg")).alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("in_mass"))
-            )
-            ranks = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
-                "node",
-                (F.lit(base) + damping * F.coalesce("in_mass", F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-            if i % 2 == 1 or i == iterations - 1:
-                ranks = ranks.localCheckpoint()
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    for i in range(iterations):
+        contrib = (
+            e_deg.join(ranks, e_deg.src == ranks.node)
+            .select("dst", (F.col("rank") / F.col("odeg")).alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").alias("in_mass"))
+        )
+        ranks = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
+            "node",
+            (F.lit(base) + damping * F.coalesce("in_mass", F.lit(0.0))).alias(
+                "rank"
+            ),
+        )
+        if i % 2 == 1 or i == iterations - 1:
+            ranks = ranks.localCheckpoint()
     return ranks

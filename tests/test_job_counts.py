@@ -32,7 +32,7 @@ BUILD_JOBS = {
     "dd6_dup_clusters": 5,
     "dd7_dedup_materialize": 5,
     "dp8_exact_quantiles": 5,
-    "g1_pagerank": 40,
+    "g1_pagerank": 38,
     "j1_enrichment_chain": 0,
     "j14_bucketed_range_join": 0,
     "j17_point_in_time_join": 0,

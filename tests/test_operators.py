@@ -357,68 +357,90 @@ def test_audio_frame_features_analytic(spark):
     assert out[("alt", 1)]["peak"] == 50
 
 
-def test_connected_components_chain_logarithmic(spark):
+def _components(monkeypatch, edges, local_finish=None):
+    """``connected_components(edges)`` and the star rounds it ran, counted
+    by a spy on ``graph._large_star`` (one call per star round).
+    ``local_finish`` patches the single-task endgame threshold; ``0``
+    forces star rounds to the fixpoint."""
+    from ifcb_data_pipeline_spark.operators import graph
+
+    calls: list = []
+    large_star = graph._large_star
+
+    def spy(e):
+        calls.append(1)
+        return large_star(e)
+
+    with monkeypatch.context() as m:
+        m.setattr(graph, "_large_star", spy)
+        if local_finish is not None:
+            m.setattr(graph, "_LOCAL_FINISH_EDGES", local_finish)
+        labels = graph.connected_components(edges)
+    return labels, len(calls)
+
+
+def _random_edges(spark, seed, n_nodes, n_edges):
+    """Deterministic pseudo-random ``(src, dst)`` pairs, self-loops dropped."""
+    import random
+
+    rng = random.Random(seed)
+    raw = [
+        (rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)
+    ]
+    raw = [(a, b) for a, b in raw if a != b]
+    return raw, spark.createDataFrame(raw, "src long, dst long")
+
+
+def test_connected_components_chain_logarithmic(spark, monkeypatch):
     """A 200-node chain: min-label propagation would need ~200 rounds;
     the star contraction must label it in <= 10 (O(log n)) and return
     component-min labels exactly."""
     from pyspark.sql import functions as F
 
-    from ifcb_data_pipeline_spark.operators.graph import connected_components
-
     edges = spark.range(199).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
-    rounds: list = []
-    # local_finish_edges=0 forces the star path: the r19 single-task
-    # endgame would otherwise absorb a 199-edge graph before round 1.
-    labels = connected_components(
-        edges, _round_counter=rounds, local_finish_edges=0
-    )
+    # threshold 0 forces the star path: the single-task endgame
+    # would otherwise absorb a 199-edge graph before round 1.
+    labels, rounds = _components(monkeypatch, edges, local_finish=0)
     rows = {r["node"]: r["cluster"] for r in labels.collect()}
     assert rows == {n: 0 for n in range(200)}
-    assert rounds and rounds[0] <= 10, rounds
+    assert 0 < rounds <= 10, rounds
 
 
-def test_connected_components_local_finish_endgame(spark):
-    """r19 single-task endgame: below the advisory-derived edge
-    threshold the contraction finishes in one mapInPandas stage with
-    ZERO star rounds, and the labeling is identical to the star path."""
+def test_connected_components_local_finish_endgame(spark, monkeypatch):
+    """Single-task endgame: below ``_LOCAL_FINISH_EDGES`` the
+    contraction finishes in one mapInPandas stage with ZERO star rounds,
+    and the labeling is identical to the star path."""
     from pyspark.sql import functions as F
-
-    from ifcb_data_pipeline_spark.operators.graph import connected_components
 
     edges = spark.range(199).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
-    rounds: list = []
-    labels = connected_components(edges, _round_counter=rounds)
-    assert rounds == [0], rounds  # default threshold absorbs 199 edges
+    labels, rounds = _components(monkeypatch, edges)
+    assert rounds == 0, rounds  # default threshold absorbs 199 edges
     assert "MapInPandas" in labels._jdf.queryExecution().executedPlan().toString()
     rows = {r["node"]: r["cluster"] for r in labels.collect()}
     assert rows == {n: 0 for n in range(200)}
 
 
-def test_connected_components_empty_after_canonical(spark):
+def test_connected_components_empty_after_canonical(spark, monkeypatch):
     """Self-loops-only input canonicalizes to an EMPTY edge set: both
     closure paths must return zero rows with the (node, cluster)
     schema (the endgame's mapInPandas sees no batches)."""
-    from ifcb_data_pipeline_spark.operators.graph import connected_components
-
     edges = spark.createDataFrame([(7, 7), (9, 9)], "src long, dst long")
-    for lfe in (None, 0):
-        out = connected_components(edges, local_finish_edges=lfe)
+    for local_finish in (None, 0):
+        out, _ = _components(monkeypatch, edges, local_finish)
         assert out.columns == ["node", "cluster"]
         assert out.count() == 0
 
 
-def test_connected_components_local_finish_mid_loop(spark):
+def test_connected_components_local_finish_mid_loop(spark, monkeypatch):
     """A dense random graph contracts below a small local-finish
     threshold mid-fixpoint: star rounds run first (threshold < initial
     edge count), the endgame fires once the measured count fits, and
     the labels match the pure star path exactly."""
     import random
-
-    from ifcb_data_pipeline_spark.operators.graph import connected_components
 
     rng = random.Random(7)
     raw = list({
@@ -429,20 +451,39 @@ def test_connected_components_local_finish_mid_loop(spark):
         if a != b
     })
     edges = spark.createDataFrame(raw, "src long, dst long")
-    rounds: list = []
     # threshold between the star-forest size (< 80) and |raw| (~390):
     # at least one star pair must run before the endgame triggers.
-    got = {
-        r["node"]: r["cluster"]
-        for r in connected_components(
-            edges, _round_counter=rounds, local_finish_edges=150
-        ).collect()
-    }
-    assert rounds and rounds[0] >= 2, rounds
-    want = {
-        r["node"]: r["cluster"]
-        for r in connected_components(edges, local_finish_edges=0).collect()
-    }
+    labels, rounds = _components(monkeypatch, edges, local_finish=150)
+    got = {r["node"]: r["cluster"] for r in labels.collect()}
+    assert rounds >= 2, rounds
+    star, _ = _components(monkeypatch, edges, local_finish=0)
+    assert got == {r["node"]: r["cluster"] for r in star.collect()}
+
+
+@pytest.mark.parametrize("seed,n_nodes,n_edges", [(4, 120, 150), (5, 200, 190)])
+def test_connected_components_star_path_partition_invariant(
+    spark, monkeypatch, seed, n_nodes, n_edges
+):
+    """The star rounds' exchanges are partitioned by the session: under a
+    hostile 7-partition, AQE-off session the labels must equal the
+    default session's."""
+    _, edges = _random_edges(spark, seed, n_nodes, n_edges)
+
+    def labels():
+        out, rounds = _components(monkeypatch, edges, local_finish=0)
+        assert rounds >= 2, rounds
+        return {r["node"]: r["cluster"] for r in out.collect()}
+
+    want = labels()
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    prev = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        got = labels()
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
     assert got == want
 
 
@@ -492,20 +533,14 @@ def test_pagerank_cycle_and_star(spark):
     [(1, 60, 40, 0), (2, 80, 100, 0), (3, 50, 25, 0),
      (1, 60, 40, None), (2, 80, 100, None), (3, 50, 25, None)],
 )
-def test_connected_components_matches_union_find(spark, seed, n_nodes, n_edges, lfe):
+def test_connected_components_matches_union_find(
+    spark, monkeypatch, seed, n_nodes, n_edges, lfe
+):
     """Cross-check BOTH closure paths (lfe=0 forces star contraction;
     None takes the r19 local-finish endgame at these sizes) against a
     plain Python union-find on deterministic pseudo-random graphs
     (sparse, near-critical, and super-critical densities)."""
-    import random
-
-    from ifcb_data_pipeline_spark.operators.graph import connected_components
-
-    rng = random.Random(seed)
-    raw = [
-        (rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)
-    ]
-    raw = [(a, b) for a, b in raw if a != b]
+    raw, edges = _random_edges(spark, seed, n_nodes, n_edges)
 
     parent = list(range(n_nodes))
 
@@ -527,12 +562,8 @@ def test_connected_components_matches_union_find(spark, seed, n_nodes, n_edges, 
         comp_min[r] = min(comp_min.get(r, x), x)
     expected = {x: comp_min[find(x)] for x in touched}
 
-    edges = spark.createDataFrame(raw, "src long, dst long")
-    got = {
-        r["node"]: r["cluster"]
-        for r in connected_components(edges, local_finish_edges=lfe).collect()
-    }
-    assert got == expected
+    labels, _ = _components(monkeypatch, edges, lfe)
+    assert {r["node"]: r["cluster"] for r in labels.collect()} == expected
 
 
 def test_pagerank_mass_conserved_without_dangling(spark):
@@ -547,3 +578,15 @@ def test_pagerank_mass_conserved_without_dangling(spark):
     ranks = [r["rank"] for r in pagerank(df, iterations=8).collect()]
     assert len(ranks) == n
     assert sum(ranks) == pytest.approx(1.0, rel=1e-9)
+
+
+def test_pagerank_empty_edges(spark):
+    """An empty edge list has no nodes: pagerank returns the empty
+    ``(node, rank)`` frame, as connected_components does, instead of
+    dividing by a zero node count."""
+    from ifcb_data_pipeline_spark.operators.graph import pagerank
+
+    out = pagerank(spark.createDataFrame([], "src long, dst long"))
+    assert out.columns == ["node", "rank"]
+    assert out.schema["rank"].dataType.simpleString() == "double"
+    assert out.count() == 0

@@ -583,3 +583,16 @@ def test_streams_run_only_through_drain():
         "awaitTermination": drain_site,
         "start": drain_site,
     }, "run stream writers through streaming/incremental.drain"
+
+
+# --- lint 8: session-conf writes ----------------------------------------------
+# A conf.set changes every later query in the session, not only the
+# caller's.  Operators and plans leave partitioning to the session and
+# AQE; the only writes are the UTC forcing at the two table entry points
+# and the stateful-drain partition clamp (set, then restore in finally).
+def test_session_conf_writes_are_pinned():
+    assert _scan_calls("set") == {
+        ("queries/_util.py", "tables"): 1,
+        ("queries/_util.py", "streams"): 1,
+        ("queries/multimodal.py", "_drain_to_memory"): 2,
+    }, "a new session conf.set: leave partitioning to the session and AQE"
