@@ -6,6 +6,10 @@ Beyond the reference's exact duplicate detection
 family a 100 TB text corpus needs:
 
 * :func:`exact_dedup`       — hash-groupBy (two-phase aggregation).
+* :func:`embedding_lsh_pairs` — banded sign-LSH over embeddings
+  (:func:`sign_lsh_bands`: one SQL expression over the md5
+  :func:`sign_hyperplanes`) → (band, signature) equi-join → exact
+  cosine verify of the candidates only.
 * :func:`minhash_signatures`/:func:`minhash_lsh_pairs` — shingle → MinHash
   → banded LSH bucket-join.  The band join shuffles on (band, signature)
   — the classic scalable near-dup plan: candidate generation is a hash
@@ -37,8 +41,8 @@ def hash32(col: Column) -> Column:
 def sign_hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     """Deterministic ±1 hyperplanes for sign-LSH: component ``i`` of plane
     ``p`` is +1 iff the first hex digit of ``md5("p#i")`` is >= '8'.
-    Pure-Python md5 → the exact same matrix can be embedded as literals in
-    any engine's SQL (the DuckDB oracle mirrors these)."""
+    Pure-Python md5 → the exact same matrix is embedded as literals in
+    both engines' SQL (:func:`sign_lsh_bands` and its DuckDB twin)."""
     return [
         [
             1.0 if hashlib.md5(f"{p}#{i}".encode()).hexdigest()[0] >= "8" else -1.0
@@ -48,61 +52,40 @@ def sign_hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     ]
 
 
-_PLANE_COL_CACHE: dict[tuple[int, int], list[Column]] = {}
+def sign_lsh_bands(vec_col: str, dim: int, bands: int, rows_per_band: int) -> Column:
+    """The banded sign-signature projection of ``vec_col``:
+    ``array<struct<band:int, sig:string>>``, one element per band, whose
+    ``sig`` concatenates ``rows_per_band`` bits — ``'1'`` iff the
+    vector's dot with that band's next :func:`sign_hyperplanes` plane is
+    positive.  The dot is the left-to-right fold ``similarity.dot``
+    builds, so both engines see the same doubles.
 
+    Emitted as ONE SQL expression string: building the same tree as
+    Column objects costs a py4j round trip per plane literal and per
+    ``when``/``concat`` node (a cold build took 1.5 s at 64×4×4 and
+    3.9 s at 64×8×8 on 4 cores), while ``F.expr`` crosses the JVM
+    boundary once (0.03 s).  Literals are written ``1.0D``: a bare ``1.0`` is a DECIMAL in
+    Spark SQL.  DuckDB twin: ``queries/_util.sign_lsh_coded_sql``."""
+    planes = sign_hyperplanes(dim, bands * rows_per_band)
 
-def _plane_literal_columns(dim: int, n_planes: int) -> list[Column]:
-    """The sign-LSH plane matrix as literal-array Columns, memoized per
-    process: building dim×n_planes ``F.lit`` nodes costs ~2.7 s of py4j
-    round trips (measured r17, 64×64), paid on EVERY
-    ``embedding_lsh_pairs`` call without this cache.  Column objects are
-    unresolved expression trees — reusable across queries and sessions
-    within a process."""
-    key = (dim, n_planes)
-    if key not in _PLANE_COL_CACHE:
-        _PLANE_COL_CACHE[key] = [
-            F.array(*[F.lit(x) for x in plane])
-            for plane in sign_hyperplanes(dim, n_planes)
-        ]
-    return _PLANE_COL_CACHE[key]
-
-
-_BAND_ARRAY_CACHE: dict[tuple[str, int, int, int], Column] = {}
-
-
-def _band_struct_array(
-    vec_col: str, dim: int, bands: int, rows_per_band: int
-) -> Column:
-    """The full banded sign-signature projection as ONE memoized Column:
-    ``array(struct(band, sig), ...)`` where each sig concatenates
-    ``rows_per_band`` per-plane sign bits.  The r17 plane-literal cache
-    removed the ``F.lit`` matrix cost, but each ``embedding_lsh_pairs``
-    call still rebuilt bands×rows fold/WHEN/concat trees over py4j —
-    ~1.8 s per sim12 call at 8×8 (measured r18).  Columns are unbound
-    expression trees keyed only by the vector column NAME, so the whole
-    projection is reusable across calls and queries."""
-    from .similarity import dot
-
-    key = (vec_col, dim, bands, rows_per_band)
-    if key not in _BAND_ARRAY_CACHE:
-        plane_cols = _plane_literal_columns(dim, bands * rows_per_band)
-
-        def band_sig(b: int) -> Column:
-            bits = []
-            for r in range(rows_per_band):
-                arr = plane_cols[b * rows_per_band + r]
-                bits.append(
-                    F.when(dot(F.col(vec_col), arr) > 0, "1").otherwise("0")
-                )
-            return F.concat(*bits)
-
-        _BAND_ARRAY_CACHE[key] = F.array(
-            *[
-                F.struct(F.lit(b).alias("band"), band_sig(b).alias("sig"))
-                for b in range(bands)
-            ]
+    def bit(plane: list[float]) -> str:
+        arr = ", ".join("1.0D" if x > 0 else "-1.0D" for x in plane)
+        return (
+            f"CASE WHEN aggregate(zip_with(`{vec_col}`, array({arr}), "
+            "(x, y) -> x * y), 0.0D, (acc, x) -> acc + x) > 0 "
+            "THEN '1' ELSE '0' END"
         )
-    return _BAND_ARRAY_CACHE[key]
+
+    def band(b: int) -> str:
+        rows = planes[b * rows_per_band : (b + 1) * rows_per_band]
+        return f"struct({b} AS band, concat({', '.join(map(bit, rows))}) AS sig)"
+
+    return F.expr(f"array({', '.join(band(b) for b in range(bands))})")
+
+
+# Cross-engine floor-form rounding of the verified cosine (the oracles'
+# ``floor(x * 1e6 + 0.5) / 1e6``; see queries._util.dround).
+ROUND_DIGITS = 6
 
 
 def embedding_lsh_pairs(
@@ -111,7 +94,6 @@ def embedding_lsh_pairs(
     bands: int = 4,
     rows_per_band: int = 4,
     threshold: float = 0.95,
-    round_digits: int = 6,
     id_col: str = "vec_id",
     vec_col: str = "v",
 ) -> DataFrame:
@@ -127,17 +109,14 @@ def embedding_lsh_pairs(
     """
     from .similarity import dot
 
-    # Cross-engine floor-form rounding (see queries._util.dround).
-    rf = float(10.0**round_digits)
+    rf = float(10.0**ROUND_DIGITS)
 
     def dround(col: Column, _f: float = rf) -> Column:
         return F.floor(col * _f + F.lit(0.5)) / F.lit(_f)
 
     coded = vectors.select(
         F.col(id_col).alias("id"),
-        F.explode(_band_struct_array(vec_col, dim, bands, rows_per_band)).alias(
-            "bs"
-        ),
+        F.explode(sign_lsh_bands(vec_col, dim, bands, rows_per_band)).alias("bs"),
     ).select("id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
     # Pre-partition the signature frame on the join key: both sides of the
     # self-join below then hang off ONE canonical Exchange subtree, so

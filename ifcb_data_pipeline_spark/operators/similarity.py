@@ -94,18 +94,18 @@ def _cells_one_row(centroid_arrays: DataFrame) -> DataFrame:
     )
 
 
-def _cell_scores(vec_col: str) -> "Column":
+def _cell_scores() -> "Column":
     """Per-row (d2, cell) struct array over the collected cell array:
-    the same ``v·v − 2·v·c + c·c`` expression the pre-r18 exploded form
-    evaluated per (vector, cell) ROW, so the doubles agree bit-for-bit;
-    struct comparison is field-lexicographic, so min/sort over these
-    structs IS the old ``row_number() ORDER BY d2, cell`` selection."""
+    the same ``v·v − 2·v·c + c·c`` expression an exploded (vector, cell)
+    ROW form evaluates, so the doubles agree bit-for-bit; struct
+    comparison is field-lexicographic, so min/sort over these structs IS
+    a ``row_number() ORDER BY d2, cell`` selection."""
     return F.transform(
         F.col("__cells"),
         lambda c: F.struct(
             (
-                dot(F.col(vec_col), F.col(vec_col))
-                - 2 * dot(F.col(vec_col), c["cv"])
+                dot(F.col("v"), F.col("v"))
+                - 2 * dot(F.col("v"), c["cv"])
                 + dot(c["cv"], c["cv"])
             ).alias("d2"),
             c["label"].alias("cell"),
@@ -113,28 +113,22 @@ def _cell_scores(vec_col: str) -> "Column":
     )
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    centroid_arrays: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """Assign every vector to its nearest centroid cell (squared
-    euclidean, expanded as ``v·v − 2·v·c + c·c`` so both engines
-    evaluate the identical expression; ties break on cell id).
+def ivf_assign(vectors: DataFrame, centroid_arrays: DataFrame) -> DataFrame:
+    """Assign every ``(vec_id, v)`` vector to its nearest centroid cell
+    (squared euclidean, expanded as ``v·v − 2·v·c + c·c`` so both
+    engines evaluate the identical expression; ties break on cell id).
 
     ``centroid_arrays``: (label, cv array<double>) — the IVF coarse
     quantizer, always broadcast-sized (|cells| ≪ |vectors|).  The output
     keeps (id, vec, cell); downstream search is an equi-join on cell —
     the inverted-file property that makes ANN linear at 100 TB.
 
-    Scale shape (r18, guide §2.4 — remove shuffles outright): the old
-    form exploded the corpus ×|cells| (crossJoin against the broadcast
-    quantizer) and shuffled that expanded frame — full vectors included
-    — through a per-id ``row_number`` window just to take the argmin:
-    an exchange of |cells|× corpus bytes at any scale, plus an
-    Exchange+Sort pair per assign call locally (×3 inside sim8's Lloyd
-    loop).  Assignment is a pure per-row decision once every centroid
+    Scale shape (remove shuffles outright): an exploded form — the
+    corpus crossJoined ×|cells| against the broadcast quantizer —
+    shuffles that expanded frame, full vectors included, through a
+    per-id ``row_number`` window just to take the argmin: an exchange of
+    |cells|× corpus bytes at any scale, plus an Exchange+Sort pair per
+    assign call locally (×3 inside sim8's Lloyd loop).  Assignment is a pure per-row decision once every centroid
     is visible to the row, so the quantizer is collapsed to ONE
     ``array<struct<label, cv>>`` row (bounded by construction),
     broadcast, and the argmin runs as ``array_min`` over the per-row
@@ -143,27 +137,18 @@ def ivf_assign(
     lexicographic struct-min == ORDER BY d2, cell (pinned by
     tests/test_physical_plans.py::test_ivf_assign_is_map_only and the
     tie-break unit test)."""
-    # Two-step select: the argmin expression references ``vec_col``, so
-    # renaming in the SAME projection would make Spark resolve it as a
-    # lateral column alias (an internal error under Generate for the
-    # probes twin below; avoided here too for symmetry).
-    best = F.array_min(_cell_scores(vec_col))
+    best = F.array_min(_cell_scores())
     return (
         vectors.crossJoin(F.broadcast(_cells_one_row(centroid_arrays)))
         # empty quantizer → zero rows (the old exploded form's contract).
-        # Guarded BEFORE the argmin on the cheap array size (r19): the
+        # Guarded BEFORE the argmin on the cheap array size: the
         # earlier `.where(best.isNotNull())` form made Catalyst evaluate
         # the whole interpreted HOF argmin TWICE per row — once in the
         # collapsed Filter, once in the Project (HOFs are CodegenFallback,
         # so no codegen subexpression elimination saves it) — measured
         # ~1.2× on sim8's Lloyd loop.
         .where(F.size(F.col("__cells")) > 0)
-        .select(id_col, vec_col, best.alias("__best"))
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            F.col("__best")["cell"].alias("cell"),
-        )
+        .select(F.col("vec_id").alias("id"), "v", best["cell"].alias("cell"))
     )
 
 
@@ -171,30 +156,25 @@ def ivf_assign_probes(
     vectors: DataFrame,
     centroid_arrays: DataFrame,
     nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
     """Like :func:`ivf_assign` but keeps each vector's ``nprobe``
     nearest cells with their rank (probe 1 = the primary cell).  The
     corpus is indexed under probe 1 only; queries probe all ``nprobe``
     cells — the standard IVF recall/latency dial.
 
-    Same r18 map-only rewrite as :func:`ivf_assign`: ``array_sort``
+    Same map-only shape as :func:`ivf_assign`: ``array_sort``
     over the per-row (d2, cell) structs is lexicographic — exactly the
     old window's ``ORDER BY d2, cell`` — so slicing the first
     ``nprobe`` and posexploding reproduces the ``row_number <= nprobe``
     rows (probe = position + 1) with zero shuffle; an empty quantizer
     posexplodes to zero rows, matching the old empty crossJoin."""
-    top = F.slice(F.array_sort(_cell_scores(vec_col)), 1, nprobe)
+    top = F.slice(F.array_sort(_cell_scores()), 1, nprobe)
     return (
         vectors.crossJoin(F.broadcast(_cells_one_row(centroid_arrays)))
-        # original column names here — aliasing vec_col in the same
-        # projection as the generator would turn its vec_col reference
-        # into a LateralColumnAliasReference (internal error)
-        .select(id_col, vec_col, F.posexplode(top).alias("__pos", "__sc"))
+        .select("vec_id", "v", F.posexplode(top).alias("__pos", "__sc"))
         .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
+            F.col("vec_id").alias("id"),
+            "v",
             F.col("__sc")["cell"].alias("cell"),
             (F.col("__pos") + 1).alias("probe"),
         )

@@ -41,7 +41,8 @@ def streams(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
 # fan_out and hash32 live in operators/ (operators never import from
 # queries/, and shingle_sets / simhash call them there);
 # re-exported here so query modules keep their one-stop `_util` import.
-from ..operators.dedup import hash32  # noqa: E402,F401
+# sign_hyperplanes feeds sign_lsh_coded_sql below.
+from ..operators.dedup import hash32, sign_hyperplanes  # noqa: E402,F401
 from ..operators.skew import fan_out  # noqa: E402,F401
 
 
@@ -76,6 +77,29 @@ def dround_sql(expr: str, d: int) -> str:
 
 
 HASH32_SQL = "(('0x' || substr(md5({x}), 1, 8))::BIGINT)"
+
+
+def sign_lsh_coded_sql(
+    id_col: str, source: str, dim: int, bands: int, rows: int
+) -> str:
+    """DuckDB twin of ``operators/dedup.sign_lsh_bands``: the UNION-ALL
+    body of an oracle's ``coded`` CTE — one ``(id_col, band, sig)`` row
+    per ``source`` row per band, ``sig`` being ``rows`` sign bits of
+    ``list_inner_product(v, plane) > 0`` over the same md5 planes."""
+    planes = sign_hyperplanes(dim, bands * rows)
+
+    def bit(plane: list[float]) -> str:
+        arr = ", ".join("1.0" if x > 0 else "-1.0" for x in plane)
+        return f"(CASE WHEN list_inner_product(v, [{arr}]) > 0 THEN '1' ELSE '0' END)"
+
+    def sig(b: int) -> str:
+        return " || ".join(map(bit, planes[b * rows : (b + 1) * rows]))
+
+    return " UNION ALL ".join(
+        f"SELECT {id_col}, {b} AS band, {sig(b)} AS sig FROM {source}"
+        for b in range(bands)
+    )
+
 
 # Morphology/qualifier suffixes used to synthesize classifier-label-like
 # strings from part names (exercises the C1 cleaning cascade).

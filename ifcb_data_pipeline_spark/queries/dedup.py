@@ -24,7 +24,7 @@ from ..operators.dedup import (
 from ..operators.graph import connected_components
 from ..operators.text import STOPWORDS as _TEXT_STOPWORDS
 from . import register
-from ._util import dround, dround_sql, fan_out, tables
+from ._util import dround, dround_sql, fan_out, sign_lsh_coded_sql, tables
 
 # --- shared augmented corpus ----------------------------------------------
 # Variant ids are CORPUS-DERIVED (VERDICT r10 item 6 / ADVICE r9): the
@@ -248,23 +248,9 @@ def dd4b_ngram_jaccard_dfcut(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Candidates come from a banded sign-LSH equi-join (never an all-pairs
 # cross join); exact cosine verifies candidates only.  The oracle mirrors
 # the same deterministic ±1 hyperplanes as SQL literals.
-from ..operators.dedup import embedding_lsh_pairs, sign_hyperplanes  # noqa: E402
+from ..operators.dedup import embedding_lsh_pairs  # noqa: E402
 
 _DD5_DIM, _DD5_BANDS, _DD5_ROWS = 64, 4, 4
-_DD5_PLANES = sign_hyperplanes(_DD5_DIM, _DD5_BANDS * _DD5_ROWS)
-
-
-def _plane_sql(p: int) -> str:
-    return "[" + ", ".join("1.0" if x > 0 else "-1.0" for x in _DD5_PLANES[p]) + "]"
-
-
-def _sig_sql(b: int) -> str:
-    return " || ".join(
-        f"(CASE WHEN list_inner_product(v, {_plane_sql(b * _DD5_ROWS + r)}) > 0"
-        " THEN '1' ELSE '0' END)"
-        for r in range(_DD5_ROWS)
-    )
-
 
 DD5_SQL = f"""
 WITH vm AS (SELECT greatest(10000, max(vec_id) + 1) AS m FROM embeddings),
@@ -275,7 +261,7 @@ e AS (
     FROM embeddings, vm WHERE vec_id % 50 = 0
 ),
 coded AS (
-    {" UNION ALL ".join(f"SELECT vec_id, {b} AS band, {_sig_sql(b)} AS sig FROM e" for b in range(_DD5_BANDS))}
+    {sign_lsh_coded_sql("vec_id", "e", _DD5_DIM, _DD5_BANDS, _DD5_ROWS)}
 ),
 cand AS (
     SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import cosine, cosine_topk, dot, label_centroids
 from . import register
-from ._util import dround, dround_sql, fan_out, tables
+from ._util import dround, dround_sql, fan_out, sign_lsh_coded_sql, tables
 
 _COS_SQL = (
     "(list_inner_product({a}, {b})"
@@ -51,48 +51,34 @@ def sim1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- SIM2: banded multi-table sign-LSH ANN ---------------------------------
-# Hardened for scale (VERDICT r3 item 8): the r2 shape hashed every
-# vector with 8 *global* anchor bits — 256 buckets total, so one hot
-# region of embedding space degenerates to a quadratic within-bucket
-# all-pairs.  Now the candidate generator is dd5's banded machinery
-# (operators/dedup.sign_hyperplanes): 4 independent tables × 8-bit
-# signatures.  Each table has 256 buckets but a candidate needs
-# agreement on all 8 bits OF THAT TABLE — per-table bucket occupancy is
-# the binomial tail of 8 hyperplane cuts, so bucket sizes stay bounded
-# under skew while the 4 tables recover the recall a single sharper
-# table would lose.  Candidate pairs = agree on ≥1 table, deduped
-# BEFORE the exact-cosine verify; rank ≤ 3 per query as before.
+# Hashing every vector with 8 *global* anchor bits gives 256 buckets
+# total, so one hot region of embedding space degenerates to a quadratic
+# within-bucket all-pairs.  The candidate generator is therefore dd5's
+# banded machinery (operators/dedup.sign_lsh_bands): 4 independent
+# tables × 8-bit signatures.  Each table has 256 buckets but a
+# candidate needs agreement on all 8 bits OF THAT TABLE — per-table
+# bucket occupancy is the binomial tail of 8 hyperplane cuts, so bucket
+# sizes stay bounded under skew while the 4 tables recover the recall a
+# single sharper table would lose.  Candidate pairs = agree on ≥1 table, deduped
+# BEFORE the exact-cosine verify; rank ≤ 3 per query.
 # tests/test_invariants.py::test_sim2_buckets_bounded pins occupancy.
-from ..operators.dedup import _band_struct_array, sign_hyperplanes  # noqa: E402
+from ..operators.dedup import sign_lsh_bands  # noqa: E402
 
 _SIM2_DIM, _SIM2_BANDS, _SIM2_ROWS = 64, 4, 8
-_SIM2_PLANES = sign_hyperplanes(_SIM2_DIM, _SIM2_BANDS * _SIM2_ROWS)
-
-
-def _sim2_plane_sql(p: int) -> str:
-    return "[" + ", ".join("1.0" if x > 0 else "-1.0" for x in _SIM2_PLANES[p]) + "]"
-
-
-def _sim2_sig_sql(b: int) -> str:
-    return " || ".join(
-        f"(CASE WHEN list_inner_product(v, {_sim2_plane_sql(b * _SIM2_ROWS + r)}) > 0"
-        " THEN '1' ELSE '0' END)"
-        for r in range(_SIM2_ROWS)
-    )
 
 
 def sim2_coded(e: DataFrame) -> DataFrame:
     """(vec_id, band, sig): one row per vector per LSH table."""
     return e.select(
         "vec_id",
-        F.explode(_band_struct_array("v", _SIM2_DIM, _SIM2_BANDS, _SIM2_ROWS)).alias("bs"),
+        F.explode(sign_lsh_bands("v", _SIM2_DIM, _SIM2_BANDS, _SIM2_ROWS)).alias("bs"),
     ).select("vec_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
 
 
 SIM2_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 coded AS (
-    {" UNION ALL ".join(f"SELECT vec_id, {b} AS band, {_sim2_sig_sql(b)} AS sig FROM e" for b in range(_SIM2_BANDS))}
+    {sign_lsh_coded_sql("vec_id", "e", _SIM2_DIM, _SIM2_BANDS, _SIM2_ROWS)}
 ),
 cand AS (
     SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
@@ -936,33 +922,10 @@ def sim11_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SIM12_BANDS, _SIM12_ROWS = 8, 8
 
 
-def _sim12_planes():
-    from ..operators.dedup import sign_hyperplanes
-
-    return sign_hyperplanes(64, _SIM12_BANDS * _SIM12_ROWS)
-
-
-_SIM12_PLANES = _sim12_planes()
-
-
-def _sim12_plane_sql(p: int) -> str:
-    return (
-        "[" + ", ".join("1.0" if x > 0 else "-1.0" for x in _SIM12_PLANES[p]) + "]"
-    )
-
-
-def _sim12_sig_sql(b: int) -> str:
-    return " || ".join(
-        f"(CASE WHEN list_inner_product(v, {_sim12_plane_sql(b * _SIM12_ROWS + r)}) > 0"
-        " THEN '1' ELSE '0' END)"
-        for r in range(_SIM12_ROWS)
-    )
-
-
 SIM12_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 coded AS (
-    {" UNION ALL ".join(f"SELECT vec_id, {b} AS band, {_sim12_sig_sql(b)} AS sig FROM e" for b in range(_SIM12_BANDS))}
+    {sign_lsh_coded_sql("vec_id", "e", 64, _SIM12_BANDS, _SIM12_ROWS)}
 ),
 cand AS (
     SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
@@ -1005,9 +968,9 @@ def sim12_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The pair frame feeds BOTH branches of the symmetric union below;
     # without materialization each branch re-runs the candidate join AND
-    # the exact-cosine verify (round-14 profile: 8 parquet scans, zero
-    # ReusedExchange, ~2x cold wall).  Checkpoint once — proven
-    # bit-identical at all 3 SFs (md5 snapshots in the commit message).
+    # the exact-cosine verify (profiled: 8 parquet scans, zero
+    # ReusedExchange, ~2x cold wall).  Checkpoint once — bit-identical
+    # at all 3 SFs.
     pairs = embedding_lsh_pairs(
         e, dim=64, bands=_SIM12_BANDS, rows_per_band=_SIM12_ROWS, threshold=-1.0
     ).localCheckpoint()

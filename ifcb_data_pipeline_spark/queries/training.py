@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..operators.text import STOPWORDS
 from . import register
-from ._util import HASH32_SQL, dround, hash32, tables
+from ._util import HASH32_SQL, dround, hash32, sign_lsh_coded_sql, tables
 from .dedup import variant_offset
 
 _STOP_LIST = ", ".join(f"'{w}'" for w in STOPWORDS)
@@ -162,13 +162,6 @@ def tp1_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # signatures that are map-side computed (stage 2 candidates), one
 # anti-join on the deduped ids, and a shuffle-free gate+split pass.
 # Nothing fact-sized is ever broadcast or all-paired.
-from .dedup import _sig_sql as _dd5_sig_sql  # noqa: E402  (same plane set both engines)
-
-_TP2_CODED = " UNION ALL ".join(
-    f"SELECT doc, {b} AS band, {_dd5_sig_sql(b)} AS sig FROM corpus"
-    for b in range(4)
-)
-
 TP2_SQL = f"""
 WITH m AS (SELECT greatest(10000, max(doc_id) + 1) AS m FROM documents),
 base AS (
@@ -183,7 +176,7 @@ corpus AS (
     FROM base, m WHERE doc % 10 = 0
 ),
 coded AS (
-    {_TP2_CODED}
+    {sign_lsh_coded_sql("doc", "corpus", 64, 4, 4)}
 ),
 cand AS (
     SELECT DISTINCT a.doc AS da, b.doc AS db

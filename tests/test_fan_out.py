@@ -22,7 +22,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from ifcb_data_pipeline_spark.operators.dedup import embedding_lsh_pairs
+from ifcb_data_pipeline_spark.operators.dedup import ROUND_DIGITS, embedding_lsh_pairs
 from ifcb_data_pipeline_spark.operators.skew import fan_out
 from ifcb_data_pipeline_spark.operators.similarity import dot
 
@@ -146,20 +146,15 @@ def test_lsh_norm_precompute_is_float_identical(spark):
     ea = vecs.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
     eb = vecs.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
     # Shared rounding helper (not an inline floor-form re-derivation):
-    # if dround or embedding_lsh_pairs' round_digits default ever
-    # changes, this reference path follows instead of silently
-    # diverging from production rounding.
-    import inspect
-
+    # if dround or embedding_lsh_pairs' ROUND_DIGITS ever changes, this
+    # reference path follows instead of silently diverging from
+    # production rounding.
     from ifcb_data_pipeline_spark.queries._util import dround
 
-    round_digits = inspect.signature(embedding_lsh_pairs).parameters[
-        "round_digits"
-    ].default
     inline = dround(
         dot(F.col("va"), F.col("vb"))
         / F.sqrt(dot(F.col("va"), F.col("va")) * dot(F.col("vb"), F.col("vb"))),
-        round_digits,
+        ROUND_DIGITS,
     )
     want = {
         (r["vec_a"], r["vec_b"]): r["cos_ref"]

@@ -596,3 +596,29 @@ def test_session_conf_writes_are_pinned():
         ("queries/_util.py", "streams"): 1,
         ("queries/multimodal.py", "_drain_to_memory"): 2,
     }, "a new session conf.set: leave partitioning to the session and AQE"
+
+
+# --- lint 9: no private cross-module imports ----------------------------------
+# A `_`-prefixed name is its module's own business.  Importing one from
+# another package module is how a second caller grows on a helper that
+# was never meant to be shared (an oracle fragment, a memoized Column),
+# so shared code gets a public name in the module that owns it.  The
+# two imports still on the list are pinned until their owners publish
+# them.
+def test_no_private_cross_module_imports():
+    got = set()
+    for p in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            if node.level == 0 and not (node.module or "").startswith(PKG.name):
+                continue
+            got |= {
+                (str(p.relative_to(PKG)), a.name)
+                for a in node.names
+                if a.name.startswith("_")
+            }
+    assert got == {
+        ("queries/pipelines.py", "_clean_cascade_sql"),
+        ("queries/scalars.py", "_CLEAN_STEPS"),
+    }, "import a public name (publish the helper in the module that owns it)"
