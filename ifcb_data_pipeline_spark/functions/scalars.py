@@ -20,13 +20,26 @@ def f1_score(precision: Column, recall: Column) -> Column:
     return F.when(denom == 0, F.lit(None).cast("double")).otherwise(f1)
 
 
+def dround(col: Column, d: int) -> Column:
+    """Deterministic cross-engine rounding: ``floor(x·10^d + 0.5)/10^d`` as
+    pure IEEE-double arithmetic.  Native ``round`` differs between engines
+    (Spark rounds the exact binary expansion via BigDecimal HALF_UP; DuckDB
+    rounds the shortest decimal representation), so values like 15139.495
+    round differently.  This formula is bit-identical in both engines given
+    identical inputs; pick ``d`` coarse enough that summation-order noise
+    (~1e-12 relative) cannot straddle a boundary.  The DuckDB twin is
+    ``queries._util.dround_sql``."""
+    f = float(10.0**d)
+    return F.floor(col * f + F.lit(0.5)) / F.lit(f)
+
+
 def signif(x: Column, digits: int = 6) -> Column:
     """R's ``signif(x, digits)`` — round to significant digits, with 0
     passed through (reference uses signif(·, 6) for BIOVOL/C_CONC at
     ``ifcb-data-pipeline.Rmd:1398-1414``).
 
     Uses the repo-wide floor-form rounding
-    ``floor(x·10^d + 0.5)/10^d`` (see ``queries._util.dround``) rather
+    ``floor(x·10^d + 0.5)/10^d`` (see :func:`dround`) rather
     than ``F.round`` — Spark's BigDecimal HALF_UP on the shortest decimal
     repr diverges from the DuckDB oracle on boundary values like 1005.0,
     while the floor form is bit-identical IEEE arithmetic in both engines.

@@ -30,6 +30,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import dround
+
 
 def hash32(col: Column) -> Column:
     """Deterministic 32-bit integer hash shared with the oracles: the
@@ -84,7 +86,7 @@ def sign_lsh_bands(vec_col: str, dim: int, bands: int, rows_per_band: int) -> Co
 
 
 # Cross-engine floor-form rounding of the verified cosine (the oracles'
-# ``floor(x * 1e6 + 0.5) / 1e6``; see queries._util.dround).
+# ``floor(x * 1e6 + 0.5) / 1e6``; see functions.scalars.dround).
 ROUND_DIGITS = 6
 
 
@@ -108,11 +110,6 @@ def embedding_lsh_pairs(
     ``(1 - (1 - θ/π)^r)^b`` — the standard, documented ANN trade-off.
     """
     from .similarity import dot
-
-    rf = float(10.0**ROUND_DIGITS)
-
-    def dround(col: Column, _f: float = rf) -> Column:
-        return F.floor(col * _f + F.lit(0.5)) / F.lit(_f)
 
     coded = vectors.select(
         F.col(id_col).alias("id"),
@@ -150,7 +147,8 @@ def embedding_lsh_pairs(
         dot(F.col(vec_col), F.col(vec_col)).alias("nb"),
     )
     cos = dround(
-        dot(F.col("va"), F.col("vb")) / F.sqrt(F.col("na") * F.col("nb"))
+        dot(F.col("va"), F.col("vb")) / F.sqrt(F.col("na") * F.col("nb")),
+        ROUND_DIGITS,
     )
     return (
         cand.join(ea, "vec_a")

@@ -19,10 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalars import signif
+from ..functions.scalars import dround, signif
 from ..functions.taxa import clean_taxa_name
 from ..operators.windows import stitched_adjacency_flag
-from ..queries._util import dround, taxa_label_expr
+from ..queries._util import taxa_label_expr
 
 
 def shark_export(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.scalars import dround  # noqa: F401 (the queries' one-stop import)
 from ..sources.tables import load_table, stream_table
 
 
@@ -58,20 +59,8 @@ LAT_SQL = "(54.0 + ({k} % 600) / 100.0)"
 LON_SQL = "(10.0 + ({k} % 1200) / 100.0)"
 
 
-def dround(col: Column, d: int) -> Column:
-    """Deterministic cross-engine rounding: ``floor(x·10^d + 0.5)/10^d`` as
-    pure IEEE-double arithmetic.  Native ``round`` differs between engines
-    (Spark rounds the exact binary expansion via BigDecimal HALF_UP; DuckDB
-    rounds the shortest decimal representation), so values like 15139.495
-    round differently.  This formula is bit-identical in both engines given
-    identical inputs; pick ``d`` coarse enough that summation-order noise
-    (~1e-12 relative) cannot straddle a boundary."""
-    f = float(10.0**d)
-    return F.floor(col * f + F.lit(0.5)) / F.lit(f)
-
-
 def dround_sql(expr: str, d: int) -> str:
-    """DuckDB twin of :func:`dround`."""
+    """DuckDB twin of ``functions.scalars.dround``."""
     f = float(10.0**d)
     return f"(floor(({expr}) * {f!r} + 0.5) / {f!r})"
 

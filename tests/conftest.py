@@ -13,10 +13,13 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    from ifcb_data_pipeline_spark.session import get_spark
+    """One session for the run; teardown waits for the driver JVM to exit
+    (including a first run's class-archive dump), so none outlives it."""
+    from ifcb_data_pipeline_spark.session import get_spark, stop_spark
 
     spark = get_spark("ifcb-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield spark
+    stop_spark(spark)
 
 
 @pytest.fixture(scope="session")

@@ -149,7 +149,7 @@ def test_lsh_norm_precompute_is_float_identical(spark):
     # if dround or embedding_lsh_pairs' ROUND_DIGITS ever changes, this
     # reference path follows instead of silently diverging from
     # production rounding.
-    from ifcb_data_pipeline_spark.queries._util import dround
+    from ifcb_data_pipeline_spark.functions.scalars import dround
 
     inline = dround(
         dot(F.col("va"), F.col("vb"))

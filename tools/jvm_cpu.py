@@ -1,0 +1,166 @@
+"""CPU of set-up and of one cold headline pass, split by thread class.
+
+    python tools/jvm_cpu.py [--data DIR] [--cores N] [--json]
+
+Set-up is ``get_spark`` + ``load_all``, as perfbench's ``setup_s`` counts
+it; the pass runs ``bench.HEADLINE`` once in its fixed order, each query
+through ``fn(spark, data)`` and ``toArrow``, as perfbench's cold pass
+does.  Around each phase the tool reads ``/proc/<jvm>/task/*/stat``
+(user + system ticks per thread, named by its comm) and the processes
+around the JVM, and prints the CPU seconds of each class:
+
+    jit         C1/C2 CompilerThread
+    py4j        ``main`` and ``Thread-N``: the py4j gateway serving the
+                Python driver's calls
+    tasks       executor task launch workers
+    gc          GC and G1 threads
+    jvm_other   every other live JVM thread
+    exited      JVM threads that exited during the phase (compiler
+                threads come and go): the process total minus the sum
+                over the threads still alive
+    reaped      processes the JVM reaped: at set-up the ``spark-submit``
+                launcher JVM, later exited Python workers
+    py_workers  live processes under the JVM (Spark's Python daemon and
+                workers)
+    py_driver   this process
+
+The classes sum to the phase's total.  The last line says whether the
+JVM mapped the class archive, is dumping one, had one rejected or started
+without one.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import re
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+CLASSES = ("jit", "py4j", "tasks", "gc", "jvm_other", "exited", "reaped",
+           "py_workers", "py_driver")
+TICK = os.sysconf("SC_CLK_TCK")
+
+
+def thread_class(comm: str) -> str:
+    if re.match(r"C[12] CompilerThre", comm):
+        return "jit"
+    if comm == "main" or re.fullmatch(r"Thread-\d+", comm):
+        return "py4j"
+    if comm.startswith("Executor task"):
+        return "tasks"
+    if comm.startswith(("GC Thread", "G1 ")):
+        return "gc"
+    return "jvm_other"
+
+
+def read_stat(path: str) -> tuple[str, list[str]] | None:
+    """(comm, fields after the comm) of one ``stat`` file."""
+    try:
+        with open(path) as f:
+            data = f.read()
+    except OSError:
+        return None  # exited while we scanned
+    head, tail = data.rsplit(")", 1)
+    return head.split("(", 1)[1], tail.split()
+
+
+def ticks(fields: list[str], first: int, last: int) -> int:
+    return sum(int(x) for x in fields[first:last])
+
+
+def snapshot(jvm: int | None) -> dict:
+    """Per-thread ticks of the JVM, its process and reaped totals, the
+    ticks of every live process under it, and this process's own."""
+    snap = {"threads": {}, "process": 0, "reaped": 0, "py_workers": 0,
+            "py_driver": ticks(read_stat("/proc/self/stat")[1], 11, 13)}
+    if jvm is None:
+        return snap
+    for tid in os.listdir(f"/proc/{jvm}/task"):
+        st = read_stat(f"/proc/{jvm}/task/{tid}/stat")
+        if st:
+            snap["threads"][int(tid)] = (st[0], ticks(st[1], 11, 13))
+    fields = read_stat(f"/proc/{jvm}/stat")[1]
+    snap["process"], snap["reaped"] = ticks(fields, 11, 13), ticks(fields, 13, 15)
+    parent, total = {}, {}
+    for entry in os.listdir("/proc"):
+        if entry.isdigit() and (st := read_stat(f"/proc/{entry}/stat")):
+            parent[int(entry)], total[int(entry)] = int(st[1][1]), ticks(st[1], 11, 15)
+    todo = [c for c, p in parent.items() if p == jvm]
+    while todo:
+        pid = todo.pop()
+        snap["py_workers"] += total.get(pid, 0)
+        todo += [c for c, p in parent.items() if p == pid]
+    return snap
+
+
+def split(before: dict, after: dict) -> dict:
+    """CPU seconds per class between two snapshots of the same JVM."""
+    out = dict.fromkeys(CLASSES, 0.0)
+    live = 0
+    for tid, (comm, t) in after["threads"].items():
+        was = before["threads"].get(tid)
+        delta = t - (was[1] if was and was[0] == comm else 0)
+        out[thread_class(comm)] += delta
+        live += delta
+    out["exited"] = (after["process"] - before["process"]) - live
+    for key in ("reaped", "py_workers", "py_driver"):
+        out[key] = after[key] - before[key]
+    out = {k: v / TICK for k, v in out.items()}
+    out["total"] = sum(out.values())
+    return out
+
+
+def archive_state(jvm: int) -> str:
+    """How the JVM started: from a mapped class archive, dumping one, with
+    one HotSpot rejected, or without one."""
+    with open(f"/proc/{jvm}/cmdline") as f:
+        argv = f.read().split("\0")
+    for arg in argv:
+        if arg.startswith("-XX:SharedArchiveFile="):
+            with open(f"/proc/{jvm}/maps") as f:
+                return "mapped" if arg.split("=", 1)[1] in f.read() else "rejected"
+        if arg.startswith("-XX:ArchiveClassesAtExit="):
+            return "dumping"
+    return "none"
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n", 1)[0])
+    ap.add_argument("--data", default=os.path.join(ROOT, "perfbench", "data", "sf0.001"))
+    ap.add_argument("--cores", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4)
+    ap.add_argument("--json", action="store_true", help="print one JSON line instead of a table")
+    args = ap.parse_args(argv)
+
+    from bench import HEADLINE
+    from ifcb_data_pipeline_spark.queries import load_all
+    from ifcb_data_pipeline_spark.session import get_spark, stop_spark
+
+    start = snapshot(None)
+    spark = get_spark("jvm-cpu", cpus=args.cores)
+    registry = load_all()
+    jvm = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
+    set_up = snapshot(jvm)
+    for name in HEADLINE:
+        registry[name].fn(spark, args.data).toArrow()
+    cold = snapshot(jvm)
+    result = {"setup": split(start, set_up), "cold_pass": split(set_up, cold),
+              "archive": archive_state(jvm)}
+    stop_spark(spark)
+
+    if args.json:
+        print(json.dumps(result))
+        return 0
+    print(f"{'class':<12}{'setup s':>10}{'cold pass s':>13}")
+    for key in (*CLASSES, "total"):
+        print(f"{key:<12}{result['setup'][key]:>10.2f}{result['cold_pass'][key]:>13.2f}")
+    print(f"archive: {result['archive']}")
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
