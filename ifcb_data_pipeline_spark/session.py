@@ -11,7 +11,10 @@ Python keeps ``__pycache__``.  The first start with no archive passes
 ``-XX:ArchiveClassesAtExit`` and the JVM writes the archive when it exits;
 every later start maps it with ``-XX:SharedArchiveFile``, so Spark's
 classes arrive already parsed and verified (SCALE.md, "Driver JVM class
-archive").  Deleting the directory is always safe.
+archive").  Deleting the directory is always safe.  Every driver JVM the
+package launches gets one C1 and one C2 compiler thread, because in
+``local[N]`` the task threads run in that same JVM (SCALE.md, "Driver JVM
+JIT threads").
 """
 
 from __future__ import annotations
@@ -37,11 +40,20 @@ _DYNAMIC_ARCHIVE_MAGIC = struct.pack("=I", 0xF00BABA8)
 # class a dump skips as a ``cds`` warning.  The first two go to stderr.
 _CDS_LOG = "-Xlog:cds*=off -Xlog:cds*=error,cds+dynamic=warning:stderr"
 
+# HotSpot's tiered minimum: one C1 and one C2 compiler thread.  It sizes
+# the JIT for idle cores, but a ``local[N]`` driver runs the N task threads
+# too; with one C2 thread the tiered policy raises its C2 thresholds as the
+# queue grows, so lukewarm methods stay in C1 code and hot ones still reach
+# C2.
+_JIT_THREADS = "-XX:CICompilerCount=2"
+
 
 def _archive_key(java_home: str, spark_home: str) -> str:
-    """Digest of the JDK and of Spark's jars: a new JDK or new jars get an
-    archive of their own instead of one HotSpot rejects at every start."""
-    h = hashlib.sha256()
+    """Digest of the JDK, of Spark's jars and of the cache directory: a new
+    JDK, new jars or a moved checkout (the archive records the path of the
+    empty conf directory) get an archive of their own instead of one
+    HotSpot rejects at every start."""
+    h = hashlib.sha256(f"{JVM_CACHE}\0".encode())
     for path in [os.path.join(java_home, "lib", "modules"),
                  *sorted(glob.glob(os.path.join(spark_home, "jars", "*")))]:
         st = os.stat(path)
@@ -49,38 +61,49 @@ def _archive_key(java_home: str, spark_home: str) -> str:
     return h.hexdigest()[:16]
 
 
-def _archive_launch() -> tuple[str, str] | None:
-    """The driver java options and ``SPARK_CONF_DIR`` of a launch from the
-    class archive, or None when this session launches no JVM or launches
-    it as Spark does by default.
-
-    The launcher puts the conf directory first on the class path, and
-    HotSpot neither dumps nor maps an archive with a non-empty directory
-    on it.  Spark reads nothing from ``*.template`` files, so a conf
-    directory holding only those is swapped for an empty one the package
-    owns; any real configuration file keeps the default launch, as do
-    Hadoop/YARN conf directories, which the launcher also puts on the
-    class path."""
+def _driver_launch() -> tuple[str, str] | None:
+    """The driver java options and ``SPARK_CONF_DIR`` of the gateway
+    launch, or None when this session launches no JVM or the conf
+    directory holds a real configuration file, whose own settings the
+    options must not override."""
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return None
     spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
     conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
-    java_home = os.environ.get("JAVA_HOME")
-    if not java_home and (java := shutil.which("java")):
-        java_home = os.path.dirname(os.path.dirname(os.path.realpath(java)))
-    if not java_home or os.environ.get("HADOOP_CONF_DIR") or os.environ.get("YARN_CONF_DIR"):
-        return None
-    empty = os.path.join(JVM_CACHE, "conf")
     try:
         if os.path.isdir(conf_dir) and any(
             not name.endswith(".template") for name in os.listdir(conf_dir)
         ):
             return None
-        os.makedirs(empty, exist_ok=True)
-        options = _archive_options(_archive_key(java_home, spark_home))
     except OSError:
         return None
-    return (f"{options} {_CDS_LOG}", empty) if options else None
+    archive = _archive_launch(spark_home)
+    if archive is None:
+        return _JIT_THREADS, conf_dir
+    return f"{_JIT_THREADS} {archive} {_CDS_LOG}", os.path.join(JVM_CACHE, "conf")
+
+
+def _archive_launch(spark_home: str) -> str | None:
+    """The archive option of a launch from the class archive, or None when
+    the JVM starts without one.
+
+    The launcher puts the conf directory first on the class path, and
+    HotSpot neither dumps nor maps an archive with a non-empty directory
+    on it.  Spark reads nothing from ``*.template`` files, so a conf
+    directory holding only those is swapped for an empty one the package
+    owns, ``__jvmcache__/conf``.  Hadoop/YARN conf directories, which the
+    launcher also puts on the class path, and a cache directory that
+    cannot be written start without an archive."""
+    java_home = os.environ.get("JAVA_HOME")
+    if not java_home and (java := shutil.which("java")):
+        java_home = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    if not java_home or os.environ.get("HADOOP_CONF_DIR") or os.environ.get("YARN_CONF_DIR"):
+        return None
+    try:
+        os.makedirs(os.path.join(JVM_CACHE, "conf"), exist_ok=True)
+        return _archive_options(_archive_key(java_home, spark_home))
+    except OSError:
+        return None
 
 
 def _archive_options(key: str) -> str | None:
@@ -90,7 +113,9 @@ def _archive_options(key: str) -> str | None:
     HotSpot mmaps the archive and crashes on a file cut short (SIGBUS), so
     a finished dump is published under a name that carries its byte size,
     and a published file of any other size is deleted.  A dump that
-    finished while an older archive was in use replaces it."""
+    finished while an older archive was in use replaces it, as well as
+    the archives of every other key: a cache serves the one JDK, jar set
+    and path that it is keyed by now."""
     dump = os.path.join(JVM_CACHE, f"spark-{key}.dump")
     published = glob.glob(os.path.join(JVM_CACHE, f"spark-{key}-*.jsa"))
     try:
@@ -99,7 +124,7 @@ def _archive_options(key: str) -> str | None:
     except FileNotFoundError:
         finished = False
     if finished:
-        for path in published:
+        for path in glob.glob(os.path.join(JVM_CACHE, "spark-*.jsa")):
             os.remove(path)
         published = [os.path.join(JVM_CACHE, f"spark-{key}-{os.path.getsize(dump)}.jsa")]
         os.replace(dump, published[0])
@@ -148,7 +173,7 @@ def get_spark(app_name: str = "ifcb_data_pipeline_spark", cpus: int | None = Non
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    launch = _archive_launch()
+    launch = _driver_launch()
     if launch is None:
         spark = builder.getOrCreate()
     else:

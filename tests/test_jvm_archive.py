@@ -35,10 +35,16 @@ with open(f"/proc/{pid}/cmdline") as f:
 with open(f"/proc/{pid}/maps") as f:
     mapped = sorted({ln.split()[-1] for ln in f if ln.rstrip().endswith(".jsa")})
 rows = spark.range(5).count()
+defaults = spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions")
 session.stop_spark(spark)
 print(json.dumps({"before": before, "after": after, "rows": rows, "mapped": mapped,
-                  "archive_args": [a for a in argv if a.startswith("-XX:") and "Archive" in a]}))
+                  "archive_args": [a for a in argv if a.startswith("-XX:") and "Archive" in a],
+                  "jit_args": [a for a in argv if a.startswith("-XX:CICompilerCount")],
+                  "test_args": [a for a in argv if a.startswith("-Dtest.")],
+                  "defaults": defaults}))
 """
+
+JIT_THREADS = ["-XX:CICompilerCount=2"]
 
 
 def start(cache, conf_dir=None, submit_args=None) -> tuple[dict, str, str]:
@@ -79,6 +85,7 @@ def test_first_start_dumps_the_archive(starts):
     cache, _, (report, stdout, _), _ = starts
     [arg] = report["archive_args"]
     assert arg.startswith(f"-XX:ArchiveClassesAtExit={cache}/spark-") and arg.endswith(".dump")
+    assert report["jit_args"] == JIT_THREADS
     assert not [m for m in report["mapped"] if m.startswith(str(cache))]
     assert report["before"] is None and report["after"] is None
     assert "[cds" not in stdout
@@ -91,21 +98,9 @@ def test_second_start_maps_the_archive(starts):
     [archive] = archives(cache)
     assert archive.endswith(f"-{os.path.getsize(archive)}.jsa")
     assert report["archive_args"] == [f"-XX:SharedArchiveFile={archive}"]
+    assert report["jit_args"] == JIT_THREADS
     assert archive in report["mapped"]
     assert report["before"] == report["after"] == str(templates)
-    assert "[cds" not in stdout
-
-
-def test_truncated_archive_is_replaced_not_mapped(starts, tmp_path):
-    cache = tmp_path / "cache"
-    shutil.copytree(starts[0], cache)
-    [archive] = archives(cache)
-    os.chmod(archive, 0o644)
-    os.truncate(archive, os.path.getsize(archive) // 3)
-    report, stdout, _ = start(cache)
-    assert not [m for m in report["mapped"] if m.startswith(str(cache))]
-    assert "ArchiveClassesAtExit" in report["archive_args"][0]
-    assert archive not in archives(cache)
     assert "[cds" not in stdout
 
 
@@ -118,6 +113,7 @@ def test_archive_files_are_published_by_size(tmp_path, monkeypatch):
     dump.write_bytes(b"\0" * 64)  # header not written yet: dump again
     assert session._archive_options("k") == f'"-XX:ArchiveClassesAtExit={dump}"'
     (tmp_path / "spark-k-10.jsa").write_bytes(b"\0" * 10)  # an older archive
+    (tmp_path / "spark-j-10.jsa").write_bytes(b"\0" * 10)  # another key's
     dump.write_bytes(struct.pack("=I", 0xF00BABA8) + b"\0" * 60)  # finished
     newer = tmp_path / "spark-k-64.jsa"
     assert session._archive_options("k") == f'"-XX:SharedArchiveFile={newer}"'
@@ -127,13 +123,68 @@ def test_archive_files_are_published_by_size(tmp_path, monkeypatch):
     assert not list(tmp_path.iterdir())
 
 
+@pytest.fixture(scope="module")
+def moved(starts, tmp_path_factory):
+    """The published cache copied to another path, then two sessions over
+    the copy: the archive records the cache's own conf directory, so the
+    copy has a key of its own and its first start dumps; the second
+    publishes and maps that dump."""
+    cache = tmp_path_factory.mktemp("moved") / "jvmcache"
+    shutil.copytree(starts[0], cache)
+    copied = archives(cache)
+    first = start(cache)
+    second = start(cache)
+    return cache, copied, first, second, archives(cache)
+
+
+def test_moved_cache_dumps_its_own_archive(moved):
+    cache, [copied], (first, _, stderr), (second, stdout, _), [archive] = moved
+    [arg] = first["archive_args"]
+    assert arg.startswith(f"-XX:ArchiveClassesAtExit={cache}/spark-")
+    assert not [m for m in first["mapped"] if m.startswith(str(cache))]
+    assert "Unable to use shared archive" not in stderr
+    assert archive != copied
+    assert second["archive_args"] == [f"-XX:SharedArchiveFile={archive}"]
+    assert archive in second["mapped"]
+    assert "[cds" not in stdout
+
+
+def test_truncated_archive_is_replaced_not_mapped(moved):
+    # The fixture has taken its reports: cutting its archive short changes
+    # none of them.
+    cache, *_, [archive] = moved
+    os.chmod(archive, 0o644)
+    os.truncate(archive, os.path.getsize(archive) // 3)
+    report, stdout, _ = start(cache)
+    assert not [m for m in report["mapped"] if m.startswith(str(cache))]
+    assert "ArchiveClassesAtExit" in report["archive_args"][0]
+    assert archive not in archives(cache)
+    assert "[cds" not in stdout
+
+
+def test_unwritable_cache_launches_without_archive(tmp_path):
+    # A regular file where the cache directory should be: no permission
+    # bits make a directory unwritable to root.
+    cache = tmp_path / "cache"
+    cache.write_text("")
+    report, stdout, _ = start(cache)
+    assert report["archive_args"] == []
+    assert report["jit_args"] == JIT_THREADS
+    assert report["before"] is None and report["after"] is None
+    assert "[cds" not in stdout
+
+
 def test_real_conf_dir_launches_without_archive(starts, tmp_path):
     dumped = starts[0]
     conf = tmp_path / "conf"
     conf.mkdir()
-    (conf / "spark-defaults.conf").write_text("spark.ui.showConsoleProgress false\n")
+    (conf / "spark-defaults.conf").write_text(
+        "spark.ui.showConsoleProgress false\n"
+        "spark.driver.defaultJavaOptions -Dtest.conf=user\n")
     report, stdout, _ = start(dumped, conf_dir=conf)
-    assert report["archive_args"] == []
+    assert report["archive_args"] == report["jit_args"] == []
+    assert report["defaults"] == "-Dtest.conf=user"
+    assert report["test_args"] == ["-Dtest.conf=user"]
     assert not [m for m in report["mapped"] if m.startswith(str(dumped))]
     assert report["before"] == report["after"] == str(conf)
     assert "[cds" not in stdout

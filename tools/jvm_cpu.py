@@ -1,23 +1,31 @@
-"""CPU of set-up and of one cold headline pass, split by thread class.
+"""CPU of set-up and of one cold pass, split by thread class.
 
-    python tools/jvm_cpu.py [--data DIR] [--cores N] [--json]
+    python tools/jvm_cpu.py [--ingest] [--data DIR] [--cores N] [--json]
 
 Set-up is ``get_spark`` + ``load_all``, as perfbench's ``setup_s`` counts
-it; the pass runs ``bench.HEADLINE`` once in its fixed order, each query
-through ``fn(spark, data)`` and ``toArrow``, as perfbench's cold pass
-does.  Around each phase the tool reads ``/proc/<jvm>/task/*/stat``
+it.  The pass is perfbench's cold pass of one of its two workloads: by
+default ``bench.HEADLINE`` once in its fixed order, each query through
+``fn(spark, data)`` and ``toArrow``; with ``--ingest``, the
+``ingest_delivery`` pass shape through ``ingest_tick`` (three seeded
+170-ROI deliveries, then one re-delivery of all of them) into a temporary
+directory.  Around each phase the tool reads ``/proc/<jvm>/task/*/stat``
 (user + system ticks per thread, named by its comm) and the processes
 around the JVM, and prints the CPU seconds of each class:
 
-    jit         C1/C2 CompilerThread
+    c1          C1 CompilerThread
+    c2          C2 CompilerThread
     py4j        ``main`` and ``Thread-N``: the py4j gateway serving the
                 Python driver's calls
     tasks       executor task launch workers
     gc          GC and G1 threads
     jvm_other   every other live JVM thread
-    exited      JVM threads that exited during the phase (compiler
-                threads come and go): the process total minus the sum
-                over the threads still alive
+    exited      JVM threads that exited during the phase: the process
+                total minus the sum over the threads still alive.  With
+                HotSpot's default compiler count most of it was C2
+                compiler threads started under load and retired when
+                idle; the one C1 and one C2 thread ``get_spark`` asks for
+                are never retired, which leaves Spark's short-lived
+                threads here
     reaped      processes the JVM reaped: at set-up the ``spark-submit``
                 launcher JVM, later exited Python workers
     py_workers  live processes under the JVM (Spark's Python daemon and
@@ -34,20 +42,23 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import random
 import re
 import sys
+import tempfile
+from types import SimpleNamespace
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-CLASSES = ("jit", "py4j", "tasks", "gc", "jvm_other", "exited", "reaped",
+CLASSES = ("c1", "c2", "py4j", "tasks", "gc", "jvm_other", "exited", "reaped",
            "py_workers", "py_driver")
 TICK = os.sysconf("SC_CLK_TCK")
 
 
 def thread_class(comm: str) -> str:
     if re.match(r"C[12] CompilerThre", comm):
-        return "jit"
+        return comm[:2].lower()
     if comm == "main" or re.fullmatch(r"Thread-\d+", comm):
         return "py4j"
     if comm.startswith("Executor task"):
@@ -128,8 +139,26 @@ def archive_state(jvm: int) -> str:
     return "none"
 
 
+def ingest_pass(spark) -> None:
+    """perfbench's ingest pass, its deliveries drawn by its own generator
+    from seed 1."""
+    sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+    from run import INGEST, Run
+
+    from ifcb_data_pipeline_spark.plans.ingest_qc import ingest_tick
+
+    stream = Run.deliveries(SimpleNamespace(shape=INGEST, rng=random.Random(1)))
+    fresh = [next(stream) for _ in range(INGEST["fresh"])]
+    with tempfile.TemporaryDirectory() as work:
+        for rows in [*fresh, [r for rows in fresh for r in rows]]:
+            bins = spark.createDataFrame(rows, "sample string, n_rois int")
+            ingest_tick(spark, bins, os.path.join(work, "ckpt"), os.path.join(work, "out"))
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n", 1)[0])
+    ap.add_argument("--ingest", action="store_true",
+                    help="run the ingest_delivery pass instead of the headline queries")
     ap.add_argument("--data", default=os.path.join(ROOT, "perfbench", "data", "sf0.001"))
     ap.add_argument("--cores", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4)
@@ -145,8 +174,11 @@ def main(argv=None) -> int:
     registry = load_all()
     jvm = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
     set_up = snapshot(jvm)
-    for name in HEADLINE:
-        registry[name].fn(spark, args.data).toArrow()
+    if args.ingest:
+        ingest_pass(spark)
+    else:
+        for name in HEADLINE:
+            registry[name].fn(spark, args.data).toArrow()
     cold = snapshot(jvm)
     result = {"setup": split(start, set_up), "cold_pass": split(set_up, cold),
               "archive": archive_state(jvm)}
