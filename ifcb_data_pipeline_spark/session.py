@@ -14,7 +14,10 @@ classes arrive already parsed and verified (SCALE.md, "Driver JVM class
 archive").  Deleting the directory is always safe.  Every driver JVM the
 package launches gets one C1 and one C2 compiler thread, because in
 ``local[N]`` the task threads run in that same JVM (SCALE.md, "Driver JVM
-JIT threads").
+JIT threads").  The session turns off PySpark's per-call capture of the
+Python call site, which costs py4j round-trips and driver memory on every
+Column call and only adds a file:line to error messages (SCALE.md, "Driver
+call-site capture").
 """
 
 from __future__ import annotations
@@ -148,29 +151,24 @@ def get_spark(app_name: str = "ifcb_data_pipeline_spark", cpus: int | None = Non
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Allow shuffled-hash join where the planner's per-partition size
-        # conditions hold (guide §3.1/§9 baseline).  r18 interleaved A/B
-        # over the 8 join-heavy headline queries (configs alternated
-        # every pass, probes matched): SHJ-allowed wins 7/8 queries,
-        # sum-of-medians 11.85 → 11.03 s, sum-of-mins 10.41 → 9.40 s.
-        # Results are join-semantics-identical (216/216 driver-sim after
-        # the flip); the build side stays bounded by the planner's own
-        # size conditions + AQE skew split, and sort-merge remains the
-        # fallback whenever those don't hold.
-        # FAILURE MODE AT SCALE (ADVICE r18, on record): SHJ's build-side
-        # hash map does not spill, and canBuildLocalHashMap gates on
-        # LOGICAL size estimates that can be badly wrong downstream of
-        # filters/joins — a mis-estimate at 100 TB surfaces as an
-        # executor OOM instead of a slower SMJ.  Deployments at real
-        # scale should either verify estimate quality on their plans
-        # (stats collected, post-filter sizes sane) or re-enable
-        # preferSortMergeJoin and opt into SHJ per-query with
-        # SHUFFLE_HASH hints on the joins A/B'd in OPTIMIZATION_r18.md.
-        # AQE skew-split further bounds per-partition build sizes here.
+        # conditions hold; sort-merge remains the fallback whenever they
+        # don't.  FAILURE MODE AT SCALE: SHJ's build-side hash map does not
+        # spill, and canBuildLocalHashMap gates on LOGICAL size estimates
+        # that can be badly wrong downstream of filters/joins, so a
+        # mis-estimate at 100 TB surfaces as an executor OOM instead of a
+        # slower SMJ.  Deployments at real scale should verify estimate
+        # quality on their plans or re-enable preferSortMergeJoin and opt
+        # into SHJ per join with SHUFFLE_HASH hints.  AQE's skew split
+        # further bounds per-partition build sizes.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark wraps every Column/functions call to record its Python
+        # call site for error messages: py4j round-trips, a stack walk and
+        # an IPython import per call (SCALE.md, "Driver call-site capture").
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     launch = _driver_launch()

@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
@@ -55,14 +54,15 @@ class CheckpointedJob:
         declared schema spares a schema-inference job per read.  Only a
         missing ledger reads as empty: an unreadable one raises, since
         treating it as empty would re-queue every key and append its
-        output twice."""
+        output twice.  Whether it is missing is asked of the Hadoop
+        file system that will read it, so any path Spark reads works; a
+        failed read would log a ``FileNotFoundException`` stack first."""
         schema = f"{self.key} string"
-        try:
-            return self.spark.read.schema(schema).parquet(self.ledger_path)
-        except AnalysisException as exc:
-            if exc.getCondition() != "PATH_NOT_FOUND":
-                raise
+        sc = self.spark.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(self.ledger_path)
+        if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
             return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(self.ledger_path)
 
     def pending(self, candidates: DataFrame) -> DataFrame:
         return new_work(candidates, self.ledger(), self.key)

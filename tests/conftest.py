@@ -1,11 +1,13 @@
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -32,3 +34,15 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def run_python(code: str, *args: str) -> subprocess.CompletedProcess:
+    """Run ``code`` in a child Python process with the checkout on its
+    path, for what only a fresh process shows: state PySpark caches per
+    process, or what the driver JVM writes to its own stderr."""
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in [ROOT, os.environ.get("PYTHONPATH")] if p))
+    p = subprocess.run([sys.executable, "-c", code, *args], env=env, cwd=ROOT,
+                       capture_output=True, text=True, timeout=600)
+    assert p.returncode == 0, p.stderr[-3000:]
+    return p

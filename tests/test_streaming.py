@@ -13,7 +13,7 @@ from ifcb_data_pipeline_spark.streaming.incremental import (
     CheckpointedJob,
     new_work,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, run_python
 
 
 def test_new_work_anti_join(spark):
@@ -49,6 +49,23 @@ def test_checkpointed_job_corrupt_ledger_raises(spark):
         cand = spark.createDataFrame([("x",)], ["key"])
         with pytest.raises(Exception, match="(?i)parquet"):
             job.pending(cand).count()
+
+
+def test_first_tick_logs_no_missing_ledger_trace(tmp_path):
+    """A fresh checkpoint has no ledger yet, and the first tick finds
+    that out without a failed read, whose ``FileNotFoundException`` stack
+    Spark logs to the driver JVM's stderr (hence a child process)."""
+    p = run_python("""
+import sys
+from ifcb_data_pipeline_spark.plans.ingest_qc import ingest_tick
+from ifcb_data_pipeline_spark.session import get_spark, stop_spark
+spark = get_spark("first-tick-test", cpus=1)
+bins = spark.createDataFrame([("D20240423T115846_IFCB127", 3)], "sample string, n_rois int")
+print(ingest_tick(spark, bins, sys.argv[1] + "/ckpt", sys.argv[1] + "/out")["bins"])
+stop_spark(spark)
+""", str(tmp_path))
+    assert p.stdout.splitlines()[-1] == "1"
+    assert "FileNotFoundException" not in p.stderr
 
 
 def test_checkpointed_job_ledger_read_runs_no_job(spark):

@@ -32,9 +32,16 @@ around the JVM, and prints the CPU seconds of each class:
                 workers)
     py_driver   this process
 
-The classes sum to the phase's total.  The last line says whether the
-JVM mapped the class archive, is dumping one, had one rejected or started
-without one.
+The classes sum to the phase's total.  Two more rows read construction
+as work rather than seconds:
+
+    py4j calls      Python-to-JVM method calls during the phase, counted by
+                    a wrapper on py4j's ``JavaMember.__call__``
+    driver peak MB  this process's peak RSS (``ru_maxrss``) at the end of
+                    the phase, as perfbench's ``driver_peak_rss_mb``
+
+The last line says whether the JVM mapped the class archive, is dumping
+one, had one rejected or started without one.
 """
 
 from __future__ import annotations
@@ -44,6 +51,7 @@ import json
 import os
 import random
 import re
+import resource
 import sys
 import tempfile
 from types import SimpleNamespace
@@ -125,6 +133,26 @@ def split(before: dict, after: dict) -> dict:
     return out
 
 
+def count_py4j_calls() -> list[int]:
+    """Count every py4j method call from now on; the count is the one
+    element of the returned list."""
+    from py4j.java_gateway import JavaMember
+
+    count = [0]
+    call = JavaMember.__call__
+
+    def counted(self, *args):
+        count[0] += 1
+        return call(self, *args)
+
+    JavaMember.__call__ = counted
+    return count
+
+
+def driver_peak_mb() -> float:
+    return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
+
+
 def archive_state(jvm: int) -> str:
     """How the JVM started: from a mapped class archive, dumping one, with
     one HotSpot rejected, or without one."""
@@ -169,11 +197,13 @@ def main(argv=None) -> int:
     from ifcb_data_pipeline_spark.queries import load_all
     from ifcb_data_pipeline_spark.session import get_spark, stop_spark
 
+    calls = count_py4j_calls()
     start = snapshot(None)
     spark = get_spark("jvm-cpu", cpus=args.cores)
     registry = load_all()
     jvm = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
     set_up = snapshot(jvm)
+    set_up_calls, set_up_mb = calls[0], driver_peak_mb()
     if args.ingest:
         ingest_pass(spark)
     else:
@@ -181,6 +211,8 @@ def main(argv=None) -> int:
             registry[name].fn(spark, args.data).toArrow()
     cold = snapshot(jvm)
     result = {"setup": split(start, set_up), "cold_pass": split(set_up, cold),
+              "py4j_calls": {"setup": set_up_calls, "cold_pass": calls[0] - set_up_calls},
+              "driver_peak_mb": {"setup": set_up_mb, "cold_pass": driver_peak_mb()},
               "archive": archive_state(jvm)}
     stop_spark(spark)
 
@@ -190,6 +222,10 @@ def main(argv=None) -> int:
     print(f"{'class':<12}{'setup s':>10}{'cold pass s':>13}")
     for key in (*CLASSES, "total"):
         print(f"{key:<12}{result['setup'][key]:>10.2f}{result['cold_pass'][key]:>13.2f}")
+    print(f"{'py4j calls':<16}{result['py4j_calls']['setup']:>6}"
+          f"{result['py4j_calls']['cold_pass']:>13}")
+    print(f"{'driver peak MB':<16}{result['driver_peak_mb']['setup']:>6.1f}"
+          f"{result['driver_peak_mb']['cold_pass']:>13.1f}")
     print(f"archive: {result['archive']}")
     return 0
 
